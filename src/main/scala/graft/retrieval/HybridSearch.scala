@@ -1,12 +1,16 @@
 package graft.retrieval
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 import graft.functions.{EmbedFunctions, Embedder, FeatureHashEmbedder, TextFunctions, VectorFunctions}
 import graft.model.{Filters, TenantContext}
 import graft.operators.{AnnKnn, BM25, DenseKnn, Fusion, Hnsw, HnswServing, PqKnn, Quantize}
+import graft.sources.SegmentedStore
 
 /** Hybrid retrieval façade (V5, reference
   * `src/retrieval/hybrid_search.py:219-430`): tenant scope → per-method
@@ -92,23 +96,30 @@ object HybridSearch {
       // dense index selection; non-exact stores must be built over the
       // SAME ids/embeddings as the chunk table being searched
       dense: DenseMode = DenseMode.Exact,
-      // J2 detail join (text + per-method score/rank). Callers that
-      // consume only (id, rrf_score) — the enhanced fallback loop, the
-      // merge-only gates — turn this off: Spark never eliminates an
-      // unused left join, so the detail broadcasts + the corpus-scan
-      // text lookup would execute anyway and dominate the fixed cost
-      // of every retry round-trip
+      // J2 detail (text + per-method score/rank). Off, a search yields
+      // (id, rrf_score) only: the lazy plan drops its detail joins
+      // (Spark does not eliminate an unused left join, so callers that
+      // project (id, rrf_score), like the merge-only gates, turn it
+      // off) and the request path skips its text read
       detail: Boolean = true)
 
-  /** Chunk-table hybrid search. `chunks` needs columns: id, text,
-    * organization_id (+ tenant columns), embedding. Returns the fused
-    * top-k with per-method detail (J2): (id, rrf_score, text,
-    * bm25_score, bm25_rank, dense_score, dense_rank). */
-  def search(chunks: DataFrame, query: String, ctx: TenantContext,
-             filters: Map[String, Filters.Pred] = Map.empty,
-             cfg: Config = Config(),
-             pages: Option[DataFrame] = None,
-             index: Option[BM25.Index] = None): DataFrame = {
+  /** One retrieval leg of a request: a method's top-`fetch` (id,
+    * score) frame over the request scope, ordered by score descending
+    * then id, and its RRF weight. */
+  private final case class Leg(name: String, weight: Double, topK: DataFrame)
+
+  /** A request's legs and the tenant/filter/level scope they read. */
+  private final case class Legs(scoped: DataFrame, methods: Seq[Leg])
+
+  /** The retrieval legs both forms of hybrid search fuse: tenant,
+    * filter and level scope, weight resolution, the BM25 leg, the dense
+    * leg under `cfg.dense`, and the ColPali leg when `pages` are given.
+    * A method with weight 0 (or BM25 without query tokens) has no leg. */
+  private def legs(chunks: DataFrame, query: String, ctx: TenantContext,
+           filters: Map[String, Filters.Pred] = Map.empty,
+           cfg: Config = Config(),
+           pages: Option[DataFrame] = None,
+           index: Option[BM25.Index] = None): Legs = {
     val scoped0 = Filters.tenantScope(chunks, ctx)
       .filter(Filters.compile(filters))
     val scoped = cfg.levelFilter match {
@@ -127,7 +138,7 @@ object HybridSearch {
     val fetch = cfg.limit * cfg.fetchMultiplier
     val qTokens = TextFunctions.tokenizeJvm(query)
 
-    val methods = Seq.newBuilder[(DataFrame, Double, String)]
+    val methods = Seq.newBuilder[Leg]
 
     // BM25 branch (positive-scores semantics, `bm25_store.py:235`).
     // With a prebuilt index: score from the persisted postings/idf
@@ -135,6 +146,38 @@ object HybridSearch {
     // semantics, `bm25_store.py:190-244`) — the query touches only its
     // own terms' posting lists instead of re-deriving the index from
     // the raw corpus.
+    if (qTokens.nonEmpty && weights.getOrElse("bm25", 0.0) > 0)
+      methods += Leg("bm25", weights("bm25"), scopedBm25(scoped, qTokens, fetch, index))
+
+    // dense branch: deterministic feature-hash query embedding (I9),
+    // candidate generation per cfg.dense (exact scan / pruned ANN
+    // probes / int8 store)
+    if (weights.getOrElse("dense", 0.0) > 0) {
+      val qvec = cfg.embedder.embedQuery(qTokens)
+      methods += Leg("dense", weights("dense"), denseTopK(scoped, qvec, fetch, cfg))
+    }
+
+    // ColPali branch (J3/J4): page-level MaxSim propagated to chunks
+    pages.filter(_ => weights.getOrElse("colpali", 0.0) > 0).foreach { pg =>
+      methods += Leg("colpali", weights("colpali"),
+        colpaliPropagate(scoped, pg, qTokens, cfg, fetch))
+    }
+    Legs(scoped, methods.result())
+  }
+
+  /** Chunk-table hybrid search as one lazy plan. `chunks` needs
+    * columns: id, text, organization_id (+ tenant columns), embedding.
+    * Returns the fused top-k with per-method detail (J2): (id,
+    * rrf_score, text, bm25_score, bm25_rank, dense_score, dense_rank).
+    * [[searchHits]] answers the same request from the same legs on the
+    * driver. */
+  def search(chunks: DataFrame, query: String, ctx: TenantContext,
+             filters: Map[String, Filters.Pred] = Map.empty,
+             cfg: Config = Config(),
+             pages: Option[DataFrame] = None,
+             index: Option[BM25.Index] = None): DataFrame = {
+    val Legs(scoped, legList) = legs(chunks, query, ctx, filters, cfg, pages, index)
+
     // per-method ranked lists: rank assigned by ONE window over the
     // already-cut top-fetch rows (ids unique ⇒ identical to the
     // rank-then-self-join formulation, but the corpus-scoring subtree
@@ -143,27 +186,7 @@ object HybridSearch {
       scoredTopK.withColumn("rank",
         row_number().over(Window.orderBy(col("score").desc, col("id"))))
 
-    if (qTokens.nonEmpty && weights.getOrElse("bm25", 0.0) > 0) {
-      val bm = scopedBm25(scoped, qTokens, fetch, index)
-      methods += ((withRank(bm), weights("bm25"), "bm25"))
-    }
-
-    // dense branch: deterministic feature-hash query embedding (I9),
-    // candidate generation per cfg.dense (exact scan / pruned ANN
-    // probes / int8 store)
-    if (weights.getOrElse("dense", 0.0) > 0) {
-      val qvec = cfg.embedder.embedQuery(qTokens)
-      val dn = denseTopK(scoped, qvec, fetch, cfg)
-      methods += ((withRank(dn), weights("dense"), "dense"))
-    }
-
-    // ColPali branch (J3/J4): page-level MaxSim propagated to chunks
-    pages.filter(_ => weights.getOrElse("colpali", 0.0) > 0).foreach { pg =>
-      val propagated = colpaliPropagate(scoped, pg, qTokens, cfg, fetch)
-      methods += ((withRank(propagated), weights("colpali"), "colpali"))
-    }
-
-    val built = methods.result()
+    val built = legList.map(l => (withRank(l.topK), l.weight, l.name))
     if (built.isEmpty)
       // keep the normal output schema so downstream selects (e.g.
       // enhancedSearch's id/rrf_score projection) still resolve
@@ -190,6 +213,68 @@ object HybridSearch {
     withDetail
       .join(broadcast(detailText), Seq("id"), "left")
       .orderBy(col("rrf_score").desc, col("id"))
+  }
+
+  /** One leg's collected row: its score (None where Spark has NULL)
+    * and its 1-based rank by score descending, then id. */
+  private final case class LegRow(id: Any, score: Option[Double], rank: Int)
+
+  /** One fused result of [[searchHits]]: `detail` maps each method
+    * whose leg holds the id to (score, rank) — [[search]]'s
+    * `<method>_score` / `<method>_rank` columns. */
+  final case class Hit(id: Any, rrfScore: Double, text: Option[String],
+                       detail: Map[String, (Option[Double], Int)])
+
+  /** Collect legs' top-`fetch` rows concurrently and rank each list on
+    * the driver, as [[search]]'s window ranks it. Settle-all
+    * ([[SegmentedStore.awaitAllValues]]): no leg job outlives the call,
+    * and a leg's failure reaches the caller unchanged. */
+  private def collectLegs(frames: Seq[DataFrame]): Seq[Seq[LegRow]] =
+    SegmentedStore.awaitAllValues(frames.map(df => () => df.collect()))
+      .map { rows =>
+        rows.toSeq
+          .map(r => (r.get(0), if (r.isNullAt(1)) None
+            else Some(r.getAs[Number](1).doubleValue())))
+          .sortWith(Fusion.compareScoreDescId(_, _) < 0)
+          .zipWithIndex.map { case ((id, sc), i) => LegRow(id, sc, i + 1) }
+      }
+
+  private def fuseLegs(legList: Seq[Leg], rows: Seq[Seq[LegRow]],
+                       limit: Int, rrfK: Int): Seq[(Any, Double)] =
+    Fusion.fuseTopKLocal(
+      legList.zip(rows).map { case (l, rs) => (rs.map(r => (r.id, r.rank)), l.weight) },
+      limit, rrfK)
+
+  /** The request path of [[search]]: the same legs, each collected
+    * (≤ limit × fetchMultiplier rows) concurrently, fused on the driver
+    * ([[Fusion.fuseTopKLocal]]), and the text of the fused ids read
+    * with one `id IN (…)` filter over the scope; each method's score
+    * and rank come from its collected leg. Equal to
+    * `search(...).collect()` row for row — a few small jobs in one
+    * concurrent wave plus the text read, where the lazy plan runs a
+    * chain of dependent AQE stages and, across dense modes, more
+    * generated code than Spark's codegen cache holds. */
+  def searchHits(chunks: DataFrame, query: String, ctx: TenantContext,
+                 filters: Map[String, Filters.Pred] = Map.empty,
+                 cfg: Config = Config(),
+                 pages: Option[DataFrame] = None,
+                 index: Option[BM25.Index] = None): Seq[Hit] = {
+    val Legs(scoped, legList) = legs(chunks, query, ctx, filters, cfg, pages, index)
+    if (legList.isEmpty) return Nil
+    val rows = collectLegs(legList.map(_.topK))
+    val fused = fuseLegs(legList, rows, cfg.limit, cfg.rrfK)
+    val text: Map[Any, Option[String]] =
+      if (!cfg.detail || fused.isEmpty) Map.empty
+      else scoped.filter(col("id").isin(fused.map(_._1): _*))
+        .select(col("id"), col("text")).collect()
+        .map(r => r.get(0) -> Option(r.getString(1))).toMap
+    val byId = legList.zip(rows).map { case (l, rs) =>
+      l.name -> rs.map(r => r.id -> (r.score, r.rank)).toMap }
+    fused.map { case (id, sc) =>
+      Hit(id, sc, text.get(id).flatten,
+        if (cfg.detail) byId.flatMap { case (m, d) => d.get(id).map(m -> _) }.toMap
+        else Map.empty)
+    }
   }
 
   /** The dense branch's (id, score) top-fetch under cfg.dense. Every
@@ -320,105 +405,87 @@ object HybridSearch {
     *    (deductions cap at 0.2+0.1, `:157-193`), so conf < 0.5 ⟺
     *    empty base.
     *
-    * The ONE driver-side data dependency is a single-row aggregate
-    * (count/avg/var_pop/countDistinct) over the ≤2·limit-row cached
-    * base — the conditional re-query needs a materialized decision,
-    * exactly as in the reference; no per-row collects. In the common
-    * confident case the retry plans are never even constructed.
-    *
-    * A fully-lazy fold of this decision INTO the returned plan
-    * (failure stats as a 1-row broadcast gating each retry subtree)
-    * was implemented and measured at sf0.1, and rejected on evidence:
-    * with cache() the gate + merge subtrees re-embed the whole base
-    * lineage, exploding analysis to ~33 s driver time and a
-    * 20,144-line physical plan (q87 82.6 s end-to-end, ~110 AQE stage
-    * jobs); truncating the lineage with localCheckpoint(lazy) shrinks
-    * the plan 17× but under AQE `toRdd` materializes every query
-    * stage eagerly, executing the base search at plan-build time
-    * (9 s, and eager jobs defeat the point). The 2-job form here is
-    * 3-4 s end-to-end for the same query — the extra "job" is a
-    * head() on a handful of cached rows. */
+    * Runs on the request path of [[searchHits]]: the base search's
+    * legs (limit×2, detail off) and the precision lookup are collected
+    * in one concurrent wave, and the fusion, the precision merge, the
+    * failure signals and the retry merge are driver code over at most
+    * 2·limit rows; a retry (empty base only) is one more wave. The
+    * result is a local DataFrame (id, rrf_score, query_type) — no
+    * cached base, no stats job, no window merge. */
   def enhancedSearch(chunks: DataFrame, query: String, ctx: TenantContext,
                      filters: Map[String, Filters.Pred] = Map.empty,
                      cfg: Config = Config(),
                      index: Option[BM25.Index] = None): DataFrame = {
     val queryType = QueryAnalyzer.classify(query)
+    val rows = enhancedHits(chunks, query, ctx, filters, cfg, index)
+      .map { case (id, sc) => Row(id, sc, queryType) }
+    val schema = StructType(Seq(chunks.schema("id").copy(nullable = true),
+      StructField("rrf_score", DoubleType), StructField("query_type", StringType)))
+    chunks.sparkSession.createDataFrame(rows.asJava, schema)
+  }
+
+  /** [[enhancedSearch]]'s ranked (id, rrf_score) rows, without the
+    * constant query_type column. */
+  def enhancedHits(chunks: DataFrame, query: String, ctx: TenantContext,
+                   filters: Map[String, Filters.Pred] = Map.empty,
+                   cfg: Config = Config(),
+                   index: Option[BM25.Index] = None): Seq[(Any, Double)] = {
     val (expanded, _) = Acronyms.expandQuery(query)
-    // base search at limit×2 (`enhanced_hybrid_search.py:277`);
-    // detail off — this loop consumes only (id, rrf_score), and the
-    // detail joins would execute anyway (unused left joins are never
-    // eliminated)
-    val base = search(chunks, expanded, ctx, filters,
-      cfg.copy(limit = cfg.limit * 2, detail = false), index = index)
+    // base search at limit×2 (`enhanced_hybrid_search.py:277`), its
+    // (id, rrf_score) only
+    val baseLimit = cfg.limit * 2
+    val base = legs(chunks, expanded, ctx, filters, cfg.copy(limit = baseLimit), index = index)
 
     val scoped = Filters.tenantScope(chunks, ctx).filter(Filters.compile(filters))
     // BM25-only lookup reused by the precision and fallback branches
     def bm25Only(tokens: Seq[String], k: Int): DataFrame =
       scopedBm25(scoped, tokens, k, index)
 
-    val (isPrecision, ptypeOpt, refOpt) = QueryAnalyzer.detectPrecision(query)
-    val merged0 = (isPrecision, ptypeOpt, refOpt) match {
+    // V9: BM25-only lookups for the reference terms, +0.5 boost
+    val precision = QueryAnalyzer.detectPrecision(query) match {
       case (true, Some(ptype), Some(ref)) =>
-        // V9: BM25-only lookups for the reference terms, +0.5 boost
-        val terms = QueryAnalyzer.precisionSearchTerms(ptype, ref)
-          .flatMap(TextFunctions.tokenizeJvm).distinct
-        if (terms.nonEmpty) {
-          val prec = bm25Only(terms, 5)
-            .select(col("id"), (col("score") + 0.5).as("rrf_score"))
-          mergeFirstWriterWins(prec, base.select(col("id"), col("rrf_score")))
-        } else base.select(col("id"), col("rrf_score"))
-      case _ => base.select(col("id"), col("rrf_score"))
+        Some(QueryAnalyzer.precisionSearchTerms(ptype, ref)
+          .flatMap(TextFunctions.tokenizeJvm).distinct).filter(_.nonEmpty)
+      case _ => None
+    }
+    val collected = collectLegs(
+      base.methods.map(_.topK) ++ precision.map(bm25Only(_, 5)))
+    val baseRows = fuseLegs(base.methods, collected, baseLimit, cfg.rrfK)
+    val merged = precision match {
+      case Some(_) =>
+        val prec = collected.last.map(r => (r.id, r.score.get + 0.5))
+        mergeFirstWriterWinsLocal(Seq(prec, baseRows))
+      case None => baseRows
     }
 
-    // ≤2·limit rows, but its lineage is the whole base search — cache
-    // so the failure-stats action and the final plan compute it once.
-    // Deliberately not unpersisted: the returned plan still references
-    // it lazily; the entries are tiny and evict LRU. Long-lived query
-    // services should clear the cache between requests (as Bench and
-    // Verify do) if they care about storage-pool hygiene.
-    val merged = merged0.cache()
-
-    // V10 steps 6-7: failure analysis on the merged base, then retries
-    val docId =
-      if (chunks.columns.contains("document_id"))
-        chunks.select(col("id"), col("document_id"))
-      else chunks.select(col("id"), col("id").as("document_id"))
-    val stats = merged.join(docId, Seq("id"), "left")
-      .agg(count(lit(1)), avg(col("rrf_score")), var_pop(col("rrf_score")),
-        countDistinct(col("document_id")))
-      .head()
-    val signals =
-      if (stats.getLong(0) == 0L)
-        analyzeFailure(Seq.empty, 0)
-      else analyzeFailureStats(stats.getLong(0), stats.getDouble(1),
-        if (stats.isNullAt(2)) 0.0 else stats.getDouble(2),
-        stats.getLong(3).toInt)
-
+    // V10 steps 6-7: failure analysis on the merged base, then retries.
+    // The source count feeds only `expand_search`, which acts below
+    // confidence 0.5, and non-empty results floor confidence at 0.7 —
+    // so no document-id read is made for it
+    val signals = analyzeFailure(merged.map(_._2), nSources = 0)
     val afterFallback =
       if (signals.confidence >= 0.5) merged
       else {
         val recs = signals.recommendations.toSet
         val noResults = recs.contains("no_results_fallback")
-        val retries = Seq.newBuilder[DataFrame]
-        if (recs.contains("try_keyword_search") || noResults)
-          retries += bm25Only(TextFunctions.tokenizeJvm(query), 5)
-            .select(col("id"), col("score").as("rrf_score"))
-        if (recs.contains("expand_search") || noResults)
-          retries += search(chunks, query, ctx, Map.empty,
-              cfg.copy(limit = 5, detail = false), index = index)
-            .select(col("id"), col("rrf_score"))
-        val rs = retries.result()
-        if (rs.isEmpty) merged
-        // one prioritized window over all lists at once (retry order,
-        // then the base) — same first-writer-wins outcome as chaining
-        // pairwise merges, minus a single-partition shuffle per pair
-        else mergeManyFirstWriterWins(rs :+ merged)
+        val keyword =
+          if (recs.contains("try_keyword_search") || noResults)
+            Some(bm25Only(TextFunctions.tokenizeJvm(query), 5))
+          else None
+        val expand =
+          if (recs.contains("expand_search") || noResults)
+            Some(legs(chunks, query, ctx, Map.empty, cfg.copy(limit = 5), index = index))
+          else None
+        val retryRows = collectLegs(
+          keyword.toSeq ++ expand.toSeq.flatMap(_.methods.map(_.topK)))
+        val kw = keyword.map(_ => retryRows.head.map(r => (r.id, r.score.get)))
+        val ex = expand.map(e =>
+          fuseLegs(e.methods, retryRows.drop(kw.size), 5, cfg.rrfK))
+        // retry order, then the base
+        mergeFirstWriterWinsLocal(kw.toSeq ++ ex.toSeq :+ merged)
       }
 
-    afterFallback
-      .withColumn("query_type", lit(queryType))
-      .orderBy(col("rrf_score").desc, col("id"))
-      .limit(cfg.limit)
+    Fusion.sortScoreDescId(afterFallback).take(cfg.limit)
   }
 
   /** J5 graph augmentation (`document_graph.py:542-602`): BFS ≤2 hops
@@ -510,21 +577,21 @@ object HybridSearch {
   }
 
   /** J8: priority ∪ base with first-writer-wins dedup by id. */
-  def mergeFirstWriterWins(priority: DataFrame, base: DataFrame): DataFrame =
-    mergeManyFirstWriterWins(Seq(priority, base))
-
-  /** J8 over N lists in one pass: earlier lists win by id. Chaining
-    * pairwise merges is semantically identical but pays one
-    * single-partition window shuffle per pair; all lists are top-k
-    * sized, so one union + one window is strictly cheaper. */
-  def mergeManyFirstWriterWins(lists: Seq[DataFrame]): DataFrame = {
-    val tagged = lists.zipWithIndex
-      .map { case (df, i) => df.withColumn("__prio", lit(i)) }
-      .reduce(_ unionByName _)
+  def mergeFirstWriterWins(priority: DataFrame, base: DataFrame): DataFrame = {
+    val tagged = priority.withColumn("__prio", lit(0))
+      .unionByName(base.withColumn("__prio", lit(1)))
     val w = Window.partitionBy(col("id")).orderBy(col("__prio"), col("rrf_score").desc)
     tagged.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__prio", "__rn")
+  }
+
+  /** J8 over N collected (id, rrf_score) lists on the driver: earlier
+    * lists win by id, and within a list the higher score — the row
+    * [[mergeFirstWriterWins]]'s window keeps. Unordered output. */
+  private def mergeFirstWriterWinsLocal(lists: Seq[Seq[(Any, Double)]]): Seq[(Any, Double)] = {
+    val seen = scala.collection.mutable.HashSet.empty[Any]
+    lists.flatMap(Fusion.sortScoreDescId(_)).filter(r => seen.add(r._1))
   }
 
   /** V10 failure signals (`enhanced_hybrid_search.py:144-197`) computed
@@ -546,8 +613,8 @@ object HybridSearch {
     analyzeFailureStats(scores.size, avg, variance, nSources, expectedMinScore)
   }
 
-  /** Same signals from pre-aggregated stats (what [[enhancedSearch]]
-    * computes distributed: one count/avg/var_pop/countDistinct row). */
+  /** Same signals from pre-aggregated stats: the one count / avg /
+    * var_pop / countDistinct row a distributed result set yields. */
   def analyzeFailureStats(n: Long, avg: Double, variance: Double,
                           nSources: Int,
                           expectedMinScore: Double = 0.3): FailureSignals = {

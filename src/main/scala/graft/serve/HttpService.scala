@@ -149,13 +149,7 @@ object HttpService {
     val port = args.headOption.map(_.toInt).getOrElse(8080)
     val storeRoot = args.drop(1).headOption.getOrElse(
       sys.env.getOrElse("GRAFT_STORE", "/tmp/graft_store"))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val http = new HttpService(new QueryService(spark, storeRoot), port)
+    val http = new HttpService(new QueryService(QueryService.session(), storeRoot), port)
     http.start()
     // serve until the JVM is stopped; Spark holds non-daemon threads
     System.err.println(s"graft http service on port ${http.port}")

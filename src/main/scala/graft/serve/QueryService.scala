@@ -30,9 +30,13 @@ import graft.sources.SegmentedStore.Manifest
   * Scale stance: the store is the partition-pruned parquet layout of
   * [[TableStore.save]] (chunks by organization_id, postings/idf by
   * term_blk), so each search touches only the tenant's partitions and
-  * its query terms' posting blocks; the in-memory cache is cleared
-  * after every request (same hygiene as Bench) so nothing depends on
-  * cached state surviving between requests.
+  * its query terms' posting blocks. A search collects each index's
+  * top-k leg concurrently and fuses them on the driver
+  * ([[HybridSearch.searchHits]]) instead of running one lazy fused
+  * plan: a few small jobs in one wave, not a chain of dependent
+  * stages. The in-memory cache is cleared after every request (same
+  * hygiene as Bench) so nothing depends on cached state surviving
+  * between requests.
   */
 class QueryService(
     val spark: SparkSession,
@@ -710,9 +714,7 @@ class QueryService(
     IndexBundle(chunks, postings, docFreq, BM25.idfTable(docFreq, stats), stats)
   }
 
-  /** `/search` (`api/main.py:376-453`): hybrid search with tenant
-    * isolation; optional weights / filters / limit / enhanced flag. */
-  private def search(req: JValue): JValue = {
+  private def searchRequest(req: JValue): QueryService.SearchRequest = {
     val ctx = tenant(req)
     val b = requireBundle
     val query = (req \ "query").extractOpt[String]
@@ -783,34 +785,59 @@ class QueryService(
     }
     val cfg = HybridSearch.Config(limit = limit, embedder = embedder,
       weights = weights, dense = dense)
-    val enhanced = (req \ "enhanced").extractOpt[Boolean].getOrElse(false)
-    val out =
-      if (enhanced)
-        HybridSearch.enhancedSearch(b.chunks, query, ctx, filters, cfg,
-          index = Some(b.bm25Index))
-      else
-        HybridSearch.search(b.chunks, query, ctx, filters, cfg,
-          index = Some(b.bm25Index))
-    val cols = out.columns.toSet
-    val rows = out.collect().toSeq.map { r =>
-      def optD(c: String): JValue =
-        if (cols.contains(c) && !r.isNullAt(r.fieldIndex(c)))
-          JDouble(r.getAs[Number](c).doubleValue())
-        else JNull
+    QueryService.SearchRequest(b, ctx, query, filters, cfg,
+      enhanced = (req \ "enhanced").extractOpt[Boolean].getOrElse(false))
+  }
+
+  /** `/search` (`api/main.py:376-453`): hybrid search with tenant
+    * isolation; optional weights / filters / limit / enhanced flag.
+    * Answered on the request path ([[HybridSearch.searchHits]],
+    * [[HybridSearch.enhancedHits]]): the per-index top-k legs are
+    * collected concurrently under this request's read lock and fused
+    * on the driver, and the response renders from those rows. */
+  private def search(req: JValue): JValue = {
+    val r = searchRequest(req)
+    def num(v: Option[Double]): JValue = v.map(JDouble(_)).getOrElse(JNull)
+    def row(id: Any, score: Double, text: Option[String],
+            detail: Map[String, (Option[Double], Int)]): JValue = {
+      def method(m: String): (JValue, JValue) = detail.get(m) match {
+        case Some((sc, rank)) => (num(sc), JDouble(rank.toDouble))
+        case None => (JNull, JNull)
+      }
+      val (bmScore, bmRank) = method("bm25")
+      val (dnScore, dnRank) = method("dense")
       JObject(
-        "id" -> JString(r.getAs[String]("id")),
-        "score" -> optD(if (cols.contains("rrf_score")) "rrf_score" else "final_score"),
-        "text" -> (if (cols.contains("text")) JString(r.getAs[String]("text")) else JNull),
-        "bm25_score" -> optD("bm25_score"),
-        "bm25_rank" -> optD("bm25_rank"),
-        "dense_score" -> optD("dense_score"),
-        "dense_rank" -> optD("dense_rank"))
+        "id" -> JString(id.toString),
+        "score" -> JDouble(score),
+        "text" -> text.map(JString(_)).getOrElse(JNull),
+        "bm25_score" -> bmScore,
+        "bm25_rank" -> bmRank,
+        "dense_score" -> dnScore,
+        "dense_rank" -> dnRank)
     }
+    val rows =
+      if (r.enhanced)
+        HybridSearch.enhancedHits(r.bundle.chunks, r.query, r.ctx, r.filters, r.cfg,
+          index = Some(r.bundle.bm25Index))
+          .map { case (id, sc) => row(id, sc, None, Map.empty) }
+      else
+        HybridSearch.searchHits(r.bundle.chunks, r.query, r.ctx, r.filters, r.cfg,
+          index = Some(r.bundle.bm25Index))
+          .map(h => row(h.id, h.rrfScore, h.text, h.detail))
     JObject(
-      "query" -> JString(query),
-      "organization_id" -> JString(ctx.organizationId),
+      "query" -> JString(r.query),
+      "organization_id" -> JString(r.ctx.organizationId),
       "total_results" -> JInt(rows.size),
       "results" -> JArray(rows.toList))
+  }
+
+  /** The lazy [[HybridSearch.search]] plan of a plain search request,
+    * over the same store view and dense index the request path reads —
+    * the reference side of the request path's parity spec. */
+  private[graft] def searchFrame(line: String): DataFrame = readOp {
+    val r = searchRequest(parse(line))
+    HybridSearch.search(r.bundle.chunks, r.query, r.ctx, r.filters, r.cfg,
+      index = Some(r.bundle.bm25Index))
   }
 
   /** Document roll-up for the list/get endpoints: one row per document
@@ -940,6 +967,12 @@ class QueryService(
 /** stdin/stdout JSON-line loop: one request per line, one response per
   * line; `{"op":"shutdown"}` exits. */
 object QueryService {
+  /** A parsed `/search` request, bound to the store view it reads. */
+  private final case class SearchRequest(
+      bundle: IndexBundle, ctx: TenantContext, query: String,
+      filters: Map[String, Filters.Pred], cfg: HybridSearch.Config,
+      enhanced: Boolean)
+
   /** Upper bound on how long a mutation request waits for the
     * cross-process store lease before failing with a retryable 503.
     * Generous against real peer mutations (seconds) but far below the
@@ -971,15 +1004,28 @@ object QueryService {
         "SPARK_GRAFT_STORE_LOCK_TTL_MS"))
       .getOrElse(graft.sources.FsLease.DefaultTtlMs)
 
-  def main(args: Array[String]): Unit = {
-    val storeRoot = args.headOption.getOrElse(
-      sys.env.getOrElse("GRAFT_STORE", "/tmp/graft_store"))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+  /** The service mains' session: master from SPARK_GRAFT_MASTER, else
+    * `local[SPARK_GRAFT_CPUS]` (default: every core) with as many
+    * shuffle partitions — the same resolution as Verify and Bench —
+    * plus the engine's SQL extensions and the UTC session time zone. */
+  private[serve] def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
+    val spark = SparkSession.builder()
+      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val svc = new QueryService(spark, storeRoot)
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val storeRoot = args.headOption.getOrElse(
+      sys.env.getOrElse("GRAFT_STORE", "/tmp/graft_store"))
+    val svc = new QueryService(session(), storeRoot)
     val in = scala.io.Source.stdin.getLines()
     var running = true
     while (running && in.hasNext) {
@@ -993,6 +1039,6 @@ object QueryService {
         if (stop) running = false
       }
     }
-    spark.stop()
+    svc.spark.stop()
   }
 }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.types
 import org.apache.spark.sql.functions._
@@ -438,25 +440,29 @@ object SegmentedStore {
 
   /** IVF-PQ view: code union across base + segments; centroids and
     * codebook come from the BASE only (segments encoded against them —
-    * the pinned-quantizer contract). */
+    * the pinned-quantizer contract), through the per-generation memo,
+    * so a search reads neither again. */
   def pqView(spark: SparkSession, root: String,
              m: Manifest): Option[(DataFrame, DataFrame, PqKnn.Codebook)] = {
     val base = s"$root/${m.base}"
     if (!exists(spark, s"$base/pq") || !exists(spark, s"$base/pq_centroids")) None
     else {
-      val (_, cb) = TableStore.loadPq(spark, base)
+      val (cents, cb) = pinnedQuantizer(spark, base)
       val codes = memoizedUnion(spark, root, m, "pq",
         m.dataDirs.map(d => s"$root/$d/pq")).get
         .select(col("cid"), col("id"),
           TableStore.unpackPidCodes(col("codes")).as("codes"))
-      Some((codes, TableStore.loadPqCentroids(spark, base), cb))
+      Some((codes, cents, cb))
     }
   }
 
   // Per-base-generation quantizer memo: PQ coarse centroids + codebook
   // are PINNED at the base by contract (segments encode against them,
   // compaction retrains), so loading them once per generation instead
-  // of twice per micro-batch is free of staleness by construction.
+  // of once per micro-batch or search is free of staleness by
+  // construction. The centroids are held as a driver-local frame
+  // (PqKnn.K = 16 rows), so the probe ranking collects them without a
+  // job.
   // Bounded (8 generations). The key carries three staleness guards:
   // the owning SparkSession (a restarted session in the same JVM must
   // never be handed a DataFrame bound to a stopped one), the absolute
@@ -488,9 +494,9 @@ object SegmentedStore {
     quantizerMemo.synchronized {
       val key = QuantizerKey(spark, base, baseGeneration(spark, base))
       Option(quantizerMemo.get(key)).getOrElse {
-        val cents = TableStore.loadPqCentroids(spark, base)
-        val (_, cb) = TableStore.loadPq(spark, base)
-        val v = (cents, cb)
+        val disk = TableStore.loadPqCentroids(spark, base)
+        val cents = spark.createDataFrame(disk.collect().toSeq.asJava, disk.schema)
+        val v = (cents, TableStore.loadPqCodebook(spark, base))
         quantizerMemo.put(key, v)
         v
       }
@@ -527,22 +533,27 @@ object SegmentedStore {
     * collapses the fixed per-job floor (driver planning + commit
     * latency × ~40 small jobs was the measured warm-ingest cost, not
     * data volume). */
-  /** Run `tasks` concurrently and wait for EVERY one to finish before
-    * returning or throwing (first failure rethrown after the last task
-    * settles). Settle-all, not fail-fast, is load-bearing: a fail-fast
-    * return would leave straggler tasks still WRITING into output dirs
-    * while the caller's failure handling (lease release, retry at the
-    * same generation, overwrite) races those zombie writes into
-    * corruption. */
   private[graft] def awaitAll(tasks: Seq[() => Unit]): Unit = {
+    awaitAllValues(tasks)
+    ()
+  }
+
+  /** Run `tasks` concurrently and wait for EVERY one to finish before
+    * returning their values in task order or throwing (the first
+    * failure in task order, rethrown after the last task settles).
+    * Settle-all, not fail-fast, is load-bearing: a fail-fast return
+    * would leave straggler tasks still WRITING into output dirs while
+    * the caller's failure handling (lease release, retry at the same
+    * generation, overwrite) races those zombie writes into corruption,
+    * and would let a search's straggler jobs keep reading files after
+    * the request released its store read lock. */
+  private[graft] def awaitAllValues[A](tasks: Seq[() => A]): Seq[A] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val settled = Await.result(
+    Await.result(
       Future.sequence(tasks.map(t => Future(t()).transform(scala.util.Success(_)))),
-      Duration.Inf)
-    settled.collectFirst { case scala.util.Failure(e) => throw e }
-    ()
+      Duration.Inf).map(_.get)
   }
 
   /** Append one delta segment and roll the derived tables forward;

@@ -287,11 +287,16 @@ object TableStore {
     spark.read.parquet(s"$root/pq_centroids")
 
   /** (codes index, codebook) as written by [[savePq]]; codes come back
-    * as `array<int>` pids ([[unpackPidCodes]]) for the ADC kernel, the
-    * codebook re-flattens into the [[graft.functions.Pq]] layout. */
+    * as `array<int>` pids ([[unpackPidCodes]]) for the ADC kernel. */
   def loadPq(spark: SparkSession, root: String): (DataFrame, graft.operators.PqKnn.Codebook) = {
     val idx = spark.read.parquet(s"$root/pq")
       .select(col("cid"), col("id"), unpackPidCodes(col("codes")).as("codes"))
+    (idx, loadPqCodebook(spark, root))
+  }
+
+  /** The codebook as written by [[savePq]], re-flattened into the
+    * [[graft.functions.Pq]] layout. */
+  def loadPqCodebook(spark: SparkSession, root: String): graft.operators.PqKnn.Codebook = {
     val rows = spark.read.parquet(s"$root/pq_codebook")
       .select(col("j"), col("pid"), col("cvec").cast("array<double>"))
       .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2)))
@@ -301,6 +306,6 @@ object TableStore {
     val flat = new Array[Double](m * k * sub)
     for (((j, p), cv) <- rows; i <- 0 until sub)
       flat((j * k + p) * sub + i) = cv(i)
-    (idx, graft.operators.PqKnn.Codebook(m, sub, k, flat))
+    graft.operators.PqKnn.Codebook(m, sub, k, flat)
   }
 }

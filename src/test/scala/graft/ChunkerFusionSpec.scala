@@ -77,6 +77,33 @@ class ChunkerFusionSpec extends SparkSpec {
     assert(SCTest.check(SCTest.Parameters.default, prop).passed)
   }
 
+  test("driver RRF twin equals fuseTopK row for row, rounding included (property)") {
+    // "x\uFF21" and "x\uD835\uDD38" (U+1D538) order one way by UTF-8
+    // bytes (Spark) and the other by UTF-16 units (String.compareTo)
+    val ids = Seq("a", "b", "c", "d", "e", "x", "x\uFF21", "x\uD835\uDD38")
+    def spark(ms: Seq[(Seq[(String, Int)], Double)], limit: Int): Seq[(String, Double)] =
+      Fusion.fuseTopK(ms.map { case (l, w) => (l.toDF("id", "rank"), w) }, limit)
+        .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+    // an equal-score tie settled by that id order
+    val tie = Seq((Seq("x\uD835\uDD38" -> 1, "a" -> 2), 0.5), (Seq("x\uFF21" -> 1), 0.5))
+    assert(Fusion.fuseTopKLocal(tie, 3).map(_._1) == Seq("x\uFF21", "x\uD835\uDD38", "a"))
+    assert(Fusion.fuseTopKLocal(tie, 3) == spark(tie, 3))
+
+    // ranked lists: distinct ids per list, overlapping across lists,
+    // repeated ranks, weights including 0
+    val list: Gen[Seq[(String, Int)]] = for {
+      n <- Gen.choose(0, ids.size)
+      picked <- Gen.pick(n, ids)
+      ranks <- Gen.listOfN(n, Gen.choose(1, 8))
+    } yield picked.toSeq.zip(ranks)
+    val methods = Gen.choose(2, 3).flatMap(m =>
+      Gen.listOfN(m, Gen.zip(list, Gen.oneOf(0.0, 0.2, 0.3, 0.5, 1.0))))
+    val prop = Prop.forAll(methods, Gen.choose(1, 10)) { (ms, limit) =>
+      Fusion.fuseTopKLocal(ms, limit) == spark(ms, limit)
+    }
+    assert(SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(40), prop).passed)
+  }
+
   test("semantic strategy breaks at topic shifts; sentence strategy is budget-only (I4)") {
     import graft.ingest.SemanticChunker
     val a1 = "Spark shuffle moves data between partitions across the cluster."

@@ -141,6 +141,72 @@ class QueryServiceSpec extends SparkSpec {
       \ "status").extract[Int] == 400)
   }
 
+  test("request path equals the lazy search plan exactly: every dense mode, plain and filtered") {
+    val p = new QueryService(spark, TmpDirs.create("graft_svc_parity"))
+    def pCall(json: String): JValue = parse(p.handle(json))
+    // two byte-identical documents tie on every leg score; their names
+    // differ only in U+FF21 vs U+1D538, which order one way by UTF-8
+    // bytes (Spark) and the other by UTF-16 units (String.compareTo)
+    val ledger = "# Ledger Policy\\n\\nThe ledger reconciles invoices against payments every month. Auditors review the ledger and the invoice archive each quarter."
+    val tieNames = Seq("ledger\uFF21.md", "ledger\uD835\uDD38.md")
+    assert(tieNames(0).compareTo(tieNames(1)) > 0)
+    def doc(fn: String, text: String) =
+      s"""{"filename":"$fn","text":"$text"}"""
+    val orgP = Seq(doc(tieNames(0), ledger), doc(tieNames(1), ledger),
+      doc("lease.md", "# Lease Agreement\\n\\nThe tenant shall pay monthly rent to the landlord. The deposit and the invoices for repairs are reconciled at termination."),
+      doc("payments.md", "# Payment Terms\\n\\nInvoices are payable within thirty days. Late payments accrue interest, and the ledger records every payment."),
+      doc("notes.md", "# Meeting Notes\\n\\nQuarterly revenue grew nine percent. Auditors asked for the invoice archive and the payment ledger."))
+    val orgQ = Seq(doc(tieNames(0), ledger),
+      doc("recipe.md", "# Bread Recipe\\n\\nMix flour, water, salt and yeast. Let the dough rise, then bake until golden."))
+    for ((org, ds) <- Seq("org_p" -> orgP, "org_q" -> orgQ)) {
+      val r = pCall(s"""{"op":"ingest","organization_id":"$org","docs":[${ds.mkString(",")}]}""")
+      assert((r \ "status").extract[String] == "completed", r)
+    }
+    // the filter keeps the tie documents' type
+    val types = pCall("""{"op":"documents","organization_id":"org_p"}""").extract[List[JValue]]
+      .map(d => ((d \ "filename").extract[String], (d \ "document_type").extract[String])).toMap
+    val filter = s"""{"document_type":"${types(tieNames(0))}"}"""
+
+    def opt(j: JValue): Option[Double] = j match {
+      case JDouble(d) => Some(d)
+      case JNull | JNothing => None
+      case other => fail(s"unexpected number $other")
+    }
+    type Res = (String, Double, String, Option[Double], Option[Double], Option[Double], Option[Double])
+    def served(json: String): Seq[Res] =
+      (pCall(json) \ "results").extract[List[JValue]].map { r =>
+        ((r \ "id").extract[String], (r \ "score").extract[Double], (r \ "text").extract[String],
+          opt(r \ "bm25_score"), opt(r \ "bm25_rank"), opt(r \ "dense_score"), opt(r \ "dense_rank"))
+      }
+    def planned(json: String): Seq[Res] = {
+      val df = p.searchFrame(json)
+      df.collect().toSeq.map { r =>
+        def num(c: String): Option[Double] =
+          if (!df.columns.contains(c) || r.isNullAt(r.fieldIndex(c))) None
+          else Some(r.getAs[Number](c).doubleValue())
+        (r.getAs[String]("id"), r.getAs[Double]("rrf_score"), r.getAs[String]("text"),
+          num("bm25_score"), num("bm25_rank"), num("dense_score"), num("dense_rank"))
+      }
+    }
+
+    val probes = Seq("org_p" -> "ledger invoices payments", "org_p" -> "auditors quarterly archive",
+      "org_p" -> "monthly rent deposit", "org_q" -> "ledger invoices")
+    var tiesSeen = 0
+    for (mode <- Seq("exact", "ann", "quantized", "ivfpq", "hnsw");
+         (org, q) <- probes; filters <- Seq("", s""","filters":$filter""")) {
+      val json = s"""{"op":"search","organization_id":"$org","query":"$q","limit":5,"dense_mode":"$mode"$filters}"""
+      val got = served(json)
+      assert(got == planned(json), json)
+      val ids = got.map(_._1)
+      if (tieNames.forall(n => ids.exists(_.contains(n)))) {
+        tiesSeen += 1
+        // the tie resolves in UTF-8 order: U+FF21 first
+        assert(ids.indexWhere(_.contains(tieNames(0))) < ids.indexWhere(_.contains(tieNames(1))), json)
+      }
+    }
+    assert(tiesSeen > 0, "no probe returned both tie documents")
+  }
+
   test("malformed weights are a 400, not a 500") {
     assert((call("""{"op":"search","organization_id":"org_b","query":"x","weights":{"bm25":"notanumber"}}""")
       \ "status").extract[Int] == 400)
