@@ -47,11 +47,11 @@ object AnnKnn {
   val ServingBits = 3
 
   /** The persisted ANN index: (tbl, bucket, id, vec) — one row per
-    * (vector, table). At cluster scale this is written partitioned by
-    * (tbl, bucket) so a query reads only its L probed buckets.
-    * `keepCols` pass through unchanged — the serving store keeps
-    * `organization_id` so the layout can partition tenant-FIRST and a
-    * tenant's probes prune to its own directories before any read. */
+    * (vector, table). [[graft.sources.TableStore.saveAnn]] persists it
+    * so a query reads only its L probed buckets. `keepCols` pass
+    * through unchanged — the serving store keeps `organization_id` so
+    * the layout splits by tenant and a tenant's probes read only its
+    * own files. */
   def index(data: DataFrame, idCol: String, vecCol: String,
             tables: Int = DefaultTables, bits: Int = DefaultBits,
             keepCols: Seq[String] = Nil): DataFrame =
@@ -92,17 +92,19 @@ object AnnKnn {
       .limit(k)
   }
 
-  /** Deduped (id, vec) candidate set from a (tbl, bucket)-partitioned
-    * store ([[graft.sources.TableStore.saveAnn]] layout): the probe
-    * pairs are computed driver-side with the JVM twins of the bucket
-    * kernel and applied as a STATIC (tbl, bucket) filter — partition
-    * pruning, so the scan opens only the probed directories of the
-    * index, never the rest of the corpus. `extraProbes > 0` adds the
-    * multi-probe neighbor buckets ([[multiProbeBuckets]]). This is the
-    * composable half of the read path: callers that need to scope
-    * candidates (tenant filters, metadata predicates — the reference's
-    * filter-pushed HNSW query, `vector_store.py:230-273`) semi-join
-    * HERE, before any top-k cut, so filtering never starves the k. */
+  /** Deduped (id, vec) candidate set from a stored index
+    * ([[graft.sources.TableStore.saveAnn]] layout): the probe pairs are
+    * computed driver-side with the JVM twins of the bucket kernel and
+    * applied as a STATIC (tbl, bucket) filter — a partition prune on
+    * the (tbl, bucket) directory layout, a pushed row-group and page
+    * filter on the tenant-clustered one — so the scan reads only the
+    * probed buckets of the index, never the rest of the corpus.
+    * `extraProbes > 0` adds the multi-probe neighbor buckets
+    * ([[multiProbeBuckets]]). This is the composable half of the read
+    * path: callers that need to scope candidates (tenant filters,
+    * metadata predicates — the reference's filter-pushed HNSW query,
+    * `vector_store.py:230-273`) semi-join HERE, before any top-k cut,
+    * so filtering never starves the k. */
   def storeCandidates(idx: DataFrame, queryVec: Array[Double],
                       tables: Int = DefaultTables, bits: Int = DefaultBits,
                       extraProbes: Int = 0): DataFrame = {
@@ -111,7 +113,8 @@ object AnnKnn {
       else VectorFunctions.hyperplaneBucketsJvm(queryVec, tables, bits)
         .zipWithIndex.map { case (b, t) => (t, b) }.toSeq
     val probe = pairs.map { case (t, b) =>
-      col("tbl") === t && col("bucket") === b }.reduce(_ || _)
+      graft.sources.TableStore.isInLongs("tbl", Seq(t.toLong)) &&
+        graft.sources.TableStore.isInLongs("bucket", Seq(b)) }.reduce(_ || _)
     idx.filter(probe)
       .groupBy(col("id")).agg(first(col("vec")).as("vec"))
   }

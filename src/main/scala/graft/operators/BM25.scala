@@ -107,12 +107,16 @@ object BM25 {
   /** The read path: score a tokenized query against a prebuilt (e.g.
     * parquet-loaded) index. Touches only the query terms' posting
     * lists — the `isin` filter pushes into the postings scan, and when
-    * the index carries a `term_blk` partition column (written by
-    * [[graft.sources.TableStore.save]]) an additional block filter
-    * turns into partition PRUNING: a query reads ≤|query| blocks of
-    * the index directory, never the rest. Query terms are a bag
-    * (duplicates weight double, as rank_bm25's get_scores iteration);
-    * positive scores only by default (reference `bm25_store.py:235`). */
+    * the index carries a `term_blk` column (written by
+    * [[graft.sources.TableStore.writeTerms]], files sorted by
+    * (term_blk, term)) an additional block filter pushes down with it:
+    * Parquet skips every row group and page whose min/max statistics
+    * miss the ≤|query| blocks, so a query reads those blocks of the
+    * index, never the rest. On a store written in the older `term_blk=`
+    * directory layout the same filter is a partition prune. Query
+    * terms are a bag (duplicates weight double, as rank_bm25's
+    * get_scores iteration); positive scores only by default (reference
+    * `bm25_store.py:235`). */
   def scoreFromIndex(index: Index, queryTokens: Seq[String],
                      p: Params = Params(),
                      positiveOnly: Boolean = true): DataFrame = {
@@ -125,7 +129,7 @@ object BM25 {
     def pruned(df: DataFrame): DataFrame =
       if (df.columns.contains("term_blk")) {
         val blks = terms.map(graft.sources.TableStore.termBlockJvm).distinct
-        df.filter($"term_blk".isin(blks: _*))
+        df.filter(graft.sources.TableStore.isInLongs("term_blk", blks))
       } else df
 
     pruned(index.postings).filter($"term".isin(terms: _*))
@@ -148,11 +152,10 @@ object BM25 {
     * (`bm25_store.py:176-188`). Old rows for re-upserted ids anti-join
     * away, the new documents' postings append, and the idf/stats
     * refresh reads only the merged postings' per-term aggregates —
-    * never the corpus text. With a term-block-partitioned store the
-    * physical rewrite touches only the blocks whose terms changed.
-    * Documents that tokenize empty are outside the index AND its
-    * corpus stats by contract ([[stats]] filters dl > 0), so upsert,
-    * delete and full rebuild agree exactly on every input. */
+    * never the corpus text. Documents that tokenize empty are outside
+    * the index AND its corpus stats by contract ([[stats]] filters
+    * dl > 0), so upsert, delete and full rebuild agree exactly on every
+    * input. */
   def upsertIndex(index: Index, docs: DataFrame, idCol: String,
                   textCol: String, p: Params = Params()): Index = {
     val newCorpus = corpus(docs, idCol, textCol)

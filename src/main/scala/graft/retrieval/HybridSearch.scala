@@ -39,8 +39,8 @@ object HybridSearch {
     *    chunks' raw embedding column (the oracle baseline; a
     *    full-corpus scan per query).
     *  - [[DenseMode.AnnLsh]]: static-pruned (tbl, bucket) probes of a
-    *    [[graft.sources.TableStore.saveAnn]] store — opens only the
-    *    probed directories.
+    *    [[graft.sources.TableStore.saveAnn]] store — reads only the
+    *    probed buckets.
     *  - [[DenseMode.AnnIvf]]: static-pruned cid probes of an IVF
     *    store ([[graft.sources.TableStore.saveIvf]] layout).
     *  - [[DenseMode.Quantized]]: exact scan over the int8 store

@@ -27,10 +27,13 @@ import graft.sources.SegmentedStore.Manifest
   * below) or direct [[handle]] calls from tests — the protocol layer is
   * deliberately thin so an HTTP front could wrap [[handle]] unchanged.
   *
-  * Scale stance: the store is the partition-pruned parquet layout of
-  * [[TableStore.save]] (chunks by organization_id, postings/idf by
-  * term_blk), so each search touches only the tenant's partitions and
-  * its query terms' posting blocks. A search collects each index's
+  * Scale stance: the store is the layout of [[TableStore]] — chunks and
+  * the LSH/HNSW sidecars one directory per tenant, postings/idf sorted
+  * by term block — so a search opens only its tenant's chunk and
+  * sidecar files, and the pushed probe and term-block filters skip
+  * the row groups and pages outside the probed buckets and the query
+  * terms' blocks. Files grow with data, not with tenants × hash keys:
+  * a small tenant is one file per table. A search collects each index's
   * top-k leg concurrently and fuses them on the driver
   * ([[HybridSearch.searchHits]]) instead of running one lazy fused
   * plan: a few small jobs in one wave, not a chain of dependent
@@ -128,8 +131,9 @@ class QueryService(
     // chunk files — land them concurrently (same collapse of the
     // fixed per-job floor as writeSegment)
     if (nEmb > 0) SegmentedStore.awaitAll(Seq(
-      // tenant-first LSH layout (org/tbl/bucket): the F3 tenant filter
-      // composes INTO the probe read as a leading partition filter
+      // tenant-clustered LSH layout (org dirs, rows sorted by tbl,
+      // bucket): the F3 tenant filter composes INTO the probe read as
+      // a partition filter ahead of the pushed probe filter
       () => TableStore.saveAnn(AnnKnn.index(embOrg,
         "id", "embedding", AnnKnn.ServingTables, AnnKnn.ServingBits,
         keepCols = Seq("organization_id")), dir),
@@ -751,10 +755,10 @@ class QueryService(
       case "ann" =>
         val m = requireManifest
         val store = sidecar("ann", annViewOpt)
-        // tenant partition filter composed INTO the probe read: with
-        // the org/tbl/bucket layout the scan opens only THIS tenant's
-        // probed directories (the semi-join scope still applies after,
-        // for workspace/collection and metadata predicates)
+        // tenant partition filter composed INTO the probe read: the
+        // scan opens only THIS tenant's files and, within them, the
+        // probed buckets' pages (the semi-join scope still applies
+        // after, for workspace/collection and metadata predicates)
         val scoped =
           if (store.columns.contains("organization_id"))
             store.filter(col("organization_id") === ctx.organizationId)

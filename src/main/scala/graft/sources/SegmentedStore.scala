@@ -35,10 +35,12 @@ import graft.operators.{AnnKnn, BM25, Hnsw, PqKnn, Quantize}
   *
   * Read path: chunks / postings / each dense sidecar are the UNION of
   * base + segment directories (bounded: ≤ [[MaxSegments]]+1 scans, each
-  * partition-pruned exactly as before — tenant dirs for chunks,
-  * term_blk for postings, (tbl,bucket) / cid for the ANN stores). PQ
-  * coarse centroids and codebook stay PINNED at the base generation —
-  * segments encode against them — and retrain at the next compaction.
+  * pruned exactly like its base counterpart — tenant dirs for chunks,
+  * the LSH and HNSW sidecars, page statistics of the sorted `term_blk`
+  * and (tbl, bucket) columns, cid dirs for PQ codes; see
+  * [[TableStore]]). PQ coarse centroids and codebook stay PINNED at the
+  * base generation — segments encode against them — and retrain at the
+  * next compaction.
   *
   * Exactness: the derived-table roll-forward is bit-identical to a
   * full recompute — docfreq merges long counts, and stats carries the
@@ -261,15 +263,14 @@ object SegmentedStore {
     }
   }
 
-  private def readUnion(spark: SparkSession, dirs: Seq[String],
-                        schema: Option[types.StructType] = None): Option[DataFrame] =
+  private def readUnion(spark: SparkSession, dirs: Seq[String]): Option[DataFrame] =
     dirs.filter(hasData(spark, _))
-      .map(d => schema.fold(spark.read)(s => spark.read.schema(s)).parquet(d))
+      .map(TableStore.read(spark, _))
       .reduceOption(_.unionByName(_, allowMissingColumns = true))
 
-  /** The stored shape of an in-memory table: partitioned writes move
-    * `term_blk` into the directory structure, so the read schema needs
-    * it appended when the hint came from a pre-write DataFrame. */
+  /** The stored shape of an in-memory term table: [[TableStore.writeTerms]]
+    * adds `term_blk`, so the read schema needs it appended when the
+    * hint came from a pre-write DataFrame. */
   private def withTermBlk(s: types.StructType): types.StructType =
     if (s.fieldNames.contains("term_blk")) s
     else s.add("term_blk", types.LongType)
@@ -299,7 +300,7 @@ object SegmentedStore {
         .getOrElse(throw new IllegalStateException(
           s"store $root has no $kind data in ${m.dataDirs.mkString(",")}"))
     def read(path: String, s: Option[types.StructType]): DataFrame =
-      s.fold(spark.read)(spark.read.schema).parquet(path)
+      TableStore.read(spark, path, s)
     IndexBundle(
       chunks = union("chunks", hint.map(_.chunks.schema)),
       postings = union("postings", hint.map(h => withTermBlk(h.postings.schema))),
@@ -324,9 +325,10 @@ object SegmentedStore {
 
   // Per-(session, storeId, kind, DIR) view memo — the unit of
   // immutability. Building a DataFrame over a partitioned dir lists
-  // every partition directory under it (org × tbl × bucket for the LSH
-  // store, org for chunks/HNSW) to construct the file index — at high
-  // tenant cardinality that listing, NOT the pruned scan, dominated
+  // every partition directory under it (one per tenant for chunks and
+  // the LSH/HNSW sidecars; org × tbl × bucket in pre-clustering LSH
+  // stores) to construct the file index — at high tenant cardinality
+  // that listing, NOT the pruned scan, dominated
   // both warm search (judge OrgBench r8: 2.2-3.2× latency at 10× orgs)
   // and, once the r9 per-GENERATION memo fixed reads, single-doc
   // ingest (judge OrgBench r9: probes 2.9 → 8.7 s at 1k → 10k orgs —
@@ -360,9 +362,11 @@ object SegmentedStore {
         "(which migrates legacy manifests) instead of constructing it"))
 
   /** Memoized single-dir read (None when the dir is missing or holds
-    * only commit markers). `schema` is used only on a memo miss; a
-    * miss without one infers (one driver job) and records the result
-    * in the per-kind schema memo for later dirs of the same store. */
+    * only commit markers) under the store schema
+    * ([[TableStore.read]]), so dirs of either layout share one memoized
+    * schema. `schema` is used only on a memo miss; a miss without one
+    * infers (one driver job) and records the result in the per-kind
+    * schema memo for later dirs of the same store. */
   private def memoizedDirRead(spark: SparkSession, epoch: String, kind: String,
                               dir: String,
                               schema: Option[types.StructType]): Option[DataFrame] = {
@@ -378,7 +382,7 @@ object SegmentedStore {
         val built =
           if (!hasData(spark, dir)) None
           else Some(
-            try schema.fold(spark.read)(s => spark.read.schema(s)).parquet(dir)
+            try TableStore.read(spark, dir, schema)
             catch {
               case e: org.apache.spark.sql.AnalysisException =>
                 throw new IllegalStateException(s"store read failed over $dir", e)
@@ -559,7 +563,7 @@ object SegmentedStore {
   /** Append one delta segment and roll the derived tables forward;
     * returns the manifest to install. Writes are O(delta) for every
     * data table (chunks, postings, LSH, int8, PQ codes, HNSW shards —
-    * partitioned exactly like their base counterparts) plus O(vocab)
+    * each through its base counterpart's writer) plus O(vocab)
     * for the docfreq/idf rewrite; nothing outside the new `seg{seq}` /
     * `derived{seq}` dirs is touched. All sinks derive from the CACHED
     * delta (materialized by the caller's chunk count), so every write
@@ -603,13 +607,11 @@ object SegmentedStore {
               .write.mode("overwrite").partitionBy("cid").parquet(s"$seg/pq")
           })
         awaitAll(Seq(
-          // same (tables, bits) and the same tenant-first layout as the
-          // base sidecar — the probe set is a static partition filter,
-          // so write and read configs must agree
-          () => AnnKnn.index(emb, "id", "embedding", m.lshTables, m.lshBits,
-              keepCols = Seq("organization_id"))
-            .write.mode("overwrite")
-            .partitionBy("organization_id", "tbl", "bucket").parquet(s"$seg/ann"),
+          // same (tables, bits) and the same tenant-clustered writer as
+          // the base sidecar — the probe set is a static filter, so
+          // write and read configs must agree
+          () => TableStore.saveAnn(AnnKnn.index(emb, "id", "embedding",
+              m.lshTables, m.lshBits, keepCols = Seq("organization_id")), seg),
           () => Quantize.quantized(emb, "id", "embedding")
             .select(col("id"), col("codes").cast("array<tinyint>").as("codes"),
               col("scale"))
@@ -630,10 +632,7 @@ object SegmentedStore {
       if (hasPostings) {
         val der = s"$root/derived$seq"
         awaitAll(Seq(
-          () => delta.postings
-            .withColumn("term_blk", TableStore.termBlock(col("term")))
-            .write.mode("overwrite").partitionBy("term_blk")
-            .parquet(s"$seg/postings"),
+          () => TableStore.writeTerms(delta.postings, s"$seg/postings"),
           () => writeDerived(spark, root, m, delta, der)))
       }
     })
@@ -772,9 +771,7 @@ object SegmentedStore {
         if (emb.isEmpty) None
         else Some(AnnKnn.index(emb, "id", "embedding", m.lshTables, m.lshBits,
           keepCols = Seq("organization_id")))
-      merged("ann", fresh).foreach(
-        _.write.mode("overwrite")
-          .partitionBy("organization_id", "tbl", "bucket").parquet(s"$seg/ann"))
+      merged("ann", fresh).foreach(TableStore.saveAnn(_, seg))
     }
 
     val quantWrite = () => {
@@ -805,14 +802,10 @@ object SegmentedStore {
 
     @volatile var hasPostings = false
     val postingsWrite = () => {
-      val fresh =
-        if (delta.postings.isEmpty) None
-        else Some(delta.postings
-          .withColumn("term_blk", TableStore.termBlock(col("term"))))
+      val fresh = if (delta.postings.isEmpty) None else Some(delta.postings)
       hasPostings = fresh.isDefined
       merged("postings", fresh).foreach(
-        _.write.mode("overwrite").partitionBy("term_blk")
-          .parquet(s"$seg/postings"))
+        TableStore.writeTerms(_, s"$seg/postings"))
       // derived roll-forward from the DELTA only: the current derived
       // dir already covers base + old segments, and folding segments
       // does not change the corpus
@@ -896,9 +889,8 @@ object SegmentedStore {
     // hangs off the cached delta chunks, so recomputing it is
     // cheaper than a parquet read-back of identical bytes
     val segPost = delta.postings
-    val mergedDf = spark.read
-      .schema(withTermBlk(delta.docFreq.schema))
-      .parquet(s"$root/${m.derived}/docfreq")
+    val mergedDf = TableStore.read(spark, s"$root/${m.derived}/docfreq",
+        Some(withTermBlk(delta.docFreq.schema)))
       .drop("term_blk")
       .select(col("term"), col("df").as("df_old"))
       .join(BM25.docFreq(segPost).select(col("term"), col("df").as("df_new")),
@@ -915,12 +907,9 @@ object SegmentedStore {
     // land the idf + stats tails concurrently off the cache
     mergedDf.cache()
     try {
-      mergedDf.withColumn("term_blk", TableStore.termBlock(col("term")))
-        .write.mode("overwrite").partitionBy("term_blk").parquet(s"$der/docfreq")
+      TableStore.writeTerms(mergedDf, s"$der/docfreq")
       awaitAll(Seq(
-        () => BM25.idfTable(mergedDf, statsDf)
-          .withColumn("term_blk", TableStore.termBlock(col("term")))
-          .write.mode("overwrite").partitionBy("term_blk").parquet(s"$der/idf"),
+        () => TableStore.writeTerms(BM25.idfTable(mergedDf, statsDf), s"$der/idf"),
         () => statsDf.coalesce(1).write.mode("overwrite").parquet(s"$der/stats")))
     } finally mergedDf.unpersist()
   }

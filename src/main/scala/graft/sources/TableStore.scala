@@ -1,7 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.functions.TextFunctions
 import graft.ingest.Pipeline.IndexBundle
@@ -10,29 +13,35 @@ import graft.operators.BM25
 /** Physical layout for the persisted engine tables (SURVEY §4 "physical
   * knobs"): the reference leans on Postgres composite indexes and
   * Qdrant payload indexes for tenant scoping (`init.sql:221-235`,
-  * `vector_store.py:151-174`); the Spark-native equivalent is
-  * directory partitioning, which turns the mandatory F3 tenant filter
-  * into partition PRUNING — a tenant-scoped query never opens another
-  * tenant's files.
+  * `vector_store.py:151-174`). The Spark-native equivalent here is a
+  * tenant directory split plus row clustering: the mandatory F3
+  * tenant filter is a partition PRUNE (a tenant-scoped query never
+  * opens another tenant's files), and every finer key is a sorted
+  * column whose Parquet row-group and page min/max statistics prune
+  * the pushed data filter — files and bytes in proportion to data, not
+  * to tenants × hash keys (REPOSE-style bound pruning; Qbeast keeps its
+  * index in file layout plus metadata the same way).
   *
   *  - `chunks/` partitioned by `organization_id` (the fact table's
   *    access path is always tenant-first)
-  *  - `postings/`, `idf/`, `docfreq/` partitioned by `term_blk` =
-  *    hash56(term) mod [[TermBlocks]] — query terms map to a handful of
-  *    blocks, so a BM25 lookup reads ≤|query| blocks of the index
-  *    instead of all of it ([[BM25.scoreFromIndex]] adds the
-  *    term_blk filter automatically when the column is present)
+  *  - `postings/`, `idf/`, `docfreq/` unpartitioned, each file sorted
+  *    by (`term_blk`, `term`) with `term_blk` = hash56(term) mod
+  *    [[TermBlocks]] kept as a column ([[writeTerms]]): query terms map
+  *    to a handful of blocks, and [[BM25.scoreFromIndex]]'s block
+  *    filter pushes down to skip every page outside them
+  *  - `ann/` (see [[saveAnn]]) one directory per tenant, rows clustered
+  *    by (tbl, bucket, id)
   *  - `stats/` is a single tiny file
   *
-  * Partition counts are bounded by design: tenants are organizations
-  * (thousands at most) and term blocks are fixed at [[TermBlocks]] —
-  * never a high-cardinality partition key.
+  * Stores written before the clustered layout (postings split into
+  * `term_blk=` directories, the tenant ANN sidecar into
+  * `organization_id=/tbl=/bucket=` directories) still open: [[read]]
+  * reads both layouts under one schema.
   */
 object TableStore {
 
-  /** Term-block fan-out for the postings/idf/docfreq layout. 64 blocks
-    * keeps per-block files large (HDFS/S3-friendly) while a typical
-    * query touches < 10. */
+  /** Term-block count for the postings/idf/docfreq `term_blk` column:
+    * a typical query touches < 10 of the 64 blocks. */
   val TermBlocks = 64
 
   def termBlock(term: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -100,43 +109,87 @@ object TableStore {
       () => bundle.chunks.hint("rebalance", "organization_id")
         .write.mode("overwrite")
         .partitionBy("organization_id").parquet(s"$root/chunks"),
-      () => bundle.postings.withColumn("term_blk", termBlock(col("term")))
-        .hint("rebalance", "term_blk")
-        .write.mode("overwrite").partitionBy("term_blk").parquet(s"$root/postings"),
-      () => bundle.idf.withColumn("term_blk", termBlock(col("term")))
-        .hint("rebalance", "term_blk")
-        .write.mode("overwrite").partitionBy("term_blk").parquet(s"$root/idf"),
-      () => bundle.docFreq.withColumn("term_blk", termBlock(col("term")))
-        .hint("rebalance", "term_blk")
-        .write.mode("overwrite").partitionBy("term_blk").parquet(s"$root/docfreq"),
+      () => writeTerms(bundle.postings, s"$root/postings"),
+      () => writeTerms(bundle.idf, s"$root/idf"),
+      () => writeTerms(bundle.docFreq, s"$root/docfreq"),
       () => bundle.stats.write.mode("overwrite").parquet(s"$root/stats")))
+
+  /** The one writer of the term-keyed tables (postings, idf, docfreq)
+    * in base generations, segments, folds and derived dirs: `term_blk`
+    * is (re)computed from `term` and every file is sorted by
+    * (term_blk, term), so a query's block and term filters prune
+    * Parquet pages by their min/max statistics instead of by
+    * directory. */
+  def writeTerms(df: DataFrame, path: String): Unit =
+    df.withColumn("term_blk", termBlock(col("term")))
+      .sortWithinPartitions("term_blk", "term")
+      .write.mode("overwrite").parquet(path)
 
   /** Load a bundle saved by [[save]]. The postings/idf keep their
     * `term_blk` column so the BM25 read path can prune blocks. */
   def load(spark: SparkSession, root: String): IndexBundle =
     graft.ingest.Pipeline.IndexBundle(
-      chunks = spark.read.parquet(s"$root/chunks"),
-      postings = spark.read.parquet(s"$root/postings"),
-      docFreq = spark.read.parquet(s"$root/docfreq"),
-      idf = spark.read.parquet(s"$root/idf"),
-      stats = spark.read.parquet(s"$root/stats"))
+      chunks = read(spark, s"$root/chunks"),
+      postings = read(spark, s"$root/postings"),
+      docFreq = read(spark, s"$root/docfreq"),
+      idf = read(spark, s"$root/idf"),
+      stats = read(spark, s"$root/stats"))
+
+  /** Read one store directory under its store schema ([[storeSchema]]),
+    * whichever layout wrote it; `schema` skips footer inference. Only
+    * a directory whose inferred types differ from the store schema (a
+    * `term_blk=` or `tbl=/bucket=` directory tree, whose partition
+    * values infer as int) is opened a second time. */
+  private[sources] def read(spark: SparkSession, dir: String,
+                            schema: Option[StructType] = None): DataFrame =
+    schema match {
+      case Some(s) => spark.read.schema(storeSchema(s)).parquet(dir)
+      case None =>
+        val df = spark.read.parquet(dir)
+        val s = storeSchema(df.schema)
+        if (s == df.schema) df else spark.read.schema(s).parquet(dir)
+    }
+
+  /** The store schema of a table: the clustering keys `tbl`, `bucket`
+    * and `term_blk` are long, as their writers store them, whether a
+    * directory holds them as data columns or, in the directory
+    * layouts, as partition values (which infer as int). One schema for
+    * both layouts is what lets a union (and the schema memo shared by
+    * every dir of a store) span them. */
+  private[sources] def storeSchema(s: StructType): StructType =
+    StructType(s.fields.map(f =>
+      if (Set("tbl", "bucket", "term_blk")(f.name)) f.copy(dataType = LongType) else f))
+
+  /** `c IN values` over a clustering key, compared as long (an int
+    * column matches too): Parquet gets it as a pushed `In` filter, but
+    * the generated code reads the values from a reference object
+    * instead of inlining them as constants the way `isin` and `===`
+    * do. A per-request filter on a data column is then the same code
+    * for every request and compiles once, not once per distinct value
+    * set. */
+  def isInLongs(c: String, values: Iterable[Long]): Column =
+    Bridge.column(InSet(Bridge.expression(col(c).cast("long")), values.toSet[Any]))
 
   /** ANN index layout: the [[graft.operators.AnnKnn.index]] posting
-    * table partitioned by (tbl, bucket) — tables × 2^bits directories
-    * (bounded by construction: 4 × 64 default). A query's L probe
-    * buckets become a static partition filter
-    * ([[graft.operators.AnnKnn.topKFromStore]]), so the scan opens
-    * only those directories — the HNSW-replacement read path with
-    * physical pruning, not just a logical equi-join. An index built
-    * with an `organization_id` passthrough partitions TENANT-FIRST
-    * (org/tbl/bucket): the mandatory F3 tenant filter then prunes
-    * before the probe filter, so a tenant's query opens only its own
-    * probed directories — never another tenant's buckets. */
-  def saveAnn(index: DataFrame, root: String): Unit = {
-    val parts =
-      if (index.columns.contains("organization_id"))
-        Seq("organization_id", "tbl", "bucket")
-      else Seq("tbl", "bucket")
+    * table. A query's L probe buckets become a static
+    * `tbl = t AND bucket = b` filter
+    * ([[graft.operators.AnnKnn.storeCandidates]]).
+    *
+    * An index built with an `organization_id` passthrough (the serving
+    * store, its segments and folds) is written one directory per
+    * TENANT, each tenant's rows in one rebalanced task and sorted by
+    * (tbl, bucket, id): the F3 tenant filter is a partition prune, and
+    * the probe filter is a pushed data filter that skips row groups
+    * and pages by their (tbl, bucket) min/max statistics. A small
+    * tenant is one file; a large one still reads only its probed
+    * buckets' pages. `tbl` is stored as long, like `bucket`, so the
+    * probe filter is code-stable ([[isInLongs]]).
+    *
+    * Without the tenant column the index keeps the (tbl, bucket)
+    * directory layout — tables × 2^bits directories, bounded by
+    * construction (4 × 64 default) — where the probe filter is a
+    * partition prune. */
+  def saveAnn(index: DataFrame, root: String): Unit =
     // REBALANCE by the partition key before the partitioned write
     // (guide §6): without it every upstream task writes its own file
     // into every directory it touches — an N_tasks × N_dirs small-file
@@ -144,12 +197,18 @@ object TableStore {
     // into whole output files AND splits skewed keys, so write
     // parallelism survives low-cardinality keys at scale (a hard
     // repartition(key) would collapse it to one task per key).
-    index.hint("rebalance", parts: _*).write.mode("overwrite")
-      .partitionBy(parts: _*).parquet(s"$root/ann")
-  }
+    if (index.columns.contains("organization_id"))
+      index.withColumn("tbl", col("tbl").cast("long"))
+        .hint("rebalance", "organization_id")
+        .sortWithinPartitions("organization_id", "tbl", "bucket", "id")
+        .write.mode("overwrite")
+        .partitionBy("organization_id").parquet(s"$root/ann")
+    else
+      index.hint("rebalance", "tbl", "bucket").write.mode("overwrite")
+        .partitionBy("tbl", "bucket").parquet(s"$root/ann")
 
   def loadAnn(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(s"$root/ann")
+    read(spark, s"$root/ann")
 
   /** Incremental ANN upsert: bucket the delta
     * ([[graft.operators.AnnKnn.index]] on the new rows only) and

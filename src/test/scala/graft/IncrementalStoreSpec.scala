@@ -170,16 +170,20 @@ class IncrementalStoreSpec extends SparkSpec {
     assert(chunkScans.size >= 2, s"expected base+segment scans: $chunkScans")
     assert(chunkScans.forall(_.exists(_.contains("organization_id"))), chunkScans)
 
-    // term-block filter prunes EVERY postings scan in the union — the
-    // BM25 read path touches ≤|query| blocks of each segment, never
-    // the rest (the property that keeps query cost flat as segments
-    // accumulate)
+    // term-block filter pushes into EVERY postings scan in the union —
+    // each segment's files are sorted by term_blk, so the BM25 read
+    // path reads ≤|query| blocks' pages of each segment, never the
+    // rest (the property that keeps query cost flat as segments
+    // accumulate; PlanSpec pins the page pruning by scan metrics)
     val blks = Seq("prismatic", "lenses")
       .map(graft.sources.TableStore.termBlockJvm).distinct
-    val postScans = partFilters(
-      view.postings.filter(col("term_blk").isin(blks: _*)))
+    val postScans = view.postings.filter(col("term_blk").isin(blks: _*))
+      .queryExecution.sparkPlan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+          s.metadata("PushedFilters")
+      }
     assert(postScans.size >= 2, s"expected base+segment scans: $postScans")
-    assert(postScans.forall(_.exists(_.contains("term_blk"))), postScans)
+    assert(postScans.forall(_.contains("term_blk")), postScans)
   }
 
   test("superseded dirs get one-flip grace; crash orphans GC at startup") {

@@ -12,6 +12,26 @@ class PlanSpec extends SparkSpec {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  private def scans(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
+    df.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+
+  private def scansOf(table: String, ss: Seq[org.apache.spark.sql.execution.FileSourceScanExec]) =
+    ss.filter(_.relation.location.rootPaths.exists(_.getName == table))
+
+  /** Run `df` and return the rows its scans of `table` produced: what
+    * they read after partition, row-group and page pruning (record-
+    * level filtering stays off, so a surviving page counts whole). */
+  private def scannedRows(df: org.apache.spark.sql.DataFrame, table: String): Long = {
+    df.collect()
+    scansOf(table, new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }).map(_.metrics("numOutputRows").value).sum
+  }
+
   test("filter+topk pushes predicates into the parquet scan (F1/T1)") {
     val p = plan(Relational.filterTopK(spark, sf0001))
     assert(p.contains("PushedFilters: [IsNotNull(l_returnflag)"), p.take(2000))
@@ -59,7 +79,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("tenant-partitioned store prunes partitions for scoped scans (F3 physical)") {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions._
     import spark.implicits._
     val docs = Seq(
       (1L, "payment terms are net thirty days", "org_aaa"),
@@ -75,11 +95,30 @@ class PlanSpec extends SparkSpec {
     val partLine = p.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
     assert(partLine.contains("organization_id"), p.take(2000))
 
-    // BM25 read path prunes term blocks of the postings layout
-    val p2 = plan(graft.operators.BM25.scoreFromIndex(loaded.bm25Index, Seq("payment")))
-    val partLine2 = p2.linesIterator.find(l =>
-      l.contains("PartitionFilters") && l.contains("term_blk")).getOrElse("")
-    assert(partLine2.nonEmpty, p2.take(2000))
+    // BM25 read path prunes term blocks of the postings layout: the
+    // block and term filters push into the scan, and over a postings
+    // table of several pages (written by the base-generation writer)
+    // the term read returns a fraction of its rows
+    val big = spark.range(16000).select(col("id").as("doc_id"),
+      concat_ws(" ", (0 until 30).map(i => concat(lit("w"),
+        pmod(hash(col("id"), lit(i)), lit(3000)).cast("string"))): _*).as("text"))
+    val idx = graft.operators.BM25.buildIndex(big, "doc_id", "text")
+    val root2 = java.nio.file.Files.createTempDirectory("graft_terms").toString
+    graft.sources.TableStore.save(bundle.copy(postings = idx.postings,
+      docFreq = graft.operators.BM25.docFreq(idx.postings), idf = idx.idf,
+      stats = idx.stats), root2)
+    val terms = graft.sources.TableStore.load(spark, root2).bm25Index
+    val q = graft.operators.BM25.scoreFromIndex(terms, Seq("w7"))
+    val post = scansOf("postings", scans(q))
+    assert(post.size == 1, scans(q).map(_.relation.location.rootPaths))
+    assert(post.head.dataFilters.exists(_.references.exists(_.name == "term_blk")),
+      post.head.dataFilters)
+    assert(post.head.metadata("PushedFilters").contains("term_blk"), post.head.metadata)
+    val postRows = spark.read.parquet(s"$root2/postings").count()
+    val read = scannedRows(q.select(col("id")), "postings")
+    assert(postRows > 400000 && read > 0 && read * 2 < postRows,
+      s"term read scanned $read of $postRows postings rows")
+    assert(q.count() > 0)
   }
 
   test("ANN kNN joins buckets, never nested-loops the corpus (T2 scale path)") {
@@ -145,37 +184,43 @@ class PlanSpec extends SparkSpec {
   }
 
   test("tenant-first ANN store: tenant AND probe filters prune one scan (r4 ask #9)") {
-    import org.apache.spark.sql.functions.{col, when}
+    import org.apache.spark.sql.functions._
     import graft.operators.AnnKnn
     import graft.sources.TableStore
-    val e = graft.Tables(spark, sf0001, "embeddings").select(
-      col("vec_id").cast("string").as("id"), col("embedding"),
-      when(col("vec_id") % 2 === 0, "org_a").otherwise("org_b")
-        .as("organization_id"))
+    // org_big spans several Parquet pages of one file; org_small is a
+    // few hundred vectors
+    val e = spark.range(120400).select(col("id").cast("string").as("id"),
+      array((1 to 8).map(i => sin(col("id") * lit(i * 0.37))): _*).as("embedding"),
+      when(col("id") < 400, "org_small").otherwise("org_big").as("organization_id"))
     val root = java.nio.file.Files.createTempDirectory("graft_ann_org").toString
     TableStore.saveAnn(AnnKnn.index(e, "id", "embedding",
       keepCols = Seq("organization_id")), root)
-    val qvec = graft.Tables(spark, sf0001, "embeddings")
-      .filter(col("vec_id") === 0)
-      .select(col("embedding").cast("array<double>"))
-      .collect().head.getSeq[Double](0).toArray
+    val qvec = (1 to 8).map(i => math.sin(5000.0 * i * 0.37)).toArray
     // the serving shape: tenant filter composed into the store BEFORE
-    // the probe filter — one scan, two partition-pruning predicates.
-    // Inspect the scan node's partitionFilters directly: the rendered
-    // plan string truncates long filter lists at ~100 chars, so a
-    // substring assertion flakes with expression-id width.
+    // the probe filter — one scan, the tenant filter a partition
+    // filter, the probe filter pushed into the Parquet reader
     val scoped = TableStore.loadAnn(spark, root)
-      .filter(col("organization_id") === "org_a")
-    val partFilters = AnnKnn.storeCandidates(scoped, qvec)
-      .queryExecution.sparkPlan.collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-      }.flatMap(_.partitionFilters).map(_.toString)
+      .filter(col("organization_id") === "org_big")
+    val scan = scans(AnnKnn.storeCandidates(scoped, qvec))
+    assert(scan.size == 1, scan)
+    val partFilters = scan.head.partitionFilters.map(_.toString)
     assert(partFilters.exists(_.contains("organization_id")), partFilters)
-    assert(partFilters.exists(_.contains("bucket")), partFilters)
-    // and the scoped candidates are genuinely tenant-pure
-    val cands = AnnKnn.storeCandidates(scoped, qvec)
+    val dataCols = scan.head.dataFilters.flatMap(_.references.map(_.name)).toSet
+    assert(Set("tbl", "bucket").subsetOf(dataCols), scan.head.dataFilters)
+    val pushed = scan.head.metadata("PushedFilters")
+    assert(pushed.contains("tbl") && pushed.contains("bucket"), pushed)
+    // and the probe reads a fraction of the tenant's rows: the writer
+    // clusters them by (tbl, bucket), so page statistics prune
+    val tenantRows = scoped.count()
+    val read = scannedRows(AnnKnn.storeCandidates(scoped, qvec).select(col("id")), "ann")
+    assert(tenantRows == 4L * 120000 && read > 0 && read * 2 < tenantRows,
+      s"probe scanned $read of $tenantRows tenant rows")
+    // the scoped candidates are genuinely tenant-pure
+    val small = TableStore.loadAnn(spark, root)
+      .filter(col("organization_id") === "org_small")
+    val cands = AnnKnn.storeCandidates(small, qvec)
       .select(col("id")).collect().map(_.getString(0))
-    assert(cands.nonEmpty && cands.forall(_.toLong % 2 == 0))
+    assert(cands.nonEmpty && cands.forall(_.toLong < 400))
   }
 
   test("ANN store append: delta visible, no pre-existing file rewritten") {
