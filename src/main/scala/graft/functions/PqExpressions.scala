@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
@@ -32,8 +32,17 @@ import org.apache.spark.sql.types._
   * i-order accumulation; ties → smaller pid. The round-6 matches the
   * house tie-stability idiom (AnnKnn's round(dot, 6)): both engines
   * compare at 1e-6 granularity, so a last-ulp disagreement in the sum
-  * cannot flip an argmin. A production build chasing encode throughput
-  * could drop the rounding — it exists for cross-engine replay.
+  * cannot flip an argmin, and the oracle gates replay the codes
+  * exactly.
+  *
+  * The rounding costs one or two calls per subspace, not k: the
+  * kernel takes all k raw distances, bounds the winner by the raw
+  * minimum and rounds only the candidates inside
+  * [[VectorFunctions.round6Margin]] of it (bound-then-round, exact —
+  * the argument is on `round6Margin`). Rounding every candidate
+  * through `BigDecimal` cost far more than the distances themselves
+  * and set the time of the serving store's codebook training and code
+  * writes.
   */
 object Pq {
 
@@ -44,27 +53,51 @@ object Pq {
   def encode(x: ArrayData, cb: Array[Double], m: Int, sub: Int, k: Int): ArrayData =
     new GenericArrayData(encodeArr(x, cb, m, sub, k))
 
+  /** The one encode loop: per subspace, all k raw distances and their
+    * minimum, then round-6 only the candidates within
+    * [[VectorFunctions.round6Margin]] of it; the smallest rounded value
+    * wins, ties → smaller pid. Dims past the vector's end read as 0. A
+    * NaN or ±Inf distance is rounded where it occurs, so it throws the
+    * `NumberFormatException` of `BigDecimal.valueOf` at the same
+    * (subspace, pid) as a per-candidate round would. */
   def encodeArr(x: ArrayData, cb: Array[Double], m: Int, sub: Int, k: Int): Array[Int] = {
     val d = x.numElements()
     val codes = new Array[Int](m)
+    val xs = new Array[Double](sub)
+    val dist = new Array[Double](k)
     var j = 0
     while (j < m) {
-      var best = 0
-      var bestD = Double.PositiveInfinity
+      var i = 0
+      while (i < sub) {
+        val xi = j * sub + i
+        xs(i) = if (xi < d) x.getDouble(xi) else 0.0
+        i += 1
+      }
+      var dMin = Double.PositiveInfinity
       var p = 0
       while (p < k) {
         val base = (j * k + p) * sub
         var d2 = 0.0
-        var i = 0
+        i = 0
         while (i < sub) {
-          val xi = j * sub + i
-          val xv = if (xi < d) x.getDouble(xi) else 0.0
-          val diff = xv - cb(base + i)
+          val diff = xs(i) - cb(base + i)
           d2 += diff * diff
           i += 1
         }
-        val r = VectorFunctions.round6Jvm(d2)
-        if (r < bestD) { bestD = r; best = p }
+        if (!java.lang.Double.isFinite(d2)) VectorFunctions.round6Jvm(d2)
+        dist(p) = d2
+        if (d2 < dMin) dMin = d2
+        p += 1
+      }
+      val cut = dMin + VectorFunctions.round6Margin(dMin)
+      var best = 0
+      var bestD = Double.PositiveInfinity
+      p = 0
+      while (p < k) {
+        if (dist(p) <= cut) {
+          val r = VectorFunctions.round6Jvm(dist(p))
+          if (r < bestD) { bestD = r; best = p }
+        }
         p += 1
       }
       codes(j) = best
@@ -73,34 +106,9 @@ object Pq {
     codes
   }
 
-  /** JVM twin of [[encode]] for driver-side vectors. */
-  def encodeJvm(v: Array[Double], cb: Array[Double], m: Int, sub: Int, k: Int): Array[Int] = {
-    val codes = new Array[Int](m)
-    var j = 0
-    while (j < m) {
-      var best = 0
-      var bestD = Double.PositiveInfinity
-      var p = 0
-      while (p < k) {
-        val base = (j * k + p) * sub
-        var d2 = 0.0
-        var i = 0
-        while (i < sub) {
-          val xi = j * sub + i
-          val xv = if (xi < v.length) v(xi) else 0.0
-          val diff = xv - cb(base + i)
-          d2 += diff * diff
-          i += 1
-        }
-        val r = VectorFunctions.round6Jvm(d2)
-        if (r < bestD) { bestD = r; best = p }
-        p += 1
-      }
-      codes(j) = best
-      j += 1
-    }
-    codes
-  }
+  /** JVM twin of [[encode]] for driver-side vectors: the same loop. */
+  def encodeJvm(v: Array[Double], cb: Array[Double], m: Int, sub: Int, k: Int): Array[Int] =
+    encodeArr(UnsafeArrayData.fromPrimitiveArray(v), cb, m, sub, k)
 
   /** Per-query ADC lookup table: `lut[j·k + p] = <q_j, c_{j,p}>`,
     * sequential i-order dots — m·k·sub multiplies on the driver (a

@@ -71,38 +71,54 @@ case class DotProduct(left: Expression, right: Expression)
 /** IVF coarse-assignment kernel: nearest centroid by max ROUNDED dot
   * (6 dp, ties → larger cid) — the fused codegen form of
   * `array_max(transform(typedLit(cents), c => struct(round(dot(vec,
-  * c.cvec), 6), c.cid)))`, which allocated one struct per centroid per
-  * row and evaluated the dot + round through interpreted lambda
-  * dispatch (k·d multiplies per row is the IVF build's dominant
-  * term). Replication notes:
+  * c.cvec), 6), c.cid)))`, one call per row of every IVF and IVF-PQ
+  * index build. Replication notes:
   *
   *  - the dot is [[DotProduct]]'s min-length loop;
-  *  - each dot rounds through BigDecimal.valueOf HALF_UP *before* the
-  *    comparison, because 6-dp ties decide assignments (two dots that
-  *    round equal must tie → larger cid, exactly as array_max's
-  *    struct ordering broke them);
-  *  - double compare via `>` / `==` — reachable values are finite and
+  *  - the comparison is on dots rounded HALF_UP to 6 dp, because 6-dp
+  *    ties decide assignments (two dots that round equal tie → larger
+  *    cid, exactly as array_max's struct ordering broke them), and the
+  *    returned `cdot` is the winner's rounded dot;
+  *  - bound-then-round: all k raw dots first, then only the centroids
+  *    within [[VectorFunctions.round6Margin]] of the raw maximum are
+  *    rounded (usually one) — exact, since any other dot rounds
+  *    strictly below the maximum's round. A NaN or ±Inf dot is rounded
+  *    where it occurs and throws `BigDecimal.valueOf`'s
+  *    `NumberFormatException`, as a per-centroid round would;
+  *  - double compare via `>` / `==` — rounded values are finite and
   *    BigDecimal rounding never yields -0.0 or NaN, so the primitive
   *    compare equals Spark's SQL double ordering on this domain. */
 object IvfAssignKernel {
   def eval(vec: ArrayData, cvecs: Array[Array[Double]],
            cids: Array[Long]): InternalRow = {
-    var bestDot = java.lang.Double.NEGATIVE_INFINITY
-    var bestCid = java.lang.Long.MIN_VALUE
-    var first = true
+    val k = cvecs.length
+    val dots = new Array[Double](k)
+    var maxDot = java.lang.Double.NEGATIVE_INFINITY
     var c = 0
-    while (c < cvecs.length) {
+    while (c < k) {
       val cv = cvecs(c)
       val n = java.lang.Math.min(vec.numElements(), cv.length)
       var s = 0.0
       var i = 0
       while (i < n) { s += vec.getDouble(i) * cv(i); i += 1 }
-      val d = java.math.BigDecimal.valueOf(s)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-      if (first || d > bestDot || (d == bestDot && cids(c) > bestCid)) {
-        bestDot = d
-        bestCid = cids(c)
-        first = false
+      if (!java.lang.Double.isFinite(s)) VectorFunctions.round6Jvm(s)
+      dots(c) = s
+      if (s > maxDot) maxDot = s
+      c += 1
+    }
+    val cut = maxDot - VectorFunctions.round6Margin(maxDot)
+    var bestDot = java.lang.Double.NEGATIVE_INFINITY
+    var bestCid = java.lang.Long.MIN_VALUE
+    var first = true
+    c = 0
+    while (c < k) {
+      if (dots(c) >= cut) {
+        val d = VectorFunctions.round6Jvm(dots(c))
+        if (first || d > bestDot || (d == bestDot && cids(c) > bestCid)) {
+          bestDot = d
+          bestCid = cids(c)
+          first = false
+        }
       }
       c += 1
     }
@@ -659,6 +675,27 @@ object VectorFunctions {
   def round6Jvm(x: Double): Double =
     java.math.BigDecimal.valueOf(x)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** How far above a raw minimum (below a raw maximum) a candidate can
+    * lie and still round-6 ([[round6Jvm]]) to the same value: 2e-6 plus
+    * eight ulps of `x`. Beyond it the candidate rounds strictly past
+    * `round6Jvm(x)`, so an argmin/argmax over rounded values needs to
+    * round only the candidates inside — exact, not approximate:
+    *
+    *  - `round6Jvm` is monotone: `Double.toString` (the decimal behind
+    *    `BigDecimal.valueOf`) rounds back to its double, so it is
+    *    strictly monotone, and HALF_UP to 6 dp and the correctly
+    *    rounded `doubleValue` are non-decreasing;
+    *  - it moves a value by at most 5e-7 plus half an ulp on each side
+    *    of the decimal: the decimal lies within half an ulp of x, the
+    *    6-dp round moves it by ≤ 5e-7, `doubleValue` by ≤ half an ulp;
+    *  - so two values that round equal lie within 1e-6 plus a few ulps
+    *    of each other, and by monotonicity a value farther away rounds
+    *    strictly apart.
+    *
+    * The 2e-6 leaves slack for the ulps of values up to ~1e-6 away and
+    * for the addition that forms the cut. */
+  def round6Margin(x: Double): Double = 2e-6 + 8 * java.lang.Math.ulp(x)
 
   /** DuckDB-SQL twin of [[hyperplaneBuckets]] for one table id `t`
     * (a BIGINT SQL expression/column reference), over a DOUBLE[] column

@@ -249,7 +249,7 @@ object AnnKnn {
     // struct expressions each embedding a d-dim literal array are
     // still worse: they blow the generated method past codegen limits,
     // measured 2-3× slower.) Same max-rounded-dot / ties-to-larger-cid
-    // rule, parity pinned in AnnSpec.
+    // rule, parity pinned in AnnRecallSpec and BoundThenRoundSpec.
     val best = VectorFunctions.ivfAssign(col("vec"),
       cents.map(_._1).toSeq, cents.map(_._2).toSeq)
     data.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("vec"))

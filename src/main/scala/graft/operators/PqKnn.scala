@@ -81,14 +81,14 @@ object PqKnn {
       .select(col(vecCol).cast("array<double>"))
       .collect().map(_.getSeq[Double](0)).toSeq
 
-  /** [[hashSampledRows]] as a coarse-centroid table: (cid, cvec) with
-    * dense cids 0..k-1 in hash order. */
-  def hashSampledCentroids(data: DataFrame, idCol: String, vecCol: String,
-                           k: Int = K): DataFrame = {
-    val spark = data.sparkSession
+  /** A coarse-centroid table (cid, cvec) from driver rows, dense cids
+    * 0..n-1 in row order. The serving store passes the first [[K]] rows
+    * of its 256-row [[hashSampledRows]] sample: the (xxhash64(id), id)
+    * order is total, so they are exactly the rows a K-row sample takes,
+    * and one sample pass serves both centroids and codebook. */
+  def centroidsFrom(spark: SparkSession, rows: Seq[Seq[Double]]): DataFrame = {
     import spark.implicits._
-    hashSampledRows(data, idCol, vecCol, k).zipWithIndex
-      .map { case (v, i) => (i.toLong, v) }.toDF("cid", "cvec")
+    rows.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("cid", "cvec")
   }
 
   /** Lloyd-refined per-subspace codebook: start from [[sampledCodebook]]

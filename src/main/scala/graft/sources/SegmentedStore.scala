@@ -760,10 +760,14 @@ object SegmentedStore {
     }
 
     // phase 1 — everything except HNSW, concurrently: each write is a
-    // stream of old-segment rows ∪ freshly-encoded delta rows
+    // stream of old-segment rows ∪ freshly-encoded delta rows. The
+    // union keeps one task per folded dir, so every table takes its
+    // base writer's rebalance: files in proportion to data, not to the
+    // number of folded inputs
     val chunksWrite = () =>
       merged("chunks", Some(delta.chunks)).foreach(
-        _.write.mode("overwrite").partitionBy("organization_id")
+        _.hint("rebalance", "organization_id")
+          .write.mode("overwrite").partitionBy("organization_id")
           .parquet(s"$seg/chunks"))
 
     val annWrite = () => {
@@ -781,7 +785,8 @@ object SegmentedStore {
           .select(col("id"), col("codes").cast("array<tinyint>").as("codes"),
             col("scale")))
       merged("quantized", fresh).foreach(
-        _.write.mode("overwrite").parquet(s"$seg/quantized"))
+        _.hint("rebalance").sortWithinPartitions("id")
+          .write.mode("overwrite").parquet(s"$seg/quantized"))
     }
 
     val base = s"$root/${m.base}"
@@ -797,15 +802,16 @@ object SegmentedStore {
                 TableStore.packPidCodes(col("codes")).as("codes")))
           }
         merged("pq", fresh).foreach(
-          _.write.mode("overwrite").partitionBy("cid").parquet(s"$seg/pq"))
+          _.hint("rebalance", "cid")
+            .write.mode("overwrite").partitionBy("cid").parquet(s"$seg/pq"))
       }
 
     @volatile var hasPostings = false
     val postingsWrite = () => {
       val fresh = if (delta.postings.isEmpty) None else Some(delta.postings)
       hasPostings = fresh.isDefined
-      merged("postings", fresh).foreach(
-        TableStore.writeTerms(_, s"$seg/postings"))
+      merged("postings", fresh).foreach(p =>
+        TableStore.writeTerms(p.hint("rebalance"), s"$seg/postings"))
       // derived roll-forward from the DELTA only: the current derived
       // dir already covers base + old segments, and folding segments
       // does not change the corpus
@@ -904,12 +910,15 @@ object SegmentedStore {
     // maintenance is O(vocab) and not O(delta): every term's idf0
     // shifts when n_docs does, so the floor can't roll forward);
     // cache it, materialize it once with the docfreq write, then
-    // land the idf + stats tails concurrently off the cache
+    // land the idf + stats tails concurrently off the cache. Both term
+    // tables rebalance: the cached join keeps its shuffle width, which
+    // would otherwise set their file counts
     mergedDf.cache()
     try {
-      TableStore.writeTerms(mergedDf, s"$der/docfreq")
+      TableStore.writeTerms(mergedDf.hint("rebalance"), s"$der/docfreq")
       awaitAll(Seq(
-        () => TableStore.writeTerms(BM25.idfTable(mergedDf, statsDf), s"$der/idf"),
+        () => TableStore.writeTerms(BM25.idfTable(mergedDf, statsDf).hint("rebalance"),
+          s"$der/idf"),
         () => statsDf.coalesce(1).write.mode("overwrite").parquet(s"$der/stats")))
     } finally mergedDf.unpersist()
   }

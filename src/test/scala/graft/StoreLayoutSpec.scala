@@ -65,8 +65,9 @@ class StoreLayoutSpec extends SparkSpec {
 
     // per table: the directory budget (tenant-split tables one dir per
     // tenant, PQ codes one per coarse centroid, the rest none) and a
-    // file budget of that plus one file per write task — a fold's
-    // tasks are its folded segments plus the delta
+    // file budget of one file per directory plus one — a fold
+    // rebalances like the base writers, so its files do not grow with
+    // the number of folded segments
     val tenantSplit = Set("chunks", "ann", "hnsw")
     val failures = for {
       d <- dirs
@@ -75,7 +76,7 @@ class StoreLayoutSpec extends SparkSpec {
       name = table.getFileName.toString
       (files, subdirs) = layout(table)
       dirBudget = if (tenantSplit(name)) tenants else if (name == "pq") PqKnn.K else 0
-      if subdirs > dirBudget || files > dirBudget + SegmentedStore.MaxSegments + 1 ||
+      if subdirs > dirBudget || files > math.max(dirBudget, 1) + 1 ||
         files == 0
     } yield s"$d/$name: $files files in $subdirs dirs (budget $dirBudget dirs)"
     assert(failures.isEmpty, failures.mkString("\n"))
