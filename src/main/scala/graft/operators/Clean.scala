@@ -64,10 +64,12 @@ object Clean {
     * in more than one place survives only at its smallest (id, pos)
     * occurrence (C4's span-dedup semantics at line granularity).
     * Returns (id, n_kept, cleaned) with each doc's surviving lines
-    * rejoined in original order. Empty lines are not dedup keys (a
-    * blank separator is not boilerplate). */
+    * rejoined in original order, plus the `keep` columns of `docs`
+    * passed through unchanged (as in [[lineClean]]). Empty lines are
+    * not dedup keys (a blank separator is not boilerplate). */
   def dedupRepeatedLines(docs: DataFrame, idCol: String,
-                         textCol: String): DataFrame = {
+                         textCol: String,
+                         keep: Seq[String] = Nil): DataFrame = {
     val occ = docs.select(col(idCol).as("__id"),
         posexplode(split(col(textCol), "\n")).as(Seq("pos", "line")))
       .withColumn("lh", md5(col("line")))
@@ -88,10 +90,11 @@ object Clean {
         graft.functions.TextFunctions.joinSortedLines(
           collect_list(struct(col("pos"), col("line")))).as("cleaned"))
     // a doc whose every line was boilerplate still exists — as empty
-    docs.select(col(idCol).as("__id")).join(survivors, Seq("__id"), "left")
-      .select(col("__id").as(idCol),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("cleaned"), lit("")).as("cleaned"))
+    docs.select(col(idCol).as("__id") +: keep.map(col): _*)
+      .join(survivors, Seq("__id"), "left")
+      .select(col("__id").as(idCol) +:
+        coalesce(col("n_kept"), lit(0L)).as("n_kept") +:
+        coalesce(col("cleaned"), lit("")).as("cleaned") +: keep.map(col): _*)
   }
 
   /** Cross-document repeated-SPAN scrub: remove every token covered by

@@ -863,6 +863,18 @@ object Curation {
       sel.as("selected"))
   }
 
+  /** Unpersist the checkpointed RDD under a `localCheckpoint()`ed
+    * frame — the only handle that actually frees the blocks
+    * (Dataset.unpersist only consults the plan cache, which a
+    * checkpoint never enters). Pass the checkpointed frame itself: it
+    * frees every checkpoint its plan reads. */
+  def releaseLocalCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed.foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(false); ()
+      case _ => ()
+    }
+
   /** Shared DSIR scoring: (id, logw, gumbel, score) per doc. */
   private def dsirScores(docs: DataFrame, idCol: String, toksCol: String,
                          targetCol: String, buckets: Int): DataFrame = {

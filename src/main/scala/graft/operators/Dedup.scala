@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 import graft.functions.{HashFunctions, TextFunctions, VectorFunctions}
@@ -66,17 +67,26 @@ object Dedup {
   /** LSH banding: explode signatures into (band, band_key) buckets and
     * self-join — candidates are pairs sharing any band. bandsRows = (b
     * bands, r rows), k = b*r. */
-  def lshCandidates(sigs: DataFrame, bands: Int, rows: Int): DataFrame = {
+  def lshCandidates(sigs: DataFrame, bands: Int, rows: Int): DataFrame =
+    lshCandidatesStaged(sigs, bands, rows)._1
+
+  /** [[lshCandidates]] with a handle that releases its cached band
+    * table: a long-lived caller calls it once every consumer of the
+    * candidates is materialized, for the reason [[jaccardVerifyStaged]]
+    * gives. */
+  def lshCandidatesStaged(sigs: DataFrame, bands: Int,
+                          rows: Int): (DataFrame, () => Unit) = {
     // materialize before the self-join — otherwise both join sides
     // recompute the whole tokenize→shingle→minhash pipeline (at cluster
     // scale this intermediate is persisted/checkpointed the same way)
     val b = banded(sigs, bands, rows).cache()
-    b.as("a").join(b.as("b"),
+    val cands = b.as("a").join(b.as("b"),
         col("a.band") === col("b.band") &&
           col("a.band_key") === col("b.band_key") &&
           col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
+    (cands, () => { b.unpersist(false); () })
   }
 
   /** Incremental (delta) LSH candidates: NEW-batch signatures joined
@@ -309,17 +319,22 @@ object Dedup {
       }), "clusters() requires integral id_a/id_b columns (map string ids " +
         "to a dense numeric key first, e.g. hash56 or zipWithIndex)")
     }
-    // cache before the size probe: `pairs` is typically the OUTPUT of
-    // the whole minhash→LSH→verify pipeline, and count() + the
-    // follow-up collect/edges-build would otherwise execute that
-    // lineage twice (measured ~2× on the q56 gate)
-    val cached = pairs.cache()
-    val cnt = cached.count()
-    if (cnt <= driverThreshold) {
-      val out = clustersDriver(cached)
-      cached.unpersist()
-      return out
+    // one bounded collect decides the path AND feeds the driver path:
+    // at most t + 1 edges reach the driver, so t + 1 rows means "over
+    // the threshold". The limit runs through the plan's RDD (a local
+    // limit per partition, one single-partition shuffle) — one job
+    // past the pair lineage's own stages, where `limit(n).collect()`
+    // scans partitions in growing rounds, one job each
+    val t = math.min(driverThreshold, Int.MaxValue - 1L).toInt
+    val bounded = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
+      .limit(t + 1).queryExecution
+    val es = SQLExecution.withNewExecutionId(bounded, Some("collect")) {
+      bounded.toRdd.map(r => (r.getLong(0), r.getLong(1))).collect()
     }
+    if (es.length <= driverThreshold) return clustersDriver(pairs.sparkSession, es)
+    // the distributed path reads the pairs on both union sides: cache
+    // so the pair lineage runs once more, not twice
+    val cached = pairs.cache()
     val edges = cached.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(cached.select(col("id_b").as("src"), col("id_a").as("dst")))
       .distinct().cache()
@@ -387,11 +402,9 @@ object Dedup {
   /** Driver union-find with path compression + union-by-min: the
     * small-graph fast path of [[clusters]] (same output contract:
     * (id, cluster = component min id)). */
-  private def clustersDriver(pairs: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
+  private def clustersDriver(spark: org.apache.spark.sql.SparkSession,
+                             es: Array[(Long, Long)]): DataFrame = {
     import spark.implicits._
-    val es = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x

@@ -28,10 +28,28 @@ import graft.functions.TextFunctions
   *
   * Every stage is the oracle-gated primitive (q63, q80, q81, q28,
   * q29/q30/q56, q57, q59, q82); this object only sequences them and
-  * reports per-stage survivor counts. Each stage's output feeds the
-  * next as a plain DataFrame, so Catalyst fuses adjacent row-local
-  * stages (scrub + clean run in one pass over the corpus) and the
-  * shuffling stages keep their individually-asserted physical shapes.
+  * reports per-stage survivor counts. Up to tokenization each stage's
+  * output feeds the next as a plain DataFrame, so Catalyst fuses
+  * adjacent row-local stages (scrub + clean run in one pass over the
+  * corpus) and the shuffling stages keep their individually-asserted
+  * physical shapes. The row-local stages carry `stratum` through as a
+  * passthrough column instead of joining it back by id, so the
+  * pre-token plan holds each upstream stage once per real consumer.
+  *
+  * The token frame is the one seam every later stage reads (minhash
+  * signatures, Jaccard verify, the canonical filter, and through it
+  * decontamination, sampling and packing). It is materialized once by
+  * an eager `localCheckpoint` and handed on as a lineage-free LEAF, so
+  * every plan from near-dedup on is analysed, optimised, re-optimised
+  * by AQE and cache-matched over one node instead of over the whole
+  * upstream lineage, which each near-dedup consumer would otherwise
+  * copy in again. A leaf over the cached frame (its in-memory
+  * relation) cuts the plan the same way and could recompute after an
+  * executor loss, but measured slower: filling the cache inside the
+  * first near-dedup action cost more tasks and driver time than the
+  * one checkpoint job. The price is that the checkpoint blocks are the
+  * only copy: [[Output.release]] frees them, after which the returned
+  * frames cannot be read again.
   */
 object TrainingPipeline {
 
@@ -94,14 +112,24 @@ object TrainingPipeline {
 
   /** Pipeline output: the curated documents (id, stratum, toks — what
     * a tokenizer-side consumer reads), the packed sequence spans, and
-    * the per-stage survivor report. `retained` are the cached frames
-    * the returned plans still reference lazily; call [[Output.release]]
-    * after materializing `docs`/`spans` so a long-lived session (e.g.
-    * a service calling curate() per request) doesn't accumulate cached
-    * lineages — the frames recompute transparently if touched again. */
-  case class Output(docs: DataFrame, spans: DataFrame, report: Report,
-                    retained: Seq[DataFrame] = Nil) {
-    def release(): Unit = retained.foreach(_.unpersist(false))
+    * the per-stage survivor report.
+    *
+    * `spans` is built on its first read: a caller that reads only
+    * `docs` never plans the packing stage (nor, with BPE units, trains
+    * the merges). Report mode has built and counted it inside curate()
+    * already, so there the first read only returns it.
+    *
+    * `docs` and `spans` read the token frame's checkpoint blocks (and,
+    * in report mode or with BPE units, cached stages). Call
+    * [[Output.release]] once, after materializing what you need of
+    * `docs`/`spans`, so a long-lived session (e.g. a service calling
+    * curate() per request) doesn't accumulate blocks. It frees them
+    * for good: the checkpoint is lineage-free, so neither frame can be
+    * read after it. */
+  final class Output(val docs: DataFrame, spansPlan: => DataFrame,
+                     val report: Report, releaseBlocks: () => Unit) {
+    lazy val spans: DataFrame = spansPlan
+    def release(): Unit = releaseBlocks()
   }
 
   /** Survivor counts after each stage (report mode only; every field
@@ -127,15 +155,19 @@ object TrainingPipeline {
   /** Run the full pipeline. `docs` needs (idCol: long-castable, textCol,
     * stratumCol); `evalDocs` needs textCol. Returns the packed sequence
     * spans (seq_id, id, doc_from, len, seq_from) and the stage report.
+    * `idCol` is the document key: stages drop rows by id, so ids must
+    * be unique.
     *
     * `withReport = false` skips every count/stat job (all Report
-    * fields become -1) and every per-stage cache except the
-    * multi-consumer tokenized frame — the production mode, where the
-    * only actions before the caller touches `spans` are the
-    * dedup-cluster iteration's own. In report mode each stage cache is
-    * unpersisted as soon as the next stage is materialized, so
-    * curate() pins at most two stages at a time, not the whole
-    * lineage. */
+    * fields become -1) and every per-stage cache — the production
+    * mode, where the only actions inside curate() are the token
+    * frame's checkpoint and the dedup-cluster resolution's one bounded
+    * collect; `docs` and `spans` stay lazy. Report mode caches and counts
+    * every stage, unpersisting each stage cache as soon as the next
+    * stage is materialized, so curate() pins at most two stage caches
+    * at a time (plus the token checkpoint, which a cache that lost a
+    * block would recompute from), not the whole lineage; it also
+    * builds and counts `spans` eagerly. */
   def curate(docs: DataFrame, evalDocs: DataFrame, idCol: String,
              textCol: String, stratumCol: String,
              cfg: Cfg = Cfg(), withReport: Boolean = true): Output = {
@@ -190,19 +222,19 @@ object TrainingPipeline {
       .join(exactLosers, Seq("id"), "left_anti"))
     val nExact = stageCount(exactDeduped)
 
-    // 3: line clean
-    val cleaned0 = Clean.lineClean(exactDeduped, "id", "text",
-        cfg.minWordsPerLine)
-      .join(exactDeduped.select(col("id"), col("stratum")), Seq("id"))
+    // 3: line clean — stratum rides through both line stages as a
+    // passthrough column: joining it back by id would put a second
+    // copy of each stage's whole input into the plan
+    val cleanedS = staged(Clean.lineClean(exactDeduped, "id", "text",
+        cfg.minWordsPerLine, keep = Seq("stratum"))
       .filter(col("n_kept") > 0)
-      .select(col("id"), col("stratum"), col("cleaned").as("text"))
-    val cleanedS = staged(cleaned0)
+      .select(col("id"), col("stratum"), col("cleaned").as("text")))
     val nClean = stageCount(cleanedS)
 
     // 4: cross-doc repeated-line dedup (keep-first)
-    val lineDeduped = staged(Clean.dedupRepeatedLines(cleanedS, "id", "text")
+    val lineDeduped = staged(Clean.dedupRepeatedLines(cleanedS, "id", "text",
+        keep = Seq("stratum"))
       .filter(col("n_kept") > 0)
-      .join(cleanedS.select(col("id"), col("stratum")), Seq("id"))
       .select(col("id"), col("stratum"), col("cleaned").as("text")))
     val nLineDedup = stageCount(lineDeduped)
 
@@ -265,28 +297,26 @@ object TrainingPipeline {
 
     // 5: near-dedup — minhash → banded LSH → verified Jaccard →
     // clusters → canonical-only
-    // cached in BOTH modes: three consumers (signatures, Jaccard
-    // verify, canonical filter) plus the cluster loop's own actions
-    // would each re-run the tokenize lineage otherwise; in lazy mode
-    // this is the one deliberate cache (the spans lineage still
-    // references it — LRU-evictable, recompute-safe)
+    // checkpointed in BOTH modes: three consumers (signatures, Jaccard
+    // verify, canonical filter) would each re-run the tokenize lineage
+    // otherwise, and every later plan is built over this one leaf
+    // (see the object doc)
     val toks = clsGated.select(col("id"), col("stratum"),
       col("text"), TextFunctions.tokenize(col("text")).as("toks"))
-      .cache()
+      .localCheckpoint(eager = true)
     val sigs = Dedup.minhashSignatures(toks, "id", "toks", cfg.minhashK)
-    val cands = Dedup.lshCandidates(sigs, cfg.lshBands, cfg.lshRows)
+    val (cands, releaseBands) = Dedup.lshCandidatesStaged(sigs,
+      cfg.lshBands, cfg.lshRows)
     val (pairs0, releaseSh) = Dedup.jaccardVerifyStaged(cands, toks, "id", "toks")
     val pairs = pairs0.filter(col("jaccard") >= cfg.jaccardThreshold)
     val labels = Dedup.clusters(pairs)
-    // clusters() materialized the pair lineage; release the shared
-    // shingle cache so a long-lived session calling curate() per
+    // clusters() materialized the pair lineage; release the band and
+    // shingle caches so a long-lived session calling curate() per
     // request doesn't accumulate entries (jaccardVerifyStaged's doc)
+    releaseBands()
     releaseSh()
     val nearDeduped = staged(Dedup.keepCanonical(toks, "id", labels))
     val nNear = stageCount(nearDeduped)
-    // once the canonical survivors are materialized, the token frame's
-    // remaining consumers all read through cached stages
-    if (withReport) toks.unpersist(false)
 
     // 6: decontamination — drop docs overlapping the eval set
     val evalToks = evalDocs.select(
@@ -305,11 +335,11 @@ object TrainingPipeline {
     val sampleCols = Seq(col("id"), col("stratum"), col("toks")) ++
       (if (bpeOn) Seq(col("text")) else Nil)
     // BPE mode reads the survivor frame three more times (the merge
-    // training histogram materializes EAGERLY inside curate, then
-    // encode scans it on both sides of its type join) — cache it even
-    // in lazy mode, where those reads would otherwise each re-run the
-    // post-tokenize stages. The histogram's own materialization warms
-    // the cache.
+    // training histogram materializes eagerly when spans are built,
+    // then encode scans it on both sides of its type join) — cache it
+    // even in lazy mode, where those reads would otherwise each re-run
+    // the post-tokenize stages. The first of those reads fills the
+    // cache.
     val sampled0 = Curation.stratifiedSample(decontaminated, "id",
         "stratum", cfg.sampleRates, cfg.defaultSampleRate, cfg.sampleSalt)
       .select(sampleCols: _*)
@@ -319,46 +349,51 @@ object TrainingPipeline {
 
     // 8: fixed-length sequence packing over token counts — whitespace
     // units by default, BPE units when configured (q112 shape: seqLen
-    // then means BPE tokens, and Report.nTokens reports BPE totals)
-    val sized =
-      if (!bpeOn)
-        sampled.select(col("id"), size(col("toks")).cast("long").as("n_tokens"))
-      else {
-        val merges = cfg.bpeMerges.getOrElse(Bpe.learnMerges(
-          Bpe.wordHistogram(sampled, "text", cfg.bpeMaxTypes),
-          cfg.bpeSteps.getOrElse(8)))
-        Bpe.encode(sampled, "id", "text", merges)
-          .select(col("id"), col("n_bpe").as("n_tokens"))
-      }
-    val spans = staged(Curation.packSequences(sized, "id", "n_tokens",
-      cfg.seqLen))
-    // sequence stats are themselves a report job — in lazy mode
-    // NOTHING here materializes spans; the caller decides when
-    val (nSeq, nTok) =
-      if (!withReport) (-1L, -1L)
-      else {
-        val st = spans.agg(
-          countDistinct(col("seq_id")), sum(col("len"))).head()
+    // then means BPE tokens, and Report.nTokens reports BPE totals).
+    // Lazy mode builds it only when the caller reads Output.spans
+    def packed(): DataFrame = {
+      val sized =
+        if (!bpeOn)
+          sampled.select(col("id"), size(col("toks")).cast("long").as("n_tokens"))
+        else {
+          val merges = cfg.bpeMerges.getOrElse(Bpe.learnMerges(
+            Bpe.wordHistogram(sampled, "text", cfg.bpeMaxTypes),
+            cfg.bpeSteps.getOrElse(8)))
+          Bpe.encode(sampled, "id", "text", merges)
+            .select(col("id"), col("n_bpe").as("n_tokens"))
+        }
+      Curation.packSequences(sized, "id", "n_tokens", cfg.seqLen)
+    }
+    // report mode: spans are built, cached and counted here (the
+    // sequence stats are themselves a report job)
+    val reportSpans = if (withReport) Some(packed().cache()) else None
+    val (nSeq, nTok) = reportSpans match {
+      case None => (-1L, -1L)
+      case Some(sp) =>
+        val st = sp.agg(countDistinct(col("seq_id")), sum(col("len"))).head()
         // sampled stays cached — it is RETURNED as Output.docs
         (if (st.isNullAt(0)) 0L else st.getLong(0),
           if (st.isNullAt(1)) 0L else st.getLong(1))
-      }
+    }
 
-    // report mode: sampled + spans are still pinned (docs IS sampled);
-    // lazy mode: the token frame is the one deliberate cache (plus
-    // the survivor frame when BPE packing multiplied its readers)
-    val retained =
-      if (withReport) Seq(sampled, spans)
-      else if (bpeOn) Seq(toks, sampled)
-      else Seq(toks)
+    // what release() frees besides the token checkpoint: report mode's
+    // pinned sampled + spans (docs IS sampled), lazy mode's survivor
+    // cache when BPE packing multiplied its readers
+    val cached =
+      if (withReport) sampled +: reportSpans.toSeq
+      else if (bpeOn) Seq(sampled)
+      else Nil
     // docs keeps its (id, stratum, toks) contract regardless of the
     // token-unit mode (the projection reads through the cache)
     val docsOut =
       if (bpeOn) sampled.select(col("id"), col("stratum"), col("toks"))
       else sampled
-    Output(docsOut, spans,
+    new Output(docsOut, reportSpans.getOrElse(packed()),
       Report(nInput, nUrl, nExact, nClean, nLineDedup, nPpl, nLm, nCls, nNear,
         nDecontam, nSampled, nSeq, nTok, nAfterSourceRep = nSrcRep),
-      retained)
+      () => {
+        cached.foreach(_.unpersist(false))
+        Curation.releaseLocalCheckpoint(toks)
+      })
   }
 }

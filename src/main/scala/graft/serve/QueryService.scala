@@ -116,8 +116,10 @@ class QueryService(
     // table + the int8 code table the ann/quantized dense modes read.
     // Written BEFORE the manifest flip so any visible generation is
     // complete. Incremental ingest appends per-segment sidecars
-    // instead (SegmentedStore.writeSegment).
-    val written = TableStore.load(spark, dir)
+    // instead (SegmentedStore.writeSegment). The read takes its
+    // schemas from the bundle just saved, so no table pays a footer
+    // inference job before the sidecars start.
+    val written = TableStore.load(spark, dir, saved = Some(b))
     val embOrg = written.chunks.filter(col("embedding").isNotNull)
       .select(col("id"), col("embedding"), col("organization_id"))
     val emb = embOrg.select(col("id"), col("embedding"))

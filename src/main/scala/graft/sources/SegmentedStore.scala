@@ -268,13 +268,6 @@ object SegmentedStore {
       .map(TableStore.read(spark, _))
       .reduceOption(_.unionByName(_, allowMissingColumns = true))
 
-  /** The stored shape of an in-memory term table: [[TableStore.writeTerms]]
-    * adds `term_blk`, so the read schema needs it appended when the
-    * hint came from a pre-write DataFrame. */
-  private def withTermBlk(s: types.StructType): types.StructType =
-    if (s.fieldNames.contains("term_blk")) s
-    else s.add("term_blk", types.LongType)
-
   /** The serving read view: chunk/posting unions across base +
     * segments (each scan keeps its own partition pruning), derived
     * tables from the manifest's current derived dir. `hint` supplies
@@ -303,11 +296,11 @@ object SegmentedStore {
       TableStore.read(spark, path, s)
     IndexBundle(
       chunks = union("chunks", hint.map(_.chunks.schema)),
-      postings = union("postings", hint.map(h => withTermBlk(h.postings.schema))),
+      postings = union("postings", hint.map(h => TableStore.withTermBlk(h.postings.schema))),
       docFreq = read(s"$root/${m.derived}/docfreq",
-        hint.map(h => withTermBlk(h.docFreq.schema))),
+        hint.map(h => TableStore.withTermBlk(h.docFreq.schema))),
       idf = read(s"$root/${m.derived}/idf",
-        hint.map(h => withTermBlk(h.idf.schema))),
+        hint.map(h => TableStore.withTermBlk(h.idf.schema))),
       stats = read(s"$root/${m.derived}/stats", hint.map(_.stats.schema)))
   }
 
@@ -896,7 +889,7 @@ object SegmentedStore {
     // cheaper than a parquet read-back of identical bytes
     val segPost = delta.postings
     val mergedDf = TableStore.read(spark, s"$root/${m.derived}/docfreq",
-        Some(withTermBlk(delta.docFreq.schema)))
+        Some(TableStore.withTermBlk(delta.docFreq.schema)))
       .drop("term_blk")
       .select(col("term"), col("df").as("df_old"))
       .join(BM25.docFreq(segPost).select(col("term"), col("df").as("df_new")),

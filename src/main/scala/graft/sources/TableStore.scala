@@ -126,14 +126,25 @@ object TableStore {
       .write.mode("overwrite").parquet(path)
 
   /** Load a bundle saved by [[save]]. The postings/idf keep their
-    * `term_blk` column so the BM25 read path can prune blocks. */
-  def load(spark: SparkSession, root: String): IndexBundle =
+    * `term_blk` column so the BM25 read path can prune blocks.
+    * `saved` is the in-memory bundle that [[save]] wrote here: its
+    * schemas stand in for footer inference, one job per table. */
+  def load(spark: SparkSession, root: String,
+           saved: Option[IndexBundle] = None): IndexBundle =
     graft.ingest.Pipeline.IndexBundle(
-      chunks = read(spark, s"$root/chunks"),
-      postings = read(spark, s"$root/postings"),
-      docFreq = read(spark, s"$root/docfreq"),
-      idf = read(spark, s"$root/idf"),
-      stats = read(spark, s"$root/stats"))
+      chunks = read(spark, s"$root/chunks", saved.map(_.chunks.schema)),
+      postings = read(spark, s"$root/postings",
+        saved.map(b => withTermBlk(b.postings.schema))),
+      docFreq = read(spark, s"$root/docfreq",
+        saved.map(b => withTermBlk(b.docFreq.schema))),
+      idf = read(spark, s"$root/idf", saved.map(b => withTermBlk(b.idf.schema))),
+      stats = read(spark, s"$root/stats", saved.map(_.stats.schema)))
+
+  /** The stored shape of an in-memory term table: [[writeTerms]] adds
+    * `term_blk`, so a read schema taken from a pre-write DataFrame
+    * needs it appended. */
+  private[sources] def withTermBlk(s: StructType): StructType =
+    if (s.fieldNames.contains("term_blk")) s else s.add("term_blk", LongType)
 
   /** Read one store directory under its store schema ([[storeSchema]]),
     * whichever layout wrote it; `schema` skips footer inference. Only

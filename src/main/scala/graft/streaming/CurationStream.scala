@@ -9,7 +9,7 @@ import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.{parseJson, Serialization}
 
 import graft.functions.TextFunctions
-import graft.operators.{Clean, Dedup}
+import graft.operators.{Clean, Curation, Dedup}
 
 /** Incremental curation ingest — the [[graft.operators.TrainingPipeline]]
   * reducers lifted to a continuous source: each arriving micro-batch of
@@ -645,17 +645,6 @@ object CurationStream {
                                    commit: () => Unit,
                                    release: () => Unit)
 
-  /** Unpersist the checkpointed RDD under a `localCheckpoint()`ed
-    * frame — the only handle that actually frees the blocks
-    * (Dataset.unpersist only consults the plan cache, which a
-    * checkpoint never enters). */
-  private def releaseLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false); ()
-      case _ => ()
-    }
-
   /** Back-compat batch core: compute survivors AND append state before
     * returning. */
   def curateSurvivors(batch0: DataFrame, stateDir: String,
@@ -1142,7 +1131,7 @@ object CurationStream {
               .write.mode("append").parquet(s"$stateDir/bands")))
         }
       },
-      () => releaseLocalCheckpoint(ckpt))
+      () => Curation.releaseLocalCheckpoint(ckpt))
     }
   }
 

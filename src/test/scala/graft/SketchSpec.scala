@@ -118,6 +118,16 @@ class SketchSpec extends SparkSpec {
     val dist = Dedup.clusters(pairs, driverThreshold = 0L).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist == expected)
+    // at the path boundary: with threshold t = 4, these 4 pairs resolve
+    // on the driver and the same graph plus (3, 4) goes distributed
+    val t = 4L
+    val atT = Dedup.clusters(pairs, driverThreshold = t).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(atT == expected)
+    val pairs5 = pairs.union(Seq((3L, 4L)).toDF("id_a", "id_b"))
+    val overT = Dedup.clusters(pairs5, driverThreshold = t).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(overT == expected + (4L -> 1L))
   }
 
   test("hyperplane buckets: deterministic, bounded, equal vectors collide") {

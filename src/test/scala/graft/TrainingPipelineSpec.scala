@@ -251,6 +251,74 @@ class TrainingPipelineSpec extends SparkSpec {
     ws.release(); bpe.release()
   }
 
+  private def evalSet = {
+    import spark.implicits._
+    graft.Tables(spark, sf0001, "documents")
+      .filter($"doc_id" >= 10L && $"doc_id" < 20L).select($"text")
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().toSeq.sortBy(_.toString)
+
+  test("lazy mode returns report mode's docs and spans") {
+    val cfg = TrainingPipeline.Cfg(maxContamFrac = 0.3,
+      sampleRates = Map("en" -> 1.0), defaultSampleRate = 0.5)
+    val rep = TrainingPipeline.curate(corpus, evalSet, "id", "text", "lang", cfg)
+    val lzy = TrainingPipeline.curate(corpus, evalSet, "id", "text", "lang", cfg,
+      withReport = false)
+    val docs = sortedRows(rep.docs)
+    assert(docs.nonEmpty)
+    assert(sortedRows(lzy.docs) == docs)
+    assert(sortedRows(lzy.spans) == sortedRows(rep.spans))
+    rep.release(); lzy.release()
+  }
+
+  test("lazy mode plans the stages after tokenization over a leaf") {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    def nodes(p: LogicalPlan): Int = p.collectWithSubqueries { case n => n }.size
+    // every action curate() and the docs read run, seen from outside
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution, Int)]()
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        seen.add((f, qe, nodes(qe.analyzed))); ()
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      val out = TrainingPipeline.curate(corpus, evalSet, "id", "text", "lang",
+        TrainingPipeline.Cfg(), withReport = false)
+      val docsQe = out.docs.queryExecution
+      // the lineage through the token frame made this 391 nodes on
+      // the benchmark corpus
+      assert(nodes(docsQe.analyzed) <= 60, docsQe.analyzed.treeString)
+      out.docs.collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.asScala.exists(_._2 eq docsQe) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      val acts = seen.asScala.toSeq.map { case (f, _, n) => f -> n }
+      // the token checkpoint plans the pre-token lineage; the cluster
+      // collect and the docs collect plan over its leaf
+      val (ckpt, later) = acts.partition(_._1.toLowerCase.contains("checkpoint"))
+      assert(ckpt.size == 1 && later.size >= 2 && later.forall(_._2 <= 60), acts.toString)
+      out.release()
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  test("release frees the token frame's checkpoint blocks") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = TrainingPipeline.curate(corpus, evalSet, "id", "text", "lang",
+      TrainingPipeline.Cfg(), withReport = false)
+    out.docs.collect(); out.spans.collect()
+    assert(sc.getPersistentRDDs.keySet != before, "the token frame holds no blocks")
+    out.release()
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
   test("lazy mode runs no report jobs and returns -1 counts") {
     import spark.implicits._
     val eval = graft.Tables(spark, sf0001, "documents")
