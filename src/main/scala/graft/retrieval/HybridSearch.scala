@@ -41,8 +41,9 @@ object HybridSearch {
     *  - [[DenseMode.AnnLsh]]: static-pruned (tbl, bucket) probes of a
     *    [[graft.sources.TableStore.saveAnn]] store — reads only the
     *    probed buckets.
-    *  - [[DenseMode.AnnIvf]]: static-pruned cid probes of an IVF
-    *    store ([[graft.sources.TableStore.saveIvf]] layout).
+    *  - [[DenseMode.AnnIvf]]: static cid probes of the in-memory
+    *    [[graft.operators.AnnKnn.ivfIndex]] posting table (one row per
+    *    vector, keyed by its nearest coarse centroid).
     *  - [[DenseMode.Quantized]]: exact scan over the int8 store
     *    ([[graft.sources.TableStore.saveQuantized]]) — reads tinyint
     *    codes + one scale instead of the float64 embedding column

@@ -11,7 +11,7 @@ import graft.ingest.Pipeline
 import graft.ingest.Pipeline.IndexBundle
 import graft.functions.{Embedder, FeatureHashEmbedder}
 import graft.model.{Filters, TenantContext}
-import graft.operators.{AnnKnn, BM25, PqKnn}
+import graft.operators.{AnnKnn, BM25}
 import graft.retrieval.HybridSearch
 import graft.sources.{SegmentedStore, TableStore}
 import graft.sources.SegmentedStore.Manifest
@@ -99,88 +99,29 @@ class QueryService(
     * gen N+1 while reading the current view (never overwrite-what-you-
     * read — lazy plans over the old files would hit FILE_NOT_EXIST
     * mid-write), flip the manifest, drop every superseded dir. Readers
-    * in flight finish against the intact old files. */
+    * in flight finish against the intact old files. Every sidecar
+    * lands before the flip, so any visible generation is complete.
+    * Compaction retrains the PQ quantizer on the grown corpus — the
+    * pinned-quantizer refresh point for the segments written after it. */
   private def persistFull(b: IndexBundle): Unit = {
     val prev = manifest
     val seq = prev.map(_.seq + 1).getOrElse(0)
     val genName = s"gen$seq"
-    val dir = s"$storeRoot/$genName"
-    // same torn-predecessor scrub as the segment paths: the sidecar
-    // writes below are conditional (skipped when the corpus has no
-    // embeddings), so litter at this generation's name must go first
-    SegmentedStore.scrubTargets(spark, Seq(dir))
-    TableStore.save(b, dir)
-    // dense sidecar stores, derived from the just-written chunk files
-    // (reading back the parquet is cheaper than re-running the merge
-    // lineage, and prunes to the two needed columns): the LSH posting
-    // table + the int8 code table the ann/quantized dense modes read.
-    // Written BEFORE the manifest flip so any visible generation is
-    // complete. Incremental ingest appends per-segment sidecars
-    // instead (SegmentedStore.writeSegment). The read takes its
-    // schemas from the bundle just saved, so no table pays a footer
-    // inference job before the sidecars start.
-    val written = TableStore.load(spark, dir, saved = Some(b))
-    val embOrg = written.chunks.filter(col("embedding").isNotNull)
-      .select(col("id"), col("embedding"), col("organization_id"))
-    val emb = embOrg.select(col("id"), col("embedding"))
-    // guard before ANY sidecar write: an all-garbage corpus (every doc
-    // skip_embedding) has zero vectors, and a zero-row partitionBy
-    // write leaves a _SUCCESS-only dir that poisons every later union
-    // read with UNABLE_TO_INFER_SCHEMA (ConcurrencySpec caught this) —
-    // no sidecars means annView=None and the exact fallback serves
-    val nEmb = embOrg.count()
-    // sidecars are mutually independent reads of the just-written
-    // chunk files — land them concurrently (same collapse of the
-    // fixed per-job floor as writeSegment)
-    if (nEmb > 0) SegmentedStore.awaitAll(Seq(
-      // tenant-clustered LSH layout (org dirs, rows sorted by tbl,
-      // bucket): the F3 tenant filter composes INTO the probe read as
-      // a partition filter ahead of the pushed probe filter
-      () => TableStore.saveAnn(AnnKnn.index(embOrg,
-        "id", "embedding", AnnKnn.ServingTables, AnnKnn.ServingBits,
-        keepCols = Seq("organization_id")), dir),
-      () => TableStore.saveQuantized(emb, "id", "embedding", dir),
-      // HNSW sidecar (the reference's serving index role,
-      // `vector_store.py:136-146`): per-(tenant, shard) graphs sized to
-      // the corpus; compaction lands here too, folding segment graphs
-      // back into base-sized ones
-      () => SegmentedStore.writeHnsw(embOrg, nEmb, dir),
-      // IVF-PQ sidecar: hash-sampled coarse centroids (string chunk
-      // ids) and the PRODUCTION-SHAPE sub-codebook — k=256 entries per
-      // subspace (full byte codes, stored offset-binary) hash-sampled
-      // from the corpus and Lloyd-refined (VERDICT r4 ask #4; the gates
-      // keep the k=16 sampled config as their replayable toy shape).
-      // ONE sample pass serves both: its first PqKnn.K rows are the
-      // coarse centroids (PqKnn.centroidsFrom).
-      // m-byte codes partition by cid; refine reads raw embeddings back
-      // from the chunk store by id, so no extra float sidecar is
-      // written. Compaction retrains centroids AND codebook on the
-      // grown corpus — the pinned-quantizer refresh point for the
-      // segments written after it.
-      () => {
-        val sample = PqKnn.hashSampledRows(emb, "id", "embedding", 256)
-        if (sample.nonEmpty) {
-          val cents = PqKnn.centroidsFrom(spark, sample.take(PqKnn.K))
-          val cb = PqKnn.refineCodebook(emb, "embedding",
-            PqKnn.codebookFrom(sample), iters = 1)
-          TableStore.savePq(PqKnn.ivfPqIndex(emb, "id", "embedding", cents, cb),
-            cb, dir, centroids = Some(cents))
-        }
-      }))
+    SegmentedStore.writeGeneration(spark, s"$storeRoot/$genName", b,
+      SegmentedStore.Train(sample = 256), (AnnKnn.ServingTables, AnnKnn.ServingBits))
     // carry the store-lineage id across compactions (the per-dir view
     // memo's immutability key); a first ingest mints it
     val next = Manifest(genName, Nil, genName, seq,
       Some(AnnKnn.ServingTables), Some(AnnKnn.ServingBits),
       Some(prev.flatMap(_.storeId).getOrElse(SegmentedStore.newStoreId())))
     SegmentedStore.writeManifest(storeRoot, next)
-    // reload THROUGH the per-dir memo (schema-hinted by the frames just
-    // written) rather than serving `written` directly: the fresh
-    // generation's dirs get listed and memoized HERE, inside the
+    // reload THROUGH the per-dir memo (schema-hinted by the bundle just
+    // written) rather than serving the written frames directly: the
+    // fresh generation's dirs get listed and memoized HERE, inside the
     // already-O(corpus) snapshot write, so the first post-seed delta
     // flip doesn't pay the one-time base listing (O(tenant dirs) — the
     // 8.3 s first-probe spike OrgBench measured at 10k orgs)
-    bundle = Some(SegmentedStore.loadView(spark, storeRoot, next,
-      hint = Some(written)))
+    bundle = Some(SegmentedStore.loadView(spark, storeRoot, next, hint = Some(b)))
     // same prewarm for the dense sidecar views (pure listing + schema
     // memo population — no jobs beyond the one-time inference)
     SegmentedStore.annView(spark, storeRoot, next)
@@ -193,35 +134,21 @@ class QueryService(
   /** O(delta) persist: append one segment + refreshed derived tables,
     * flip the manifest, retire only the superseded derived dir (one-
     * flip grace). No base or prior-segment file is touched — a 2-doc
-    * ingest into a 100 TB store writes kilobytes. */
-  private def persistDelta(delta: IndexBundle): Unit = {
+    * ingest into a 100 TB store writes kilobytes.
+    *
+    * With `folded` segments (segment overflow, small accumulated
+    * delta) this is a minor compaction: the SIZE-TIERED small tail of
+    * segments ([[SegmentedStore.foldSet]]) + this delta fold into one
+    * merged segment without touching base or any bigger folded tier —
+    * O(small tail), not O(corpus) and not O(biggest tier) — and the
+    * folded segment dirs retire too. */
+  private def persistDelta(delta: IndexBundle, folded: Seq[String] = Nil): Unit = {
     val m = manifest.getOrElse(
       throw new IllegalStateException("delta persist needs a base generation"))
-    val next = SegmentedStore.writeSegment(spark, storeRoot, m, delta)
+    val next = SegmentedStore.appendSegment(spark, storeRoot, m, delta, folded)
     SegmentedStore.writeManifest(storeRoot, next)
     // schema-hinted reload: the old view's schemas are the store's
     // schemas, so the refresh fires zero inference jobs
-    bundle = Some(SegmentedStore.loadView(spark, storeRoot, next, hint = bundle))
-    manifest = Some(next)
-    retire(
-      if (m.derived != next.derived && m.derived != m.base) Seq(m.derived)
-      else Nil)
-  }
-
-  /** Minor compaction (segment overflow, small accumulated delta):
-    * fold the SIZE-TIERED small tail of segments + this delta into one
-    * merged segment ([[SegmentedStore.foldSet]]) without touching base
-    * or any bigger folded tier — O(small tail), not O(corpus) and not
-    * O(biggest tier). Retires only the folded segment dirs (and
-    * superseded derived) under the one-flip grace. */
-  private def persistFold(delta: IndexBundle,
-                          segRows: Map[String, Long]): Unit = {
-    val m = manifest.getOrElse(
-      throw new IllegalStateException("fold needs a base generation"))
-    val folded = SegmentedStore.foldSet(m, segRows)
-    val next =
-      SegmentedStore.foldSegments(spark, storeRoot, m, delta, Some(folded))
-    SegmentedStore.writeManifest(storeRoot, next)
     bundle = Some(SegmentedStore.loadView(spark, storeRoot, next, hint = bundle))
     manifest = Some(next)
     retire((folded ++
@@ -243,7 +170,7 @@ class QueryService(
       val segRows = SegmentedStore.segmentRows(spark, storeRoot, m)
       if (SegmentedStore.needsMajorCompaction(spark, storeRoot, m, segRows))
         persistFull(mergeBundles(old, delta))
-      else persistFold(delta, segRows)
+      else persistDelta(delta, SegmentedStore.foldSet(m, segRows))
     case _ => persistDelta(delta)
   }
 
@@ -703,7 +630,7 @@ class QueryService(
     * pure-insert deltas the service produces, kept for preloaded
     * stores with foreign ids), BM25 aggregates recomputed from the
     * merged postings. Routine ingest never runs this — it appends an
-    * O(delta) segment via [[SegmentedStore.writeSegment]]. */
+    * O(delta) segment via [[SegmentedStore.appendSegment]]. */
   private def mergeBundles(old: IndexBundle, delta: IndexBundle): IndexBundle = {
     val newDocs = delta.chunks.select(col("document_id")).distinct()
     val keptChunks = old.chunks.join(newDocs, Seq("document_id"), "left_anti")

@@ -9,19 +9,20 @@ import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.{parseJson, Serialization}
 
 import graft.ingest.Pipeline.IndexBundle
-import graft.operators.{AnnKnn, BM25, Hnsw, PqKnn, Quantize}
+import graft.operators.{AnnKnn, BM25, Hnsw, PqKnn}
 
 /** Incremental (LSM-style) layout for the serving store: a **base
-  * generation** (full snapshot, as written by [[TableStore.save]] plus
-  * the dense sidecars) and append-only **delta segments**, tied
-  * together by an atomically-flipped JSON manifest. An ingest
-  * micro-batch writes ONE new segment — O(delta) data files — plus a
-  * refreshed copy of the small derived tables (docfreq / idf / stats,
-  * O(vocabulary), which shrinks relative to the corpus as it grows —
-  * Heaps' law); no base or prior-segment file is ever rewritten. This
-  * replaces the previous whole-corpus snapshot rewrite per ingest (the
-  * round-4 scale-killer): at 100 TB a one-document upload now touches
-  * kilobytes, not the world.
+  * generation** (full snapshot) and append-only **delta segments**,
+  * tied together by an atomically-flipped JSON manifest. Base
+  * generations, segments and folded segments are all written by one
+  * generation writer ([[writeGeneration]]), one recipe per table. An
+  * ingest micro-batch writes ONE new segment — O(delta) data files —
+  * plus a refreshed copy of the small derived tables (docfreq / idf /
+  * stats, O(vocabulary), which shrinks relative to the corpus as it
+  * grows — Heaps' law); no base or prior-segment file is ever
+  * rewritten. This replaces the previous whole-corpus snapshot rewrite
+  * per ingest (the round-4 scale-killer): at 100 TB a one-document
+  * upload now touches kilobytes, not the world.
   *
   * The service's document ids are content-derived
   * (`org::filename_md5(text)`, [[graft.serve.QueryService]]), so a
@@ -236,12 +237,6 @@ object SegmentedStore {
       org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
-  /** Union of the existing dirs among `dirs` (missing ones — e.g. a
-    * segment whose delta had no embeddings — simply don't contribute).
-    * With a `schema` the reads skip footer-based inference entirely —
-    * schema inference fires one small driver job PER DIR, so an
-    * inference-free reload is what keeps the post-flip view refresh
-    * flat in segment count. */
   /** A dir "has data" when anything under it besides commit markers /
     * checksums exists (recursive — partitioned layouts nest files).
     * Zero-row partitionBy writes leave marker-only dirs; including one
@@ -263,6 +258,9 @@ object SegmentedStore {
     }
   }
 
+  /** Union of the dirs among `dirs` that have data (missing ones — e.g.
+    * a segment whose delta had no embeddings — simply don't
+    * contribute). */
   private def readUnion(spark: SparkSession, dirs: Seq[String]): Option[DataFrame] =
     dirs.filter(hasData(spark, _))
       .map(TableStore.read(spark, _))
@@ -424,17 +422,6 @@ object SegmentedStore {
       .map(_.as[graft.operators.HnswServing])
   }
 
-  /** Build + write the HNSW sidecar for one dir's embeddings: complete
-    * per-(tenant, shard) graph rows, partitioned by tenant so the F3
-    * filter becomes a directory prune. `nEmb` sizes the shard count
-    * (callers already have it from their emptiness check — no extra
-    * job). */
-  def writeHnsw(emb: DataFrame, nEmb: Long, dir: String): Unit =
-    Hnsw.buildServing(emb, "id", "embedding", "organization_id",
-        Hnsw.shardsFor(nEmb))
-      .write.mode("overwrite").partitionBy("organization_id")
-      .parquet(s"$dir/hnsw")
-
   /** IVF-PQ view: code union across base + segments; centroids and
     * codebook come from the BASE only (segments encoded against them —
     * the pinned-quantizer contract), through the per-generation memo,
@@ -491,7 +478,7 @@ object SegmentedStore {
     quantizerMemo.synchronized {
       val key = QuantizerKey(spark, base, baseGeneration(spark, base))
       Option(quantizerMemo.get(key)).getOrElse {
-        val disk = TableStore.loadPqCentroids(spark, base)
+        val disk = spark.read.parquet(s"$base/pq_centroids")
         val cents = spark.createDataFrame(disk.collect().toSeq.asJava, disk.schema)
         val v = (cents, TableStore.loadPqCodebook(spark, base))
         quantizerMemo.put(key, v)
@@ -500,7 +487,7 @@ object SegmentedStore {
     }
 
   /** Remove crash litter at a mutation's TARGET dirs before it writes.
-    * Every mutation path (writeSegment, foldSegments, the full-snapshot
+    * Every mutation path (a segment append, a fold, the full-snapshot
     * persist) re-derives its target names from `manifest.seq + 1`, so a
     * predecessor that died mid-write leaves dirs at exactly the names
     * the next mutation will reuse — and each path's per-table writes
@@ -513,8 +500,7 @@ object SegmentedStore {
     * failure while the path still exists aborts the mutation loudly —
     * building around surviving litter is the silent-corruption case
     * (RawLocal's delete returns false instead of throwing). */
-  private[graft] def scrubTargets(spark: SparkSession,
-                                  dirs: Seq[String]): Unit =
+  private def scrubTargets(spark: SparkSession, dirs: Seq[String]): Unit =
     dirs.foreach { d =>
       val (f, p) = hadoopFs(spark, d)
       if (!f.delete(p, true) && f.exists(p))
@@ -553,90 +539,181 @@ object SegmentedStore {
       Duration.Inf).map(_.get)
   }
 
-  /** Append one delta segment and roll the derived tables forward;
-    * returns the manifest to install. Writes are O(delta) for every
-    * data table (chunks, postings, LSH, int8, PQ codes, HNSW shards —
-    * each through its base counterpart's writer) plus O(vocab)
-    * for the docfreq/idf rewrite; nothing outside the new `seg{seq}` /
-    * `derived{seq}` dirs is touched. All sinks derive from the CACHED
-    * delta (materialized by the caller's chunk count), so every write
-    * below is independent of the others and they run CONCURRENTLY —
-    * the wall clock is the slowest write, not the sum of ~10 small
-    * driver jobs. */
-  def writeSegment(spark: SparkSession, root: String, m: Manifest,
-                   delta: IndexBundle): Manifest = {
+  /** Where a generation's PQ coarse centroids and codebook come from. */
+  private[graft] sealed trait Quantizer
+
+  /** Train both on a hash sample of `sample` rows of the generation's
+    * own embeddings: a base generation or a major compaction. One
+    * sample pass serves both — its first [[PqKnn.K]] rows are the
+    * coarse centroids ([[PqKnn.centroidsFrom]]), and all of it seeds
+    * the PRODUCTION-SHAPE sub-codebook: k = 256 entries per subspace
+    * (full byte codes, stored offset-binary), Lloyd-refined (VERDICT
+    * r4 ask #4; the gates keep the k=16 sampled config as their
+    * replayable toy shape). The refine reads raw embeddings back from
+    * the chunk store by id, so no float sidecar is written. */
+  private[graft] final case class Train(sample: Int) extends Quantizer
+
+  /** Encode against the quantizer PINNED at the base generation dir
+    * `base` (segments and folds); the next major compaction retrains
+    * it. A base without one gets no PQ table in its segments either. */
+  private[graft] final case class Pinned(base: String) extends Quantizer
+
+  /** The one writer of a generation's tables — a base generation, a
+    * delta segment or a folded segment — into `dir`: chunks, postings,
+    * the LSH, int8 and PQ sidecars, and the HNSW graphs. Each table
+    * has one write recipe ([[TableStore]]); every write below goes
+    * through it, so the three kinds of generation cannot drift apart.
+    *
+    * `rollForward` says which kind of generation this is:
+    *  - None: a full snapshot. All five bundle tables land
+    *    ([[TableStore.save]]), then the sidecars are built from the
+    *    chunk files just written: reading back two columns is cheaper
+    *    than re-running the (possibly merged) bundle lineage.
+    *  - Some(roll): a delta over the cached `fresh` bundle. Every
+    *    write derives from that cache, so they all run concurrently —
+    *    the wall clock is the slowest write, not the sum of ~10 small
+    *    driver jobs. `roll` (the derived-table roll-forward) runs only
+    *    when `fresh` carries postings; returns whether it did.
+    *
+    * `carried` dirs (a fold's segments) stream their stored rows of
+    * every table except HNSW through unchanged, unioned with the
+    * encoded fresh rows: LSH, int8 and PQ rows are per-row codes
+    * pinned to the base config, so no carried row is re-encoded. HNSW
+    * graph structure does not merge, so with carried dirs the caller
+    * writes the graphs after the merged chunks land.
+    *
+    * One job counts the fresh embeddings and gates every sidecar: a
+    * zero-row partitionBy write leaves a marker-only dir that poisons
+    * every later union read with UNABLE_TO_INFER_SCHEMA, while a store
+    * without sidecars just serves the exact fallback. Those writes
+    * being conditional, crash litter at `dir` is scrubbed first
+    * ([[scrubTargets]]). */
+  private[graft] def writeGeneration(spark: SparkSession, dir: String,
+                                     fresh: IndexBundle, quantizer: Quantizer,
+                                     lsh: (Int, Int), carried: Seq[String] = Nil,
+                                     rollForward: Option[() => Unit] = None): Boolean = {
+    scrubTargets(spark, Seq(dir))
+    def rows(table: String, added: Option[DataFrame]): Option[DataFrame] =
+      (readUnion(spark, carried.map(d => s"$d/$table")) ++ added)
+        .reduceOption(_.unionByName(_, allowMissingColumns = true))
+
+    def sidecars(chunks: DataFrame): Unit = {
+      val emb = embeddings(chunks)
+      val n = emb.count()
+      def encoded(rows: => DataFrame) = if (n > 0) Some(rows) else None
+      val pq = quantizer match {
+        case Train(sample) => Seq(() => {
+          val sampled = PqKnn.hashSampledRows(emb, "id", "embedding", sample)
+          if (sampled.nonEmpty) {
+            val cents = PqKnn.centroidsFrom(spark, sampled.take(PqKnn.K))
+            val cb = PqKnn.refineCodebook(emb, "embedding", PqKnn.codebookFrom(sampled), iters = 1)
+            TableStore.savePq(PqKnn.ivfPqIndex(emb, "id", "embedding", cents, cb),
+              cb, dir, centroids = Some(cents))
+          }
+        })
+        case Pinned(base) =>
+          if (!exists(spark, s"$base/pq_centroids") || !exists(spark, s"$base/pq_codebook")) Nil
+          else Seq(() => rows("pq", encoded {
+            val (cents, cb) = pinnedQuantizer(spark, base)
+            TableStore.pqRows(PqKnn.ivfPqIndex(emb, "id", "embedding", cents, cb))
+          }).foreach(TableStore.savePqRows(_, dir)))
+      }
+      // HNSW (the reference's serving index role,
+      // `vector_store.py:136-146`): per-(tenant, shard) graphs sized to
+      // the generation
+      val hnsw =
+        if (carried.nonEmpty || n == 0) Nil
+        else Seq(() => TableStore.saveHnsw(hnswGraphs(emb, Hnsw.shardsFor(n)), dir))
+      if (n > 0 || carried.nonEmpty) awaitAll(Seq(
+        // the probe set is a static filter, so the LSH (tables, bits)
+        // must be the ones the manifest records for the probe side
+        () => rows("ann", encoded(AnnKnn.index(emb, "id", "embedding", lsh._1, lsh._2,
+          keepCols = Seq("organization_id")))).foreach(TableStore.saveAnn(_, dir)),
+        () => rows("quantized", encoded(TableStore.quantizedRows(emb, "id", "embedding")))
+          .foreach(TableStore.saveQuantizedRows(_, dir))) ++ pq ++ hnsw)
+    }
+
+    rollForward match {
+      case None =>
+        TableStore.save(fresh, dir)
+        sidecars(TableStore.read(spark, s"$dir/chunks", Some(fresh.chunks.schema)))
+        true
+      case Some(roll) =>
+        // the two gating probes (embedding count, postings emptiness)
+        // run INSIDE their branch's task: serial probes before the
+        // fan-out were a measured ~200 ms of dead time per batch. The
+        // flag is read after the final await (safely published by it)
+        @volatile var hasPostings = false
+        awaitAll(Seq(
+          () => rows("chunks", Some(fresh.chunks)).foreach(TableStore.saveChunks(_, dir)),
+          () => {
+            hasPostings = !fresh.postings.isEmpty
+            // a union of carried dirs keeps one task per dir: rebalance
+            // it, so its files follow the data, not the folded inputs
+            val postings = rows("postings", if (hasPostings) Some(fresh.postings) else None)
+              .map(p => if (carried.isEmpty) p else p.hint("rebalance"))
+            awaitAll(postings.toSeq.map(p => () => TableStore.savePostings(p, dir)) ++
+              (if (hasPostings) Seq(roll) else Nil))
+          },
+          () => sidecars(fresh.chunks)))
+        hasPostings
+    }
+  }
+
+  /** The (id, embedding, tenant) rows every dense sidecar derives from. */
+  private def embeddings(chunks: DataFrame): DataFrame =
+    chunks.filter(col("embedding").isNotNull)
+      .select(col("id"), col("embedding"), col("organization_id"))
+
+  /** HNSW serving graphs over `emb`, `shards` per tenant. */
+  private def hnswGraphs(emb: DataFrame, shards: Int): DataFrame =
+    Hnsw.buildServing(emb, "id", "embedding", "organization_id", shards).toDF()
+
+  /** Append `delta` as one new segment `seg{seq}` and roll the derived
+    * tables forward into `derived{seq}`; returns the manifest to
+    * install. Writes are O(delta) for every data table plus O(vocab)
+    * for the docfreq/idf rewrite; nothing outside the two new dirs is
+    * touched. The derived roll-forward is skipped when the delta
+    * carries no postings (the manifest keeps the current derived dir).
+    *
+    * With `folded` segments this is a **minor compaction**: those
+    * segments plus the delta fold into the one new segment, leaving
+    * the base generation and every other segment untouched — the
+    * tiered answer to the measured full-compaction spike (a
+    * base-corpus re-read + PQ/codebook retrain at every segment
+    * overflow scales with BASE size; at 100 TB that is the one
+    * write-amplification term that grows with the corpus rather than
+    * the delta). What keeps the fold O(sum-of-deltas):
+    *  - chunk, posting and LSH / int8 / PQ rows stream from the folded
+    *    dirs unchanged ([[writeGeneration]]'s carried dirs), plus a
+    *    fresh encode of just the delta;
+    *  - only the HNSW graphs are rebuilt, and only for the tail
+    *    ([[foldHnsw]]) — never over the base's embeddings;
+    *  - the derived tables roll forward from the delta exactly as for
+    *    a plain segment (the current derived dir already covers base +
+    *    old segments, and folding segments does not change the corpus).
+    *
+    * Sound only for the pure-append segments this store produces
+    * (ingest skips existing content-derived ids, so no id appears in
+    * two segments); the major path keeps the anti-join upsert for
+    * foreign/preloaded stores. Crash-safe like every other mutation:
+    * all dirs land before the manifest flips; orphans GC at startup. */
+  def appendSegment(spark: SparkSession, root: String, m: Manifest,
+                    delta: IndexBundle, folded: Seq[String] = Nil): Manifest = {
     val seq = m.seq + 1
     val segName = s"seg$seq"
     val seg = s"$root/$segName"
-
-    scrubTargets(spark, Seq(seg, s"$root/derived$seq"))
-
-    val emb = delta.chunks
-      .filter(col("embedding").isNotNull)
-      .select(col("id"), col("embedding"), col("organization_id"))
-
-    // even the two small gating probes (embedding count, postings
-    // emptiness) run INSIDE their branch's task: serial probes before
-    // the fan-out were a measured ~200 ms of dead time per batch
-    val chunkWrites = Seq(() =>
-      delta.chunks.write.mode("overwrite")
-        .partitionBy("organization_id").parquet(s"$seg/chunks"))
-
-    // dense sidecars from the delta bundle itself — `delta.chunks` is
-    // cached by Pipeline.ingest, so these are column-pruned cache
-    // reads; quantizer state stays pinned at the base
-    val sidecarWrites = Seq(() => {
-      val nEmb = emb.count()
-      if (nEmb > 0) {
-        val base = s"$root/${m.base}"
-        val pqWrite =
-          if (!exists(spark, s"$base/pq_centroids") ||
-              !exists(spark, s"$base/pq_codebook")) Nil
-          else Seq(() => {
-            val (cents, cb) = pinnedQuantizer(spark, base)
-            PqKnn.ivfPqIndex(emb, "id", "embedding", cents, cb)
-              .select(col("cid"), col("id"),
-                TableStore.packPidCodes(col("codes")).as("codes"))
-              .write.mode("overwrite").partitionBy("cid").parquet(s"$seg/pq")
-          })
-        awaitAll(Seq(
-          // same (tables, bits) and the same tenant-clustered writer as
-          // the base sidecar — the probe set is a static filter, so
-          // write and read configs must agree
-          () => TableStore.saveAnn(AnnKnn.index(emb, "id", "embedding",
-              m.lshTables, m.lshBits, keepCols = Seq("organization_id")), seg),
-          () => Quantize.quantized(emb, "id", "embedding")
-            .select(col("id"), col("codes").cast("array<tinyint>").as("codes"),
-              col("scale"))
-            .write.mode("overwrite").parquet(s"$seg/quantized"),
-          // per-segment HNSW graphs: small delta-sized shards; search
-          // unions them with the base's, compaction folds them back in
-          () => writeHnsw(emb, nEmb, seg)) ++ pqWrite)
-      }
-    })
-
-    // derived roll-forward — skipped entirely when the delta carries no
-    // postings (nothing changed; the manifest keeps pointing at the
-    // current derived dir). The flag is decided inside the task and
-    // read after the final await (safely published by it).
-    @volatile var hasPostings = false
-    val postingAndDerived = Seq(() => {
-      hasPostings = !delta.postings.isEmpty
-      if (hasPostings) {
-        val der = s"$root/derived$seq"
-        awaitAll(Seq(
-          () => TableStore.writeTerms(delta.postings, s"$seg/postings"),
-          () => writeDerived(spark, root, m, delta, der)))
-      }
-    })
-
-    awaitAll(chunkWrites ++ sidecarWrites ++ postingAndDerived)
-
+    val der = s"$root/derived$seq"
+    scrubTargets(spark, Seq(der))
+    val hasPostings = writeGeneration(spark, seg, delta, Pinned(s"$root/${m.base}"),
+      (m.lshTables, m.lshBits), carried = folded.map(d => s"$root/$d"),
+      rollForward = Some(() => writeDerived(spark, root, m, delta, der)))
+    if (folded.nonEmpty) foldHnsw(spark, root, seg, folded, delta)
     // annTables/annBits carried forward: a legacy store (fine-config
     // LSH sidecar) must keep probing at the config its base was built
     // with — dropping them to the default here would silently misalign
     // the probe set against the stored buckets
-    Manifest(m.base, m.segments :+ segName,
+    Manifest(m.base, m.segments.filterNot(folded.contains) :+ segName,
       if (hasPostings) s"derived$seq" else m.derived, seq,
       m.annTables, m.annBits, m.storeId.orElse(Some(newStoreId())))
   }
@@ -645,7 +722,7 @@ object SegmentedStore {
     * compaction (full-snapshot rewrite — retrains the PQ quantizer and
     * LSH/HNSW structures over the grown corpus) is warranted only once
     * the accumulated delta rows are comparable to the base; until then
-    * a **minor** fold ([[foldSegments]]) keeps the write amplification
+    * a **minor** fold ([[appendSegment]]) keeps the write amplification
     * O(delta). Decided from parquet FOOTER row counts (a `count()`
     * over a bare parquet scan is metadata-only — no column data is
     * read), so the probe costs one tiny job per store dir, runs once
@@ -701,187 +778,61 @@ object SegmentedStore {
     prefix.toSeq
   }
 
-  /** **Minor compaction**: fold every delta segment PLUS the incoming
-    * delta into ONE merged segment, leaving the base generation
-    * completely untouched — the tiered answer to the measured
-    * full-compaction spike (a base-corpus re-read + PQ/codebook retrain
-    * at every segment overflow scales with BASE size; at 100 TB that is
-    * the one write-amplification term that grows with the corpus
-    * rather than the delta).
-    *
-    * What makes the fold O(sum-of-deltas):
-    *  - chunk and posting rows stream from the old segment dirs into
-    *    one merged dir (same partition layout — no recompute);
-    *  - the LSH / int8 / PQ sidecar rows are PER-ROW codes pinned to
-    *    the base quantizer config, so folding them is a copy-union of
-    *    already-encoded rows plus a fresh encode of just the delta;
-    *  - only the HNSW graphs rebuild (graph structure is not
-    *    mergeable) — over the merged SEGMENT embeddings only, never
-    *    the base's;
-    *  - derived tables roll forward from the delta exactly as a
-    *    normal segment append does (the current derived dir already
-    *    covers base + old segments).
-    *
-    * Sound only for the pure-append segments this store produces
-    * (ingest skips existing content-derived ids, so no id appears in
-    * two segments); the major path keeps the anti-join upsert for
-    * foreign/preloaded stores. Crash-safe like every other mutation:
-    * all dirs land before the manifest flips; orphans GC at startup. */
-  def foldSegments(spark: SparkSession, root: String, m: Manifest,
-                   delta: IndexBundle,
-                   folded: Option[Seq[String]] = None): Manifest = {
-    val seq = m.seq + 1
-    val segName = s"seg$seq"
-    val seg = s"$root/$segName"
-    // size-tiered: fold only the chosen subset (default: everything),
-    // leaving bigger tiers untouched on disk AND in the manifest
-    val foldDirs = folded.getOrElse(m.segments)
-    val retained = m.segments.filterNot(foldDirs.contains)
-    val segDirs = foldDirs.map(d => s"$root/$d")
-    scrubTargets(spark, Seq(seg, s"$root/derived$seq"))
-
-    val emb = delta.chunks
-      .filter(col("embedding").isNotNull)
-      .select(col("id"), col("embedding"), col("organization_id"))
-
-    def merged(sub: String, fresh: Option[DataFrame]): Option[DataFrame] = {
-      val old = readUnion(spark, segDirs.map(_ + s"/$sub"))
-      (old, fresh) match {
-        case (Some(o), Some(f)) => Some(o.unionByName(f, allowMissingColumns = true))
-        case (o, f) => o.orElse(f)
-      }
-    }
-
-    // phase 1 — everything except HNSW, concurrently: each write is a
-    // stream of old-segment rows ∪ freshly-encoded delta rows. The
-    // union keeps one task per folded dir, so every table takes its
-    // base writer's rebalance: files in proportion to data, not to the
-    // number of folded inputs
-    val chunksWrite = () =>
-      merged("chunks", Some(delta.chunks)).foreach(
-        _.hint("rebalance", "organization_id")
-          .write.mode("overwrite").partitionBy("organization_id")
-          .parquet(s"$seg/chunks"))
-
-    val annWrite = () => {
-      val fresh =
-        if (emb.isEmpty) None
-        else Some(AnnKnn.index(emb, "id", "embedding", m.lshTables, m.lshBits,
-          keepCols = Seq("organization_id")))
-      merged("ann", fresh).foreach(TableStore.saveAnn(_, seg))
-    }
-
-    val quantWrite = () => {
-      val fresh =
-        if (emb.isEmpty) None
-        else Some(Quantize.quantized(emb, "id", "embedding")
-          .select(col("id"), col("codes").cast("array<tinyint>").as("codes"),
-            col("scale")))
-      merged("quantized", fresh).foreach(
-        _.hint("rebalance").sortWithinPartitions("id")
-          .write.mode("overwrite").parquet(s"$seg/quantized"))
-    }
-
-    val base = s"$root/${m.base}"
-    val pqWrite = () =>
-      if (exists(spark, s"$base/pq_centroids") &&
-          exists(spark, s"$base/pq_codebook")) {
-        val fresh =
-          if (emb.isEmpty) None
-          else {
-            val (cents, cb) = pinnedQuantizer(spark, base)
-            Some(PqKnn.ivfPqIndex(emb, "id", "embedding", cents, cb)
-              .select(col("cid"), col("id"),
-                TableStore.packPidCodes(col("codes")).as("codes")))
-          }
-        merged("pq", fresh).foreach(
-          _.hint("rebalance", "cid")
-            .write.mode("overwrite").partitionBy("cid").parquet(s"$seg/pq"))
-      }
-
-    @volatile var hasPostings = false
-    val postingsWrite = () => {
-      val fresh = if (delta.postings.isEmpty) None else Some(delta.postings)
-      hasPostings = fresh.isDefined
-      merged("postings", fresh).foreach(p =>
-        TableStore.writeTerms(p.hint("rebalance"), s"$seg/postings"))
-      // derived roll-forward from the DELTA only: the current derived
-      // dir already covers base + old segments, and folding segments
-      // does not change the corpus
-      if (hasPostings)
-        writeDerived(spark, root, m, delta, s"$root/derived$seq")
-    }
-
-    awaitAll(Seq(chunksWrite, annWrite, quantWrite, pqWrite, postingsWrite))
-
-    // phase 2 — HNSW graphs for the merged segment. Graph STRUCTURE is
-    // not mergeable, but graph ROWS are self-contained (one complete
-    // per-(tenant, shard) graph per row; search is a flatMap over
-    // rows), so a fold does not have to REBUILD the biggest folded
-    // tier's graphs: the largest folded segment becomes the DONOR —
-    // its graph rows copy over verbatim — and only the remaining
-    // (tail) segments' + delta's embeddings build fresh small graphs
-    // alongside. That bounds HNSW fold CPU by the tail even on a tier
-    // ESCALATION that pulls a big tier into the fold (the worst case
-    // the r14 audit flagged: the chunk re-stream is linear IO, but the
-    // graph rebuild was ef_construction·log n distance work on top).
-    // Guard: copied generations accumulate graph rows, and per-row
-    // beam searches are the query-time cost — once the merged dir
-    // would exceed 2× the shard count a from-scratch build of the
-    // merged corpus picks, fall back to the full rebuild (re-shard),
-    // keeping query fan-out within 2× of optimal. Deterministic either
-    // way: copied rows are the donor's deterministic build; fresh rows
-    // are a deterministic build of the tail content.
-    if (exists(spark, s"$seg/chunks")) {
-      val mergedEmb = spark.read.parquet(s"$seg/chunks")
-        .filter(col("embedding").isNotNull)
-        .select(col("id"), col("embedding"), col("organization_id"))
-      val n = mergedEmb.count()
-      if (n > 0) {
-        val donor = foldDirs
-          .map(d => d -> footerRows(spark, s"$root/$d/chunks"))
-          .maxBy { case (d, r) => (r, d) }._1
-        val donorHnsw = s"$root/$donor/hnsw"
-        val donorRows =
-          if (hasData(spark, donorHnsw))
-            spark.read.parquet(donorHnsw).count()
-          else 0L
-        val rest = readUnion(spark,
-            foldDirs.filterNot(_ == donor).map(d => s"$root/$d/chunks"))
-          .map(_.filter(col("embedding").isNotNull)
-            .select(col("id"), col("embedding"), col("organization_id"))
-            .unionByName(emb))
-          .getOrElse(emb)
-        val nRest = rest.count()
-        val freshShards = Hnsw.shardsFor(nRest)
-        // fan-out cap: 2× the shard count a from-scratch build would
-        // pick, with a floor of 4 rows — at toy scale optimal is 1 and
-        // a bare 2× forced a rebuild on the second copy, defeating the
-        // donor path exactly where it is cheapest
+  /** HNSW graphs for folded segment `seg`, after its merged chunks
+    * landed. Graph STRUCTURE is not mergeable, but graph ROWS are
+    * self-contained (one complete per-(tenant, shard) graph per row;
+    * search is a flatMap over rows), so a fold does not have to
+    * REBUILD the biggest folded tier's graphs: the largest folded
+    * segment becomes the DONOR — its graph rows copy over verbatim —
+    * and only the remaining (tail) segments' + delta's embeddings
+    * build fresh small graphs alongside. That bounds HNSW fold CPU by
+    * the tail even on a tier ESCALATION that pulls a big tier into the
+    * fold (the worst case the r14 audit flagged: the chunk re-stream is
+    * linear IO, but the graph rebuild was ef_construction·log n
+    * distance work on top). Guard: copied generations accumulate graph
+    * rows, and per-row beam searches are the query-time cost — once
+    * the merged dir would exceed 2× the shard count a from-scratch
+    * build of the merged corpus picks, fall back to the full rebuild
+    * (re-shard), keeping query fan-out within 2× of optimal.
+    * Deterministic either way: copied rows are the donor's
+    * deterministic build; fresh rows are a deterministic build of the
+    * tail content. */
+  private def foldHnsw(spark: SparkSession, root: String, seg: String,
+                       folded: Seq[String], delta: IndexBundle): Unit = {
+    val mergedEmb = embeddings(spark.read.parquet(s"$seg/chunks"))
+    val n = mergedEmb.count()
+    if (n > 0) {
+      val donor = folded
+        .map(d => d -> footerRows(spark, s"$root/$d/chunks"))
+        .maxBy { case (d, r) => (r, d) }._1
+      val donorHnsw = s"$root/$donor/hnsw"
+      val donorRows = footerRows(spark, donorHnsw)
+      val emb = embeddings(delta.chunks)
+      val rest = readUnion(spark,
+          folded.filterNot(_ == donor).map(d => s"$root/$d/chunks"))
+        .map(embeddings(_).unionByName(emb))
+        .getOrElse(emb)
+      val nRest = rest.count()
+      val freshShards = Hnsw.shardsFor(nRest)
+      // fan-out cap: 2× the shard count a from-scratch build would
+      // pick, with a floor of 4 rows — at toy scale optimal is 1 and
+      // a bare 2× forced a rebuild on the second copy, defeating the
+      // donor path exactly where it is cheapest
+      val graphs =
         if (donorRows == 0L ||
-            donorRows + freshShards >
-              math.max(4L, 2L * Hnsw.shardsFor(n)))
-          writeHnsw(mergedEmb, n, seg)
+            donorRows + freshShards > math.max(4L, 2L * Hnsw.shardsFor(n)))
+          hnswGraphs(mergedEmb, Hnsw.shardsFor(n))
         else {
           val donorG = spark.read.parquet(donorHnsw)
-          val freshG =
-            if (nRest == 0L) None
-            else Some(Hnsw.buildServing(rest, "id", "embedding",
-              "organization_id", freshShards).toDF())
-          freshG.fold(donorG)(donorG.unionByName(_))
-            .write.mode("overwrite").partitionBy("organization_id")
-            .parquet(s"$seg/hnsw")
+          if (nRest == 0L) donorG
+          else donorG.unionByName(hnswGraphs(rest, freshShards))
         }
-      }
+      TableStore.saveHnsw(graphs, seg)
     }
-
-    Manifest(m.base, retained :+ segName,
-      if (hasPostings) s"derived$seq" else m.derived, seq,
-      m.annTables, m.annBits, m.storeId.orElse(Some(newStoreId())))
   }
 
   /** The derived docfreq/idf/stats roll-forward into `der` (see
-    * [[writeSegment]] for the O(vocab) rationale). */
+    * [[appendSegment]] for the O(vocab) rationale). */
   private def writeDerived(spark: SparkSession, root: String, m: Manifest,
                            delta: IndexBundle, der: String): Unit = {
     // same rows as the just-written segment postings: the lineage

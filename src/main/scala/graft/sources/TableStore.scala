@@ -106,13 +106,24 @@ object TableStore {
     * seeds and compactions pay the slowest write, not the sum. */
   def save(bundle: IndexBundle, root: String): Unit =
     SegmentedStore.awaitAll(Seq(
-      () => bundle.chunks.hint("rebalance", "organization_id")
-        .write.mode("overwrite")
-        .partitionBy("organization_id").parquet(s"$root/chunks"),
-      () => writeTerms(bundle.postings, s"$root/postings"),
+      () => saveChunks(bundle.chunks, root),
+      () => savePostings(bundle.postings, root),
       () => writeTerms(bundle.idf, s"$root/idf"),
       () => writeTerms(bundle.docFreq, s"$root/docfreq"),
       () => bundle.stats.write.mode("overwrite").parquet(s"$root/stats")))
+
+  /** The chunk fact table, one directory per tenant, rebalanced by
+    * tenant: files in proportion to tenants, not to upstream tasks. */
+  def saveChunks(chunks: DataFrame, root: String): Unit =
+    chunks.hint("rebalance", "organization_id")
+      .write.mode("overwrite")
+      .partitionBy("organization_id").parquet(s"$root/chunks")
+
+  /** The postings table, in its lineage's partitioning: a shuffle's
+    * output, already sized to the data by AQE. A rebalance there only
+    * reorders rows tied on (term_blk, term), which compresses worse. */
+  def savePostings(postings: DataFrame, root: String): Unit =
+    writeTerms(postings, s"$root/postings")
 
   /** The one writer of the term-keyed tables (postings, idf, docfreq)
     * in base generations, segments, folds and derived dirs: `term_blk`
@@ -126,19 +137,14 @@ object TableStore {
       .write.mode("overwrite").parquet(path)
 
   /** Load a bundle saved by [[save]]. The postings/idf keep their
-    * `term_blk` column so the BM25 read path can prune blocks.
-    * `saved` is the in-memory bundle that [[save]] wrote here: its
-    * schemas stand in for footer inference, one job per table. */
-  def load(spark: SparkSession, root: String,
-           saved: Option[IndexBundle] = None): IndexBundle =
-    graft.ingest.Pipeline.IndexBundle(
-      chunks = read(spark, s"$root/chunks", saved.map(_.chunks.schema)),
-      postings = read(spark, s"$root/postings",
-        saved.map(b => withTermBlk(b.postings.schema))),
-      docFreq = read(spark, s"$root/docfreq",
-        saved.map(b => withTermBlk(b.docFreq.schema))),
-      idf = read(spark, s"$root/idf", saved.map(b => withTermBlk(b.idf.schema))),
-      stats = read(spark, s"$root/stats", saved.map(_.stats.schema)))
+    * `term_blk` column so the BM25 read path can prune blocks. */
+  def load(spark: SparkSession, root: String): IndexBundle =
+    IndexBundle(
+      chunks = read(spark, s"$root/chunks"),
+      postings = read(spark, s"$root/postings"),
+      docFreq = read(spark, s"$root/docfreq"),
+      idf = read(spark, s"$root/idf"),
+      stats = read(spark, s"$root/stats"))
 
   /** The stored shape of an in-memory term table: [[writeTerms]] adds
     * `term_blk`, so a read schema taken from a pre-write DataFrame
@@ -248,23 +254,6 @@ object TableStore {
   def loadVectors(spark: SparkSession, root: String): DataFrame =
     spark.read.parquet(s"$root/vectors")
 
-  /** IVF store layout: the [[graft.operators.AnnKnn.ivfIndex]] posting
-    * table partitioned by cid (bounded: one directory per centroid)
-    * plus the tiny centroid table. A query's nProbe probed lists
-    * become a static cid filter
-    * ([[graft.operators.AnnKnn.ivfStoreCandidates]]) — the scan opens
-    * only the probed list directories. */
-  def saveIvf(index: DataFrame, centroids: DataFrame, root: String): Unit = {
-    index.hint("rebalance", "cid").write.mode("overwrite")
-      .partitionBy("cid").parquet(s"$root/ivf")
-    centroids.coalesce(1).write.mode("overwrite").parquet(s"$root/ivf_centroids")
-  }
-
-  /** (index, centroids) as saved by [[saveIvf]]. */
-  def loadIvf(spark: SparkSession, root: String): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$root/ivf"),
-      spark.read.parquet(s"$root/ivf_centroids"))
-
   /** Quantized vector store: int8 codes persisted as `array<tinyint>`
     * + a per-vector double scale — 4× smaller files than raw
     * float32/float64 embedding columns, and the read path restores the
@@ -276,12 +265,17 @@ object TableStore {
     * compresses worse). */
   def saveQuantized(emb: DataFrame, idCol: String, vecCol: String,
                     root: String): Unit =
+    saveQuantizedRows(quantizedRows(emb, idCol, vecCol), root)
+
+  /** The stored rows of the int8 table: (id, `array<tinyint>` codes,
+    * scale). */
+  def quantizedRows(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
     graft.operators.Quantize.quantized(emb, idCol, vecCol)
-      .select(org.apache.spark.sql.functions.col("id"),
-        org.apache.spark.sql.functions.col("codes").cast("array<tinyint>")
-          .as("codes"),
-        org.apache.spark.sql.functions.col("scale"))
-      .hint("rebalance").sortWithinPartitions("id")
+      .select(col("id"), col("codes").cast("array<tinyint>").as("codes"), col("scale"))
+
+  /** Write [[quantizedRows]]-shaped rows as the int8 table. */
+  def saveQuantizedRows(rows: DataFrame, root: String): Unit =
+    rows.hint("rebalance").sortWithinPartitions("id")
       .write.mode("overwrite").parquet(s"$root/quantized")
 
   def loadQuantized(spark: SparkSession, root: String): DataFrame =
@@ -340,26 +334,37 @@ object TableStore {
     * vector instead of 8·d (64× at the d=64/m=8 config), the layout
     * where the probed ANN scan reads codes only and raw floats stay in
     * the [[saveVectors]] sidecar for the final refine. Codebook rides
-    * along as a (j, pid, cvec) table (m·k rows — tiny). */
+    * along as a (j, pid, cvec) table (m·k rows — tiny). The three
+    * tables land concurrently. */
   def savePq(index: DataFrame, cb: graft.operators.PqKnn.Codebook,
              root: String, centroids: Option[DataFrame] = None): Unit = {
-    index.select(col("cid"), col("id"),
-        packPidCodes(col("codes")).as("codes"))
-      .hint("rebalance", "cid")
-      .write.mode("overwrite").partitionBy("cid").parquet(s"$root/pq")
     val spark = index.sparkSession
     import spark.implicits._
-    (for (j <- 0 until cb.m; p <- 0 until cb.k) yield
-        (j, p, (0 until cb.sub).map(i => cb.flat((j * cb.k + p) * cb.sub + i))))
-      .toDF("j", "pid", "cvec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/pq_codebook")
-    centroids.foreach(_.coalesce(1).write.mode("overwrite")
-      .parquet(s"$root/pq_centroids"))
+    SegmentedStore.awaitAll(Seq(
+      () => savePqRows(pqRows(index), root),
+      () => (for (j <- 0 until cb.m; p <- 0 until cb.k) yield
+          (j, p, (0 until cb.sub).map(i => cb.flat((j * cb.k + p) * cb.sub + i))))
+        .toDF("j", "pid", "cvec")
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/pq_codebook")) ++
+      centroids.map(c => () => c.coalesce(1).write.mode("overwrite")
+        .parquet(s"$root/pq_centroids")))
   }
 
-  /** Coarse centroids as written by [[savePq]] (service read path). */
-  def loadPqCentroids(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(s"$root/pq_centroids")
+  /** The stored rows of a [[graft.operators.PqKnn.ivfPqIndex]] index:
+    * (cid, id, [[packPidCodes]] codes). */
+  def pqRows(index: DataFrame): DataFrame =
+    index.select(col("cid"), col("id"), packPidCodes(col("codes")).as("codes"))
+
+  /** Write [[pqRows]]-shaped rows as the PQ code table. */
+  def savePqRows(rows: DataFrame, root: String): Unit =
+    rows.hint("rebalance", "cid")
+      .write.mode("overwrite").partitionBy("cid").parquet(s"$root/pq")
+
+  /** HNSW serving graphs ([[graft.operators.Hnsw.buildServing]] rows),
+    * one directory per tenant so the F3 filter is a directory prune. */
+  def saveHnsw(graphs: DataFrame, root: String): Unit =
+    graphs.write.mode("overwrite").partitionBy("organization_id")
+      .parquet(s"$root/hnsw")
 
   /** (codes index, codebook) as written by [[savePq]]; codes come back
     * as `array<int>` pids ([[unpackPidCodes]]) for the ADC kernel. */

@@ -67,9 +67,10 @@ class StoreLayoutSpec extends SparkSpec {
     // tenant, PQ codes one per coarse centroid, the rest none) and a
     // file budget of one file per directory plus one — a fold
     // rebalances like the base writers, so its files do not grow with
-    // the number of folded segments
+    // the number of folded segments, and a segment's files do not grow
+    // with the number of tasks its delta spans
     val tenantSplit = Set("chunks", "ann", "hnsw")
-    val failures = for {
+    def failures(dirs: Seq[String]) = for {
       d <- dirs
       table <- Files.list(Paths.get(root, d)).iterator().asScala.toSeq
       if Files.isDirectory(table)
@@ -79,7 +80,18 @@ class StoreLayoutSpec extends SparkSpec {
       if subdirs > dirBudget || files > math.max(dirBudget, 1) + 1 ||
         files == 0
     } yield s"$d/$name: $files files in $subdirs dirs (budget $dirBudget dirs)"
-    assert(failures.isEmpty, failures.mkString("\n"))
+    val small = failures(dirs)
+
+    // one delta big enough to span several partitions, its tenants
+    // interleaved the way an upload stream mixes them: a plain segment
+    val bulk = for (i <- 1 to 50; t <- 1 to tenants) yield
+      (s"bulk_${t}_$i.md", s"Bulk note $i of tenant $t on ledger audits, invoice " +
+        s"archives and storage policy ${(t + i) % 7}; marker bulk${i % 11}.", s"org_$t")
+    svc.ingestBatch(docsDf(bulk))
+    val m2 = SegmentedStore.readManifest(root).get
+    assert(m2.segments.size == 2, s"the bulk delta appends one segment: $m2")
+    val big = failures(Seq(m2.segments.last, m2.derived))
+    assert((small ++ big).isEmpty, (small ++ big).mkString("\n"))
   }
 
   test("a store whose base is in the directory layouts serves the same results") {
