@@ -90,7 +90,8 @@ object Bpe {
     // per-step pairCounts+rewrite jobs (2·nMerges tiny Spark jobs over
     // a cached ≤vocabTypes-row local relation) were pure scheduler
     // overhead — on a real cluster master each is an RPC round-trip,
-    // the q113/JobCount lesson. The only Spark action left in training
+    // the q113 lesson (measured by the since-removed JobCount tool).
+    // The only Spark action left in training
     // is this one bounded collect; the only corpus-sized pass remains
     // wordHistogram's shuffle, unchanged.
     val seeded = hist.select(seqString(col("word")).as("ws"), col("cnt"))

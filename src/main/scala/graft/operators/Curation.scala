@@ -798,10 +798,11 @@ object Curation {
     * the approx (sketch-threshold) path: the exact marker's driver
     * TakeOrdered collects and re-broadcasts frac·N ids — a real scale
     * term once frac·N is millions of rows — while the two paths are
-    * measured equal-cost already at 500k docs (DsirBench: 118.6 vs
-    * 123.0 s, rate 0.2001 vs target 0.2). 1M docs keeps gate/spec
-    * scales bit-exact on the oracle-pinned exact path with an order of
-    * magnitude of headroom before the driver term matters. */
+    * measured equal-cost already at 500k docs (118.6 vs 123.0 s, rate
+    * 0.2001 vs target 0.2, by the since-removed DsirBench tool). 1M
+    * docs keeps gate/spec scales bit-exact on the oracle-pinned exact
+    * path with an order of magnitude of headroom before the driver
+    * term matters. */
   val DsirApproxAboveDocs: Long = 1000000L
 
   /** Scale-routing front door for DSIR selection: exact Gumbel-top-k

@@ -181,9 +181,9 @@ object StreamBench {
     // CurationStream.curateToServeStream batch body — curate the batch
     // against the cumulative state, index the survivors into the
     // serving store — timed at two serving-store sizes. Both per-batch
-    // terms are individually pinned flat (curation: above; ingest:
-    // ServeBench); this pins their COMPOSITION, where a hidden
-    // cross-term (e.g. a survivor join against the store) would
+    // terms are individually pinned flat (curation: above; ingest: the
+    // since-removed ServeBench); this pins their COMPOSITION, where a
+    // hidden cross-term (e.g. a survivor join against the store) would
     // surface as growth in store size.
     if (sys.env.contains("SPARK_GRAFT_SERVE")) {
       val serveResults = Seq(500, 2000).map { n =>
