@@ -3,18 +3,21 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.types.{DataType, IntegerType}
 
-import graft.functions._
+import graft.functions.Kernels
 
-/** SQL surface for the custom Catalyst kernels (S10): registering this
+/** SQL surface for the codegen kernels (S10): registering this
   * class via `spark.sql.extensions=graft.GraftExtensions` (or
   * `SparkSession.builder.withExtensions(new GraftExtensions()(_))`)
-  * makes every graft kernel callable from plain `spark.sql` — the
+  * makes the graft kernels callable from plain `spark.sql` — the
   * library's equivalent of the reference's REST query surface
   * (`src/api/main.py`), expressed the Spark-native way so BI tools /
-  * thriftserver clients reach the same codegen'd expressions as the
-  * DataFrame API.
+  * thriftserver clients reach the same codegen'd kernels as the
+  * DataFrame API. The functions are the rows of the kernel table
+  * [[graft.functions.Kernels]] that carry a SQL name, built by the same
+  * row as their `Column` helper:
   *
   *   SELECT graft_dot(a.emb, b.emb)            -- V1 kernel
   *   SELECT graft_maxsim(qpatches, patches)    -- A15/V2 kernel
@@ -41,44 +44,22 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftExtensions {
 
   private def intLit(name: String, e: Expression, pos: Int): Int = e match {
-    case Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
+    case Literal(v: Int, IntegerType) => v
     case _ => throw new IllegalArgumentException(
       s"$name: argument ${pos + 1} must be an integer literal, got $e")
   }
 
-  private def arity(name: String, args: Seq[Expression], n: Int): Unit =
-    if (args.length != n) throw new IllegalArgumentException(
-      s"$name expects $n arguments, got ${args.length}")
-
-  /** (name, usage, builder). One entry per kernel — the registry the
-    * class injects and the spec iterates. */
-  val registrations: Seq[(String, String, (String, Seq[Expression]) => Expression)] = Seq(
-    ("graft_dot", "graft_dot(a, b) - dot product of two double arrays",
-      (n, a) => { arity(n, a, 2); DotProduct(a(0), a(1)) }),
-    ("graft_cosine", "graft_cosine(a, b) - cosine similarity of two double arrays",
-      (n, a) => { arity(n, a, 2); CosineSim(a(0), a(1)) }),
-    ("graft_maxsim", "graft_maxsim(q, d) - ColBERT/ColPali MaxSim of two patch matrices",
-      (n, a) => { arity(n, a, 2); MaxSim(a(0), a(1)) }),
-    ("graft_pack_f32", "graft_pack_f32(patches, dim) - row-major float32 binary packing of a patch matrix",
-      (n, a) => { arity(n, a, 2); PackF32(a(0), intLit(n, a(1), 1)) }),
-    ("graft_maxsim_f32", "graft_maxsim_f32(q, packed, dim) - MaxSim against a pack_f32 binary cell",
-      (n, a) => { arity(n, a, 3); MaxSimF32(a(0), a(1), intLit(n, a(2), 2)) }),
-    ("graft_minhash", "graft_minhash(hashes, k) - k-perm MinHash signature of a bigint array",
-      (n, a) => { arity(n, a, 2); MinHashSig(a(0), intLit(n, a(1), 1)) }),
-    ("graft_simhash", "graft_simhash(hashes, bits) - SimHash fingerprint of a bigint array",
-      (n, a) => { arity(n, a, 2); SimHash(a(0), intLit(n, a(1), 1)) }),
-    ("graft_feature_embed", "graft_feature_embed(hashes, dim) - deterministic feature-hash embedding",
-      (n, a) => { arity(n, a, 2); FeatureHashEmbed(a(0), intLit(n, a(1), 1)) }),
-    ("graft_hyperplane_buckets", "graft_hyperplane_buckets(vec, tables, bits) - LSH bucket ids per table",
-      (n, a) => { arity(n, a, 3)
-        HyperplaneBuckets(a(0), intLit(n, a(1), 1), intLit(n, a(2), 2)) }),
-    ("graft_porter_stem", "graft_porter_stem(term) - Porter-stemmed term",
-      (n, a) => { arity(n, a, 1); PorterStem(a(0)) }),
-    ("graft_tokenize", "graft_tokenize(text) - BM25 tokenizer (lowercase, punct-strip, stopwords, len>=2)",
-      (n, a) => { arity(n, a, 1); Tokenize(a(0)) }),
-    ("graft_ws_tokens", "graft_ws_tokens(text) - whitespace tokens (no filtering)",
-      (n, a) => { arity(n, a, 1); WsTokens(a(0)) }),
-    ("graft_lang_id", "graft_lang_id(tokens) - function-word language ID (en/de/es/fr/zh/und)",
-      (n, a) => { arity(n, a, 1); LangId(a(0)) }),
-  )
+  /** (name, usage, builder), one entry per kernel row with a SQL name —
+    * the registry the class injects and the spec iterates. */
+  val registrations: Seq[(String, String, (String, Seq[Expression]) => Expression)] =
+    Kernels.all.flatMap(k => k.sql.map { sql =>
+      val cols = k.inputs.length
+      (sql.name, sql.usage, (n: String, args: Seq[Expression]) => {
+        if (args.length != cols + sql.intArgs) throw new IllegalArgumentException(
+          s"$n expects ${cols + sql.intArgs} arguments, got ${args.length}")
+        val consts = args.zipWithIndex.drop(cols).map { case (e, i) => intLit(n, e, i) }
+        k.call(args.take(cols).zip(k.inputs).map { case (e, t) => Cast(e, DataType.fromDDL(t)) },
+          consts)
+      })
+    })
 }

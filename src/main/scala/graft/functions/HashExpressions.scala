@@ -15,24 +15,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * A HOF formulation (`transform(sequence(...), i -> array_min(...))`)
   * walks the token array k times and boxes every element; these
-  * expressions do one O(n·k) / O(n·b) tight primitive loop inside
+  * kernels do one O(n·k) / O(n·b) tight primitive loop inside
   * whole-stage codegen — the difference between hours and minutes on a
   * 100 TB dedup sweep.
   */
-
-/** minhash_sig(hashes, k): array<long> of k min-hash values;
-  * sig_i = min over h of ((2i+1)·h + 1299721·i + 7) mod (2^31-1).
-  * Empty input ⇒ null (no signature for empty docs).
-  */
-case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
+object SketchKernels {
   private val P = 2147483647L
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "minhash_sig"
-
-  override def nullSafeEval(in: Any): Any = {
-    val hs = in.asInstanceOf[ArrayData]
+  /** minhash_sig(hashes, k): array<long> of k min-hash values;
+    * sig_i = min over h of ((2i+1)·h + 1299721·i + 7) mod (2^31-1).
+    * Empty input ⇒ null (no signature for empty docs). */
+  def minhash(hs: ArrayData, k: Int): ArrayData = {
     val n = hs.numElements()
     if (n == 0) return null
     val sig = Array.fill(k)(Long.MaxValue)
@@ -50,45 +43,9 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
     new GenericArrayData(sig)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, hs => {
-      val n = ctx.freshName("n"); val sig = ctx.freshName("sig")
-      val j = ctx.freshName("j"); val i = ctx.freshName("i")
-      val h = ctx.freshName("h"); val v = ctx.freshName("v")
-      s"""
-         |int $n = $hs.numElements();
-         |if ($n == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long[] $sig = new long[$k];
-         |  java.util.Arrays.fill($sig, Long.MAX_VALUE);
-         |  for (int $j = 0; $j < $n; $j++) {
-         |    long $h = $hs.getLong($j);
-         |    for (int $i = 0; $i < $k; $i++) {
-         |      long $v = ((2L * $i + 1L) * $h + 1299721L * $i + 7L) % ${P}L;
-         |      if ($v < $sig[$i]) $sig[$i] = $v;
-         |    }
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($sig);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** simhash(hashes, bits): long whose bit b is set iff
-  * Σ_tokens (((h >> b) & 1)·2 − 1) > 0. Empty input ⇒ 0.
-  */
-case class SimHash(child: Expression, bits: Int) extends UnaryExpression {
-  require(bits > 0 && bits <= 63)
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash"
-
-  override def nullSafeEval(in: Any): Any = {
-    val hs = in.asInstanceOf[ArrayData]
+  /** simhash(hashes, bits): long whose bit b is set iff
+    * Σ_tokens (((h >> b) & 1)·2 − 1) > 0. Empty input ⇒ 0. */
+  def simhash(hs: ArrayData, bits: Int): Long = {
     val n = hs.numElements()
     val counts = new Array[Int](bits)
     var j = 0
@@ -109,31 +66,6 @@ case class SimHash(child: Expression, bits: Int) extends UnaryExpression {
     }
     out
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, hs => {
-      val n = ctx.freshName("n"); val counts = ctx.freshName("counts")
-      val j = ctx.freshName("j"); val b = ctx.freshName("b")
-      val h = ctx.freshName("h"); val out = ctx.freshName("out")
-      s"""
-         |int $n = $hs.numElements();
-         |int[] $counts = new int[$bits];
-         |for (int $j = 0; $j < $n; $j++) {
-         |  long $h = $hs.getLong($j);
-         |  for (int $b = 0; $b < $bits; $b++) {
-         |    if ((($h >> $b) & 1L) == 1L) $counts[$b]++; else $counts[$b]--;
-         |  }
-         |}
-         |long $out = 0L;
-         |for (int $b = 0; $b < $bits; $b++) {
-         |  if ($counts[$b] > 0) $out |= (1L << $b);
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** hash56_map(strings[, mod]): array<long> — the portable 56-bit hash
@@ -194,38 +126,6 @@ object Hash56OneKernel {
   }
 }
 
-case class Hash56One(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "hash56"
-
-  override def nullSafeEval(in: Any): Any =
-    Hash56OneKernel.eval(in.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.Hash56OneKernel.eval($x);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class Hash56Map(child: Expression, mod: Long) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType,
-    containsNull = child.dataType.asInstanceOf[ArrayType].containsNull)
-  override def prettyName: String = "hash56_map"
-
-  override def nullSafeEval(in: Any): Any =
-    Hash56MapKernel.eval(in.asInstanceOf[ArrayData], mod)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.Hash56MapKernel.eval($x, ${mod}L);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** band_keys(sig, bands, rows): array<string> of `bands` LSH band keys —
   * band b is `md5(array_join(slice(sig, b*rows+1, rows), "_"))`, i.e.
   * the lowercase md5 hex of the band's signature longs rendered in
@@ -275,24 +175,6 @@ object BandKeysKernel {
   }
 }
 
-case class BandKeys(child: Expression, bands: Int, rows: Int)
-    extends UnaryExpression {
-  require(bands >= 1 && rows >= 1)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "band_keys"
-
-  override def nullSafeEval(in: Any): Any =
-    BandKeysKernel.eval(in.asInstanceOf[ArrayData], bands, rows)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.BandKeysKernel.eval($x, $bands, $rows);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** bloom_might_contain(hash): probe of a broadcast Bloom filter as a
   * native codegen expression. The `udf((h: Long) => bc.value
   * .mightContainLong(h))` form it replaces pays ScalaUDF overhead per
@@ -300,7 +182,9 @@ case class BandKeys(child: Expression, bands: Int, rows: Int)
   * on what is the corpus-sized hot path of bloom decontamination; this
   * expression calls the same filter through a plan reference, so the
   * per-row work is exactly one mightContainLong. Result-identical by
-  * construction: same filter object, same probe method. */
+  * construction: same filter object, same probe method. A real
+  * expression rather than a [[Kernels]] row: it dereferences the
+  * broadcast per row, which a static call cannot. */
 case class BloomMightContain(
     child: Expression,
     bloom: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter])
@@ -325,28 +209,26 @@ case class BloomMightContain(
 }
 
 object HashFunctions {
-  /** k-permutation min-hash signature over pre-modded hashes. */
-  def minhashSig(hashes: Column, k: Int): Column =
-    Bridge.column(MinHashSig(Bridge.expression(hashes.cast("array<bigint>")), k))
+  /** k-permutation min-hash signature over pre-modded hashes (see
+    * [[SketchKernels.minhash]]). */
+  def minhashSig(hashes: Column, k: Int): Column = Kernels.minhashSig(hashes, k)
 
   /** hash56 (optionally mod m) over every element of a string array —
     * the codegen replacement for `transform(arr, x -> hash56(x) % m)`.
     * See [[Hash56MapKernel]]; parity pinned in HashKernelSpec. */
   def hash56Map(arr: Column, mod: Option[Long] = None): Column =
-    Bridge.column(Hash56Map(
-      Bridge.expression(arr.cast("array<string>")), mod.getOrElse(0L)))
+    Kernels.hash56Map(arr, mod.getOrElse(0L))
 
-  /** SimHash over pre-modded hashes (default 32 bits). */
-  def simhash(hashes: Column, bits: Int = 32): Column =
-    Bridge.column(SimHash(Bridge.expression(hashes.cast("array<bigint>")), bits))
+  /** SimHash over pre-modded hashes (default 32 bits; see
+    * [[SketchKernels.simhash]]). */
+  def simhash(hashes: Column, bits: Int = 32): Column = Kernels.simhash(hashes, bits)
 
   /** LSH band keys over a minhash signature — the codegen replacement
     * for `transform(sequence(0, bands-1), b -> md5(array_join(slice(
     * sig, b*rows+1, rows), "_")))`. See [[BandKeysKernel]]; parity
     * pinned in HashKernelSpec. */
   def bandKeys(sig: Column, bands: Int, rows: Int): Column =
-    Bridge.column(BandKeys(
-      Bridge.expression(sig.cast("array<bigint>")), bands, rows))
+    Kernels.bandKeys(sig, bands, rows)
 
   /** Broadcast-Bloom probe as a codegen expression — the replacement
     * for the per-row ScalaUDF form. See [[BloomMightContain]]. */

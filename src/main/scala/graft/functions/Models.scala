@@ -39,7 +39,7 @@ trait Embedder extends Serializable {
 }
 
 /** Default embedder: the codegen'd feature-hash kernel (I9 stand-in,
-  * `EmbedExpression.scala`) over portable 56-bit token hashes. */
+  * [[EmbedFunctions.featureHashEmbed]]) over portable 56-bit token hashes. */
 case class FeatureHashEmbedder(dim: Int = 64) extends Embedder {
   override def embed(tokens: Column): Column =
     EmbedFunctions.featureHashEmbed(HashFunctions.hash56Map(tokens), dim)

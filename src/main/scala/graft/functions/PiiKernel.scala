@@ -3,8 +3,7 @@ package graft.functions
 import java.util.regex.{Matcher, Pattern}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -152,46 +151,4 @@ object PiiKernel {
     }
     false
   }
-}
-
-/** pii_scrub(text): struct<n_email,n_ipv4,n_ssn,n_phone,redacted> */
-case class PiiScrub(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = PiiKernel.scrubType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "pii_scrub"
-  override def nullSafeEval(in: Any): Any =
-    PiiKernel.scrub(in.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.PiiKernel.scrub($x);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** pii_redact(text): string — all PII spans replaced by placeholders. */
-case class PiiRedact(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "pii_redact"
-  override def nullSafeEval(in: Any): Any =
-    PiiKernel.redact(in.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.PiiKernel.redact($x);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** pii_has(text): boolean — exact `any pattern matches` test. */
-case class PiiHas(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "pii_has"
-  override def nullSafeEval(in: Any): Any =
-    PiiKernel.hasPii(in.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.PiiKernel.hasPii($x);")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

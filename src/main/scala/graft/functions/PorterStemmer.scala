@@ -1,10 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The Porter stemming algorithm (M.F. Porter, 1980 — the published
@@ -26,7 +21,8 @@ object PorterStemmer {
     new String(st.b, 0, st.k + 1)
   }
 
-  /** UTF8String adapter for codegen call sites. */
+  /** UTF8String adapter: the `porter_stem` kernel ([[Kernels]]), so the
+    * column, JVM and codegen paths are one implementation. */
   def stemUTF8(s: UTF8String): UTF8String =
     UTF8String.fromString(stem(s.toString))
 
@@ -206,23 +202,4 @@ object PorterStemmer {
       step1(); step2(); step3(); step4(); step5(); step6()
     }
   }
-}
-
-/** porter_stem(word): the stemmer as a whole-stage-codegen scalar —
-  * the generated code calls the shared static kernel, so the column,
-  * JVM and codegen paths are literally one implementation. */
-case class PorterStem(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "porter_stem"
-
-  override def nullSafeEval(in: Any): Any =
-    PorterStemmer.stemUTF8(in.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.PorterStemmer.stemUTF8($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types._
 
 /** Product-quantization kernels (Jégou et al., "Product Quantization
   * for Nearest Neighbor Search", TPAMI 2011) — the storage/bandwidth
@@ -47,9 +44,9 @@ import org.apache.spark.sql.types._
 object Pq {
 
   /** Flat codebook layout: `cb[((j·k + p)·sub + i)]` = dim i of
-    * centroid p in subspace j. One primitive array — referenced from
-    * codegen via `addReferenceObj`, never unrolled into literals (the
-    * q55 codegen-limit lesson, BASELINE round 2). */
+    * centroid p in subspace j. One primitive array — a reference object
+    * of the generated code (an `ObjectType` literal), never unrolled
+    * into literals (the q55 codegen-limit lesson, BASELINE round 2). */
   def encode(x: ArrayData, cb: Array[Double], m: Int, sub: Int, k: Int): ArrayData =
     new GenericArrayData(encodeArr(x, cb, m, sub, k))
 
@@ -147,65 +144,17 @@ object Pq {
   }
 }
 
-/** pq_encode(vec): array<int> of m centroid ids under a fixed flat
-  * codebook — the ingest-side half of the PQ path. Runs fused in the
-  * scan-project stage; the codebook rides along as one reference
-  * object (k·d doubles, ≤ a few KB).
-  */
-case class PqEncode(child: Expression, cb: Array[Double],
-                    m: Int, sub: Int, k: Int) extends UnaryExpression {
-  require(m > 0 && sub > 0 && k > 0 && cb.length == m * sub * k,
-    s"codebook must hold m*k*sub doubles (${m * sub * k}), got ${cb.length}")
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "pq_encode"
-
-  override def nullSafeEval(in: Any): Any =
-    Pq.encode(in.asInstanceOf[ArrayData], cb, m, sub, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val cbRef = ctx.addReferenceObj("pqCodebook", cb, "double[]")
-      s"${ev.value} = graft.functions.Pq.encode($x, $cbRef, $m, $sub, $k);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** pq_adc(codes): double ADC score under a fixed per-query lookup
-  * table — m array reads per row, no per-dimension arithmetic. The hot
-  * scan of the PQ read path.
-  */
-case class PqAdcScore(child: Expression, lut: Array[Double], k: Int)
-    extends UnaryExpression {
-  require(k > 0 && lut.length % k == 0, "lut length must be m*k")
-
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "pq_adc"
-
-  override def nullSafeEval(in: Any): Any =
-    Pq.adc(in.asInstanceOf[ArrayData], lut, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val lutRef = ctx.addReferenceObj("pqLut", lut, "double[]")
-      s"${ev.value} = graft.functions.Pq.adc($x, $lutRef, $k);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object PqFunctions {
 
-  /** PQ codes for a vector column under `cb` (flat layout, see [[Pq]]). */
+  /** pq_encode: PQ codes for a vector column under `cb` (flat layout,
+    * see [[Pq]]) — the ingest-side half of the PQ path, fused in the
+    * scan-project stage; the codebook rides along as one reference
+    * object (k·d doubles, ≤ a few KB). */
   def pqEncode(vec: Column, cb: Array[Double], m: Int, sub: Int, k: Int): Column =
-    Bridge.column(PqEncode(Bridge.expression(vec.cast("array<double>")), cb, m, sub, k))
+    Kernels.pqEncode(vec, cb, m, sub, k)
 
-  /** ADC score for a codes column under a per-query lut. */
-  def pqAdc(codes: Column, lut: Array[Double], k: Int): Column =
-    Bridge.column(PqAdcScore(Bridge.expression(codes.cast("array<int>")), lut, k))
+  /** pq_adc: ADC score for a codes column under a per-query lut — m
+    * array reads per row, no per-dimension arithmetic. The hot scan of
+    * the PQ read path. */
+  def pqAdc(codes: Column, lut: Array[Double], k: Int): Column = Kernels.pqAdc(codes, lut, k)
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 
 /** Text kernels shared by the BM25 / dedup / analysis operators.
   *
@@ -48,8 +47,7 @@ object TextFunctions {
     * — so "naïve" tokenizes to ["na","ve"] here but ["naïve"] in the
     * reference. Engine and oracle agree with each other on all inputs;
     * the divergence vs the reference only affects non-ASCII letters. */
-  def tokenize(c: Column): Column =
-    Bridge.column(Tokenize(Bridge.expression(c.cast("string"))))
+  def tokenize(c: Column): Column = Kernels.tokenize(c)
 
   /** Same tokenizer as a DuckDB SQL fragment over column expr `col`. */
   def tokenizeSql(col: String): String =
@@ -59,8 +57,7 @@ object TextFunctions {
   /** Porter-stemmed token column (reference `bm25_store.py:73-75`,
     * optional-off): applied AFTER stopword/length filtering, exactly
     * as the reference's TextPreprocessor orders its stages. */
-  def porterStem(c: Column): Column =
-    Bridge.column(PorterStem(Bridge.expression(c.cast("string"))))
+  def porterStem(c: Column): Column = Kernels.porterStem(c)
 
   /** Tokenizer with the reference's optional stemming stage. The
     * default (stem = false) is byte-identical to [[tokenize]], keeping
@@ -76,16 +73,14 @@ object TextFunctions {
     * quality/token-count analyses where raw words matter. Single-pass
     * kernel, byte-identical to `filter(split(trim(c), "\s+"), len>0)`
     * (parity pinned in TokenizerBm25Spec). */
-  def wsTokens(c: Column): Column =
-    Bridge.column(WsTokens(Bridge.expression(c.cast("string"))))
+  def wsTokens(c: Column): Column = Kernels.wsTokens(c)
 
   def wsTokensSql(col: String): String =
     s"list_filter(regexp_split_to_array(trim($col), '\\s+'), t -> length(t) > 0)"
 
   /** Unicode NFC canonical composition (codegen kernel; DuckDB twin is
     * the built-in `nfc_normalize`). */
-  def nfcNormalize(c: Column): Column =
-    Bridge.column(NfcNormalize(Bridge.expression(c.cast("string"))))
+  def nfcNormalize(c: Column): Column = Kernels.nfcNormalize(c)
 
   /** C4/CCNet-style text normalization as a deterministic regex chain
     * over the NFC form — the step a multilingual pre-training pipeline
@@ -120,13 +115,12 @@ object TextFunctions {
   /** 56-bit stable hash: first 14 hex digits of md5, as a BIGINT. The
     * one hash both Spark and DuckDB (`'0x'||…::BIGINT`) compute
     * identically — the foundation for minhash/simhash/fingerprint
-    * oracle parity. Engine side runs the [[Hash56One]] kernel (value
+    * oracle parity. Engine side runs the [[Hash56OneKernel]] (value
     * composed from the top 7 digest bytes); the former
     * `conv(substring(md5(c), 1, 14), 16, 10)` column program is
     * bit-identical by construction (HashKernelSpec pins it) but
     * rendered, substring'd and re-parsed 32 hex chars per row. */
-  def hash56(c: Column): Column =
-    Bridge.column(Hash56One(Bridge.expression(c.cast("string"))))
+  def hash56(c: Column): Column = Kernels.hash56(c)
 
   def hash56Sql(col: String): String =
     s"(('0x' || substr(md5($col), 1, 14))::BIGINT)"
@@ -163,25 +157,20 @@ object TextFunctions {
     * null token arrays still yield the empty array (the `when`
     * fall-through the column program had). */
   def shingles(toks: Column, n: Int): Column =
-    coalesce(
-      Bridge.column(Shingles(Bridge.expression(toks.cast("array<string>")), n)),
-      array().cast("array<string>"))
+    coalesce(Kernels.shingles(toks, n), array().cast("array<string>"))
 
   /** Σ length(token) over a token array (code points) — codegen kernel
     * replacing `aggregate(toks, 0L, (a, t) -> a + length(t))`. */
-  def sumLen(toks: Column): Column =
-    Bridge.column(SumLen(Bridge.expression(toks.cast("array<string>"))))
+  def sumLen(toks: Column): Column = Kernels.sumLen(toks)
 
   /** (best run, distinct count) over the sorted array — codegen kernel
     * replacing the interpreted sorted-run `aggregate` fold. */
-  def runStats(arr: Column): Column =
-    Bridge.column(RunStats(Bridge.expression(arr.cast("array<string>"))))
+  def runStats(arr: Column): Column = Kernels.runStats(arr)
 
   /** Adjacent-pair structs (w1, w2) per position — codegen kernel
     * replacing the interpreted `transform(sequence(1, size-1), i ->
     * struct(element_at…, element_at…))`. Caller guards size >= 2. */
-  def bigrams(toks: Column): Column =
-    Bridge.column(Bigrams(Bridge.expression(toks.cast("array<string>"))))
+  def bigrams(toks: Column): Column = Kernels.bigrams(toks)
 
   /** Count of `set` list elements present in `arr` — one token pass
     * instead of one whole-array scan per set element. A null `arr`
@@ -189,27 +178,21 @@ object TextFunctions {
     * array_contains(arr, s)))` did (the filtered list is the never-
     * null literal; a null arr just fails every contains). */
   def setHits(arr: Column, set: Seq[String]): Column =
-    coalesce(
-      Bridge.column(SetHits(Bridge.expression(arr.cast("array<string>")), set)),
-      lit(0L))
+    coalesce(Kernels.setHits(arr, Words(set)), lit(0L))
 
   /** Count of `arr` elements that are `set` members. */
-  def countIn(arr: Column, set: Seq[String]): Column =
-    Bridge.column(CountIn(Bridge.expression(arr.cast("array<string>")), set))
+  def countIn(arr: Column, set: Seq[String]): Column = Kernels.countIn(arr, Words(set))
 
   /** Count of elements containing an ASCII letter (`rlike("[a-zA-Z]")`). */
-  def countAlpha(arr: Column): Column =
-    Bridge.column(CountAlpha(Bridge.expression(arr.cast("array<string>"))))
+  def countAlpha(arr: Column): Column = Kernels.countAlpha(arr)
 
   /** Elements matching ^[a-z]+$ — the interpreted per-token rlike. */
-  def filterLowerAlpha(arr: Column): Column =
-    Bridge.column(FilterLowerAlpha(Bridge.expression(arr.cast("array<string>"))))
+  def filterLowerAlpha(arr: Column): Column = Kernels.filterLowerAlpha(arr)
 
   /** Ascending-sorted IEEE left-to-right double sum — the codegen form
     * of `aggregate(array_sort(xs), 0.0, (acc, x) -> acc + x)`, the
     * engine-stability fold convention. */
-  def sumSorted(xs: Column): Column =
-    Bridge.column(SumSorted(Bridge.expression(xs.cast("array<double>"))))
+  def sumSorted(xs: Column): Column = Kernels.sumSorted(xs)
 
   /** Histogram-entropy perplexity surrogate, fused — the codegen form
     * of the staged `withPplScore` chain (sort → boundaries → sorted
@@ -217,49 +200,38 @@ object TextFunctions {
     * A null token array yields 1.0 — the staged program's
     * `when(size > 0, …).otherwise(1.0)` null fall-through. */
   def pplScore(toks: Column): Column =
-    coalesce(
-      Bridge.column(PplScore(Bridge.expression(toks.cast("array<string>")))),
-      lit(1.0))
+    coalesce(Kernels.pplScore(toks), lit(1.0))
 
   /** struct(n_lines, kept) of the C4 line-keep rules over a raw
     * document — the fused codegen form of `split` + the per-line
     * interpreted keepLine filter (see [[KeptLinesKernel]]). */
-  def keptLines(text: Column, minWords: Int): Column =
-    Bridge.column(KeptLines(Bridge.expression(text.cast("string")), minWords))
+  def keptLines(text: Column, minWords: Int): Column = Kernels.keptLines(text, minWords)
 
   /** Rolling polynomial fingerprint fold over a hash array — the
     * codegen form of `aggregate(hs, 0L, (acc, h) -> (acc*31 + h%P) %
     * P)` (see [[FpFoldKernel]]). */
-  def fpFold(hashes: Column): Column =
-    Bridge.column(FpFold(Bridge.expression(hashes.cast("array<bigint>"))))
+  def fpFold(hashes: Column): Column = Kernels.fpFold(hashes)
 
   /** struct(codes, scale) int8 max-abs quantization — the fused form
     * of the two-transform program (see [[QuantizeI8Kernel]]). */
-  def quantizeI8(vec: Column): Column =
-    Bridge.column(QuantizeI8(Bridge.expression(vec.cast("array<double>"))))
+  def quantizeI8(vec: Column): Column = Kernels.quantizeI8(vec)
 
   /** Sort struct<pos,line> elements and join the line fields with
     * "\n" — the repeated-line dedup reassembly as one kernel pass
     * (see [[JoinSortedLinesKernel]]). */
-  def joinSortedLines(arr: Column): Column =
-    Bridge.column(JoinSortedLines(
-      Bridge.expression(arr.cast("array<struct<pos:int,line:string>>"))))
+  def joinSortedLines(arr: Column): Column = Kernels.joinSortedLines(arr)
 
   /** struct(n_lines, bullets, ells) over the non-empty trimmed lines —
     * the fused Gopher per-line counters (see [[LineStatsKernel]]). */
   def lineStats(text: Column, bullets: Seq[String]): Column =
-    Bridge.column(LineStats(Bridge.expression(text.cast("string")), bullets))
+    Kernels.lineStats(text, Words(bullets))
 
   /** Tokens at positions NOT in `cov`, joined with " " — the span
     * scrubber's reassembly as one kernel pass (see [[ScrubJoinKernel]]).
     * Null toks yields "" — the column program's empty-sequence
     * fall-through. */
   def scrubJoin(toks: Column, cov: Column): Column =
-    coalesce(
-      Bridge.column(ScrubJoin(
-        Bridge.expression(toks.cast("array<string>")),
-        Bridge.expression(coalesce(cov, array()).cast("array<int>")))),
-      lit(""))
+    coalesce(Kernels.scrubJoin(toks, coalesce(cov, array())), lit(""))
 
   def shinglesSql(toks: String, n: Int): String =
     s"list_transform(range(greatest(len($toks) - ${n - 1}, 0)), i -> array_to_string(list_slice($toks, i + 1, i + $n), ' '))"

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Whitespace tokenizer kernel: maximal runs of non-ASCII-whitespace
@@ -35,23 +32,6 @@ object WsTokensKernel {
     }
     new GenericArrayData(out.toArray)
   }
-}
-
-/** ws_tokens(text): array<string> — see [[WsTokensKernel]]. */
-case class WsTokens(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "ws_tokens"
-
-  override def nullSafeEval(in: Any): Any =
-    WsTokensKernel.tokenize(in.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.WsTokensKernel.tokenize($x);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Language-ID kernel: per-language function-word hit counts + the
@@ -101,23 +81,6 @@ object LangIdKernel {
   }
 }
 
-/** lang_id(toks): string — see [[LangIdKernel]]. */
-case class LangId(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "lang_id"
-
-  override def nullSafeEval(in: Any): Any =
-    LangIdKernel.eval(in.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.LangIdKernel.eval($x);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Word n-gram shingle kernel: one output string per start position
   * 0..len-n, each the space-join of n consecutive tokens — the codegen
   * replacement for `transform(sequence(0, size-n), i ->
@@ -154,24 +117,6 @@ object ShinglesKernel {
   }
 }
 
-/** shingles_k(toks, n): array<string> — see [[ShinglesKernel]]. */
-case class Shingles(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "shingles_k"
-
-  override def nullSafeEval(in: Any): Any =
-    ShinglesKernel.eval(in.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.ShinglesKernel.eval($x, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Adjacent-pair (bigram) kernel: one struct<w1,w2> per position —
   * the codegen replacement for `transform(sequence(1, size-1), i ->
   * struct(element_at(toks, i), element_at(toks, i+1)))`, whose lambda
@@ -195,26 +140,6 @@ object BigramsKernel {
     }
     new GenericArrayData(out)
   }
-}
-
-/** bigrams(toks): array<struct<w1:string,w2:string>> — see
-  * [[BigramsKernel]]. */
-case class Bigrams(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("w1", StringType), StructField("w2", StringType))),
-    containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "bigrams"
-
-  override def nullSafeEval(in: Any): Any =
-    BigramsKernel.eval(in.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.BigramsKernel.eval($x);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Sorted run-length statistics kernel for the repetition signals: sort
@@ -253,26 +178,6 @@ object RunStatsKernel {
   }
 }
 
-/** run_stats(sorted-or-not array): struct<best:bigint,d:bigint> —
-  * longest equal run and distinct count over the SORTED array. */
-case class RunStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("best", LongType, nullable = false),
-    StructField("d", LongType, nullable = false)))
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "run_stats"
-
-  override def nullSafeEval(in: Any): Any =
-    RunStatsKernel.eval(in.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.RunStatsKernel.eval($x);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Sorted double sum: sort ascending (java.lang.Double total order —
   * identical to `array_sort` on doubles: NaN last, -0.0 < 0.0) and
   * fold left-to-right in IEEE order — the codegen replacement for the
@@ -283,7 +188,7 @@ case class RunStats(child: Expression) extends UnaryExpression {
   * fold's `acc + null` did (null sorts LAST in array_sort, so the
   * poisoned tail still nulls the total regardless of position). */
 object SumSortedKernel {
-  def eval(arr: ArrayData): Any = {
+  def eval(arr: ArrayData): java.lang.Double = {
     val n = arr.numElements()
     val a = new Array[Double](n)
     var i = 0
@@ -300,34 +205,12 @@ object SumSortedKernel {
   }
 }
 
-/** sum_sorted(xs): double — see [[SumSortedKernel]]. */
-case class SumSorted(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "sum_sorted"
-
-  override def nullSafeEval(in: Any): Any =
-    SumSortedKernel.eval(in.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val r = ctx.freshName("sumSortedR")
-      s"""Object $r = graft.functions.SumSortedKernel.eval($x);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ((java.lang.Double) $r).doubleValue(); }
-         |""".stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Σ length(token) kernel (code points, like `length`): the codegen
   * replacement for `aggregate(toks, 0L, (a, t) -> a + length(t))`.
   * A null element poisons the sum to null exactly as the fold's
   * `acc + null` did. */
 object SumLenKernel {
-  def eval(arr: ArrayData): Any = {
+  def eval(arr: ArrayData): java.lang.Long = {
     val n = arr.numElements()
     var s = 0L
     var i = 0
@@ -340,47 +223,26 @@ object SumLenKernel {
   }
 }
 
-/** sum_len(toks): bigint — see [[SumLenKernel]]. */
-case class SumLen(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "sum_len"
-
-  override def nullSafeEval(in: Any): Any =
-    SumLenKernel.eval(in.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val r = ctx.freshName("sumLenR")
-      s"""Object $r = graft.functions.SumLenKernel.eval($x);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ((java.lang.Long) $r).longValue(); }
-         |""".stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Fixed-set membership counters and the lowercase-word filter — the
   * codegen replacements for three interpreted HOF patterns:
   *
   *  - `size(filter(typedLit(set), s -> array_contains(arr, s)))`
   *    scanned the WHOLE token array once per set element (O(set ×
   *    tokens) interpreted scans per row — the Gopher stop-hits term);
-  *    [[SetHits]] makes one pass over the tokens against a hash set.
+  *    [[setHits]] makes one pass over the tokens against a hash set.
   *  - `size(filter(arr, x -> array_contains(lit(set), x)))` counted
-  *    tokens that are set members; [[CountIn]] is the same hash-set
+  *    tokens that are set members; [[countIn]] is the same hash-set
   *    pass (the classifier's weak-label stop count).
   *  - `filter(words, w -> w.rlike("^[a-z]+$"))` ran an interpreted
-  *    regex per token; [[FilterLowerAlpha]] keeps non-empty all-
+  *    regex per token; [[filterLowerAlpha]] keeps non-empty all-
   *    ASCII-lowercase tokens (identical: wsTokens tokens contain no
   *    line terminators, so Java's `$` is the string end).
   *
   * Null elements are skipped exactly as each filter predicate's null
   * fell through to false. */
 object SetKernels {
-  def setHits(arr: ArrayData, set: Array[UTF8String]): Long = {
+  def setHits(arr: ArrayData, words: Words): Long = {
+    val set = words.utf8
     // one pass over the tokens building a membership set, then each
     // ORIGINAL list element tested once — duplicates in the list count
     // twice, exactly as the filter-over-literal-list program did
@@ -400,7 +262,8 @@ object SetKernels {
     c
   }
 
-  def countIn(arr: ArrayData, set: java.util.HashSet[UTF8String]): Long = {
+  def countIn(arr: ArrayData, words: Words): Long = {
+    val set = words.set
     val n = arr.numElements()
     var c = 0L
     var i = 0
@@ -433,12 +296,6 @@ object SetKernels {
     new GenericArrayData(out.toArray)
   }
 
-  def toSet(words: Seq[String]): java.util.HashSet[UTF8String] = {
-    val s = new java.util.HashSet[UTF8String]()
-    words.foreach(w => s.add(UTF8String.fromString(w)))
-    s
-  }
-
   /** count of elements containing an ASCII letter — `rlike("[a-zA-Z]")`
     * is an unanchored find, i.e. "contains". */
   def countAlpha(arr: ArrayData): Long = {
@@ -463,84 +320,6 @@ object SetKernels {
   }
 }
 
-/** count_alpha(arr): count of elements containing an ASCII letter. */
-case class CountAlpha(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "count_alpha"
-
-  override def nullSafeEval(in: Any): Any =
-    SetKernels.countAlpha(in.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.SetKernels.countAlpha($x);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** set_hits(arr): count of `set` list elements present in arr
-  * (duplicates in the list count per occurrence). */
-case class SetHits(child: Expression, set: Seq[String]) extends UnaryExpression {
-  @transient private lazy val arr: Array[UTF8String] =
-    set.map(UTF8String.fromString).toArray
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "set_hits"
-
-  override def nullSafeEval(in: Any): Any =
-    SetKernels.setHits(in.asInstanceOf[ArrayData], arr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("setHitsList", arr,
-      "org.apache.spark.unsafe.types.UTF8String[]")
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.SetKernels.setHits($x, $ref);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** count_in(arr): count of arr elements that are `set` members. */
-case class CountIn(child: Expression, set: Seq[String]) extends UnaryExpression {
-  @transient private lazy val hs = SetKernels.toSet(set)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "count_in"
-
-  override def nullSafeEval(in: Any): Any =
-    SetKernels.countIn(in.asInstanceOf[ArrayData], hs)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("countInSet", hs,
-      "java.util.HashSet<org.apache.spark.unsafe.types.UTF8String>")
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.SetKernels.countIn($x, $ref);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** filter_lower_alpha(arr): elements matching ^[a-z]+$. */
-case class FilterLowerAlpha(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "filter_lower_alpha"
-
-  override def nullSafeEval(in: Any): Any =
-    SetKernels.filterLowerAlpha(in.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.SetKernels.filterLowerAlpha($x);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Unicode NFC kernel: canonical composition via the JDK's
   * `java.text.Normalizer` — both the JVM and DuckDB's `nfc_normalize`
   * implement the Unicode-conformant NFC transform, so outputs are
@@ -555,23 +334,6 @@ object NfcKernel {
     else UTF8String.fromString(
       java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFC))
   }
-}
-
-/** nfc_normalize(text): string — see [[NfcKernel]]. */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "nfc_normalize"
-
-  override def nullSafeEval(in: Any): Any =
-    NfcKernel.eval(in.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.NfcKernel.eval($x);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Histogram-entropy perplexity kernel — the fused codegen form of the
@@ -632,23 +394,6 @@ object PplScoreKernel {
     java.math.BigDecimal.valueOf(x)
       .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
   }
-}
-
-/** ppl_score(toks): double — see [[PplScoreKernel]]. */
-case class PplScore(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "ppl_score"
-
-  override def nullSafeEval(in: Any): Any =
-    PplScoreKernel.eval(in.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.PplScoreKernel.eval($x);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** C4 line-clean kernel — one pass over a document replacing the
@@ -722,27 +467,6 @@ object KeptLinesKernel {
   }
 }
 
-/** c4_kept_lines(text): struct<n_lines:int, kept:array<string>> — see
-  * [[KeptLinesKernel]]. */
-case class KeptLines(child: Expression, minWords: Int) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_lines", IntegerType, nullable = false),
-    StructField("kept", ArrayType(StringType, containsNull = false),
-      nullable = false)))
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "c4_kept_lines"
-
-  override def nullSafeEval(in: Any): Any =
-    KeptLinesKernel.eval(in.asInstanceOf[UTF8String], minWords)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.KeptLinesKernel.eval($x, $minWords);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Rolling polynomial fingerprint fold — the codegen form of
   * `aggregate(hashes, 0L, (acc, h) -> (acc*31 + h%P) % P)` with
   * P = 1e9+7 (the q38 fingerprint). Same left-to-right fold, same
@@ -751,7 +475,7 @@ case class KeptLines(child: Expression, minWords: Int) extends UnaryExpression {
   * result to null exactly as the fold's `acc + null` did. */
 object FpFoldKernel {
   val P = 1000000007L
-  def eval(arr: ArrayData): Any = {
+  def eval(arr: ArrayData): java.lang.Long = {
     val n = arr.numElements()
     var acc = 0L
     var i = 0
@@ -762,28 +486,6 @@ object FpFoldKernel {
     }
     java.lang.Long.valueOf(acc)
   }
-}
-
-/** fp_fold(hashes): bigint — see [[FpFoldKernel]]. */
-case class FpFold(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "fp_fold"
-
-  override def nullSafeEval(in: Any): Any =
-    FpFoldKernel.eval(in.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val r = ctx.freshName("fpFoldR")
-      s"""Object $r = graft.functions.FpFoldKernel.eval($x);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ((java.lang.Long) $r).longValue(); }
-         |""".stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Gopher per-line counters — one pass over a document replacing three
@@ -802,7 +504,8 @@ object LineStatsKernel {
   private val Ell3 = UTF8String.fromString("...")
   private val EllU = UTF8String.fromString("…")
 
-  def eval(text: UTF8String, bullets: Array[UTF8String]): InternalRow = {
+  def eval(text: UTF8String, bulletList: Words): InternalRow = {
+    val bullets = bulletList.utf8
     val parts = text.split(NL, -1)
     var n = 0
     var b = 0
@@ -826,34 +529,6 @@ object LineStatsKernel {
     }
     InternalRow(n, b, e)
   }
-}
-
-/** line_stats(text): struct<n_lines:int, bullets:int, ells:int> — see
-  * [[LineStatsKernel]]. The bullet-lead list is a constructor literal. */
-case class LineStats(child: Expression, bullets: Seq[String])
-    extends UnaryExpression {
-  @transient private lazy val bs: Array[UTF8String] =
-    bullets.map(UTF8String.fromString).toArray
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_lines", IntegerType, nullable = false),
-    StructField("bullets", IntegerType, nullable = false),
-    StructField("ells", IntegerType, nullable = false)))
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "line_stats"
-
-  override def nullSafeEval(in: Any): Any =
-    LineStatsKernel.eval(in.asInstanceOf[UTF8String], bs)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("lineStatsBullets", bs,
-      "org.apache.spark.unsafe.types.UTF8String[]")
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.LineStatsKernel.eval($x, $ref);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Covered-position scrub kernel — the fused codegen form of the span
@@ -893,25 +568,6 @@ object ScrubJoinKernel {
     }
     s
   }
-}
-
-/** scrub_join(toks, cov): string — see [[ScrubJoinKernel]]. */
-case class ScrubJoin(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "scrub_join"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ScrubJoinKernel.eval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.ScrubJoinKernel.eval($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Ordered line reassembly for the repeated-line dedup: sort an
@@ -970,23 +626,6 @@ object JoinSortedLinesKernel {
   }
 }
 
-/** join_sorted_lines(arr): string — see [[JoinSortedLinesKernel]]. */
-case class JoinSortedLines(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "join_sorted_lines"
-
-  override def nullSafeEval(in: Any): Any =
-    JoinSortedLinesKernel.eval(in.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.JoinSortedLinesKernel.eval($x);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 /** Int8 max-abs quantization kernel — the fused codegen form of the
   * two-transform program `scale = array_max(transform(v, abs));
   * codes = transform(v, x -> when(scale > 0, floor(x/scale*127 + 0.5))
@@ -1028,25 +667,4 @@ object QuantizeI8Kernel {
     InternalRow(new GenericArrayData(codes),
       if (any) java.lang.Double.valueOf(scale) else null)
   }
-}
-
-/** quantize_i8(vec): struct<codes:array<double>, scale:double> — see
-  * [[QuantizeI8Kernel]]. */
-case class QuantizeI8(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("codes", ArrayType(DoubleType, containsNull = true),
-      nullable = false),
-    StructField("scale", DoubleType, nullable = true)))
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "quantize_i8"
-
-  override def nullSafeEval(in: Any): Any =
-    QuantizeI8Kernel.eval(in.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.QuantizeI8Kernel.eval($x);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -1,12 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Single-pass BM25 tokenizer kernel.
+/** Single-pass BM25 tokenizer kernel (`bm25_tokenize`).
   *
   * Byte-identical to the composed column program
   * `filter(split(regexp_replace(lower(c), "[^\w\s]", " "), "\s+"), …)`
@@ -48,22 +45,4 @@ object TokenizeKernel {
     }
     new GenericArrayData(out.toArray)
   }
-}
-
-/** bm25_tokenize(text): array<string> — see [[TokenizeKernel]]. */
-case class Tokenize(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "bm25_tokenize"
-
-  override def nullSafeEval(in: Any): Any =
-    TokenizeKernel.tokenize(in.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.TokenizeKernel.tokenize($x);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -23,7 +23,7 @@ import graft.functions.VectorFunctions
   *    rescored with the codegen'd dot kernel and top-k'd.
   *
   * Determinism: the hyperplanes are a fixed integer-hash family
-  * ([[graft.functions.HyperplaneBuckets]]), so the whole path — bucket
+  * ([[graft.functions.VectorKernels.hyperplaneBuckets]]), so the whole path — bucket
   * assignment, candidate set, scores — is reproducible in the DuckDB
   * oracle. Recall is tunable with (tables, bits): more tables → more
   * probes → higher recall; more bits → smaller buckets → cheaper

@@ -40,7 +40,7 @@ import graft.functions.TextFunctions
   * The seed labels come from a deterministic weak-supervision rule
   * (stopword-density fluency proxy, integer arithmetic only) — the
   * stand-in seam for the reference-world annotation table, exactly as
-  * [[graft.functions.FeatureHashEmbed]] stands in for the dense
+  * [[graft.functions.EmbedFunctions.featureHashEmbed]] stands in for the dense
   * embedding model (SURVEY §2.8 I9). Swap the `y` column for real
   * labels and nothing else changes.
   */

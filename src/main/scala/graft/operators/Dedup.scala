@@ -14,8 +14,8 @@ import graft.functions.{HashFunctions, TextFunctions, VectorFunctions}
   * set is a join on a small key (band hash, simhash bucket, blocking
   * column) rather than an O(n²) cross product — at 100 TB the shuffles
   * are (band_key) and (doc pair) only, and the per-doc sketches are
-  * one-pass codegen'd kernels ([[graft.functions.MinHashSig]] /
-  * [[graft.functions.SimHash]]).
+  * one-pass codegen'd kernels ([[graft.functions.SketchKernels]]'s
+  * `minhash` / `simhash`).
   */
 object Dedup {
 

@@ -2,9 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.Tables
+import graft.functions.Kernels
 
 /** PII detection and redaction — the scrubbing pass every large-scale
   * training-data pipeline runs before anything else sees the text
@@ -53,9 +53,15 @@ object Pii {
   /** All PII spans replaced by typed placeholders, in [[patterns]]
     * order — each rewrite hides its spans from later patterns. One
     * fused kernel pass ([[graft.functions.PiiKernel.redact]]). */
-  def redact(text: Column): Column =
-    Bridge.column(graft.functions.PiiRedact(
-      Bridge.expression(text.cast("string"))))
+  def redact(text: Column): Column = Kernels.piiRedact(text)
+
+  /** struct(n_email, n_ipv4, n_ssn, n_phone, redacted): the fused
+    * count+redact pass ([[graft.functions.PiiKernel.scrub]]). */
+  def scrub(text: Column): Column = Kernels.piiScrub(text)
+
+  /** Exact `any pattern matches` test, find-first
+    * ([[graft.functions.PiiKernel.hasPii]]). */
+  def has(text: Column): Column = Kernels.piiHas(text)
 
   /** The 4-pass `regexp_replace` twin of [[redact]], kept for the
     * kernel parity spec. */
@@ -79,12 +85,8 @@ object Pii {
     * through the projection would duplicate the expensive kernel into
     * the filter and evaluate it twice per surviving row. */
   def scan(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val text = col(textCol).cast("string")
-    val hit = Bridge.column(graft.functions.PiiHas(Bridge.expression(text)))
-    val scrub =
-      Bridge.column(graft.functions.PiiScrub(Bridge.expression(text)))
-    docs.filter(hit)
-      .select(col(idCol), scrub.as("__pii"))
+    docs.filter(has(col(textCol)))
+      .select(col(idCol), scrub(col(textCol)).as("__pii"))
       .select(col(idCol) +:
         patterns.map(p => col(s"__pii.n_${p._1}").as(s"n_${p._1}")) :+
         col("__pii.redacted").as("redacted"): _*)

@@ -13,10 +13,10 @@ import graft.functions.{Pq, PqFunctions, VectorFunctions}
   *  1. coarse IVF partitioning ([[AnnKnn.ivfIndex]]) → the probe set
   *     is a STATIC cid filter, so a cid-partitioned store opens only
   *     nProbe directories;
-  *  2. PQ codes ([[graft.functions.PqEncode]]) inside each list →
+  *  2. PQ codes ([[graft.functions.Pq.encode]]) inside each list →
   *     m bytes per vector instead of 8·d (64× at d=64/m=8): the
   *     probed scan reads codes, never raw floats;
-  *  3. asymmetric-distance scoring ([[graft.functions.PqAdcScore]])
+  *  3. asymmetric-distance scoring ([[graft.functions.Pq.adc]])
   *     with a driver-built per-query lookup table → candidates rank
   *     with m table reads per row; the top `refine·k` then rescore
   *     EXACTLY against raw vectors fetched by id (a broadcast
@@ -238,7 +238,7 @@ object PqKnn {
 
   /** Shared CTE block: codebook (sampled rule), per-(vector, subspace)
     * code argmin, per-query lut — the SQL twins of
-    * [[sampledCodebook]] / [[graft.functions.PqEncode]] /
+    * [[sampledCodebook]] / [[graft.functions.Pq.encode]] /
     * [[Pq.lutJvm]]. Yields `codes(vec_id, cs)` (m-element pid list)
     * and `lut(L)` (flat m·k list, j-major). */
   private def pqCtes: String = {

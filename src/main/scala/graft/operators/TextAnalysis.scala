@@ -19,10 +19,7 @@ object TextAnalysis {
     * per-language filter + nested-when program it replaced lives on as
     * [[langIdColumnProgram]] (spec parity) and as the shape the DuckDB
     * twin [[langIdSql]] is generated from. */
-  def langId(toks: Column): Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.functions.LangId(
-        org.apache.spark.sql.graftbridge.Bridge.expression(toks)))
+  def langId(toks: Column): Column = graft.functions.Kernels.langId(toks)
 
   /** The original declarative form of [[langId]] — kept as the parity
     * reference for the kernel and the template of the SQL twin. */

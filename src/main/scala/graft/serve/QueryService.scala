@@ -119,8 +119,8 @@ class QueryService(
     // written) rather than serving the written frames directly: the
     // fresh generation's dirs get listed and memoized HERE, inside the
     // already-O(corpus) snapshot write, so the first post-seed delta
-    // flip doesn't pay the one-time base listing (O(tenant dirs) — the
-    // 8.3 s first-probe spike OrgBench measured at 10k orgs)
+    // flip doesn't pay the one-time base listing (O(tenant dirs) — an
+    // 8.3 s first-probe spike at 10k orgs, BASELINE.md rounds 8-10)
     bundle = Some(SegmentedStore.loadView(spark, storeRoot, next, hint = Some(b)))
     // same prewarm for the dense sidecar views (pure listing + schema
     // memo population — no jobs beyond the one-time inference)
@@ -142,7 +142,8 @@ class QueryService(
     * merged segment without touching base or any bigger folded tier —
     * O(small tail), not O(corpus) and not O(biggest tier) — and the
     * folded segment dirs retire too. */
-  private def persistDelta(delta: IndexBundle, folded: Seq[String] = Nil): Unit = {
+  private def persistDelta(delta: IndexBundle,
+                           folded: Seq[(String, Long)] = Nil): Unit = {
     val m = manifest.getOrElse(
       throw new IllegalStateException("delta persist needs a base generation"))
     val next = SegmentedStore.appendSegment(spark, storeRoot, m, delta, folded)
@@ -151,7 +152,7 @@ class QueryService(
     // schemas, so the refresh fires zero inference jobs
     bundle = Some(SegmentedStore.loadView(spark, storeRoot, next, hint = bundle))
     manifest = Some(next)
-    retire((folded ++
+    retire((folded.map(_._1) ++
       (if (m.derived != next.derived && m.derived != m.base) Seq(m.derived)
        else Nil)).distinct)
   }
@@ -165,12 +166,14 @@ class QueryService(
   private def persistInsert(delta: IndexBundle): Unit = (bundle, manifest) match {
     case (None, _) | (_, None) => persistFull(delta)
     case (Some(old), Some(m)) if m.segments.size >= SegmentedStore.MaxSegments =>
-      // one row-count pass serves both the major check and the fold-set
-      // selection — the dirs can't change under the mutation lease
+      // one row-count pass serves the major check, the fold-set
+      // selection and the fold's HNSW donor — the dirs can't change
+      // under the mutation lease
       val segRows = SegmentedStore.segmentRows(spark, storeRoot, m)
       if (SegmentedStore.needsMajorCompaction(spark, storeRoot, m, segRows))
         persistFull(mergeBundles(old, delta))
-      else persistDelta(delta, SegmentedStore.foldSet(m, segRows))
+      else persistDelta(delta,
+        SegmentedStore.foldSet(m, segRows).map(d => d -> segRows(d)))
     case _ => persistDelta(delta)
   }
 

@@ -676,7 +676,8 @@ object SegmentedStore {
     * touched. The derived roll-forward is skipped when the delta
     * carries no postings (the manifest keeps the current derived dir).
     *
-    * With `folded` segments this is a **minor compaction**: those
+    * With `folded` segments (each with its chunk row count from the
+    * caller's [[segmentRows]] pass) this is a **minor compaction**: those
     * segments plus the delta fold into the one new segment, leaving
     * the base generation and every other segment untouched — the
     * tiered answer to the measured full-compaction spike (a
@@ -699,21 +700,23 @@ object SegmentedStore {
     * foreign/preloaded stores. Crash-safe like every other mutation:
     * all dirs land before the manifest flips; orphans GC at startup. */
   def appendSegment(spark: SparkSession, root: String, m: Manifest,
-                    delta: IndexBundle, folded: Seq[String] = Nil): Manifest = {
+                    delta: IndexBundle,
+                    folded: Seq[(String, Long)] = Nil): Manifest = {
     val seq = m.seq + 1
     val segName = s"seg$seq"
     val seg = s"$root/$segName"
     val der = s"$root/derived$seq"
     scrubTargets(spark, Seq(der))
     val hasPostings = writeGeneration(spark, seg, delta, Pinned(s"$root/${m.base}"),
-      (m.lshTables, m.lshBits), carried = folded.map(d => s"$root/$d"),
+      (m.lshTables, m.lshBits), carried = folded.map { case (d, _) => s"$root/$d" },
       rollForward = Some(() => writeDerived(spark, root, m, delta, der)))
     if (folded.nonEmpty) foldHnsw(spark, root, seg, folded, delta)
     // annTables/annBits carried forward: a legacy store (fine-config
     // LSH sidecar) must keep probing at the config its base was built
     // with — dropping them to the default here would silently misalign
     // the probe set against the stored buckets
-    Manifest(m.base, m.segments.filterNot(folded.contains) :+ segName,
+    val foldedDirs = folded.map(_._1).toSet
+    Manifest(m.base, m.segments.filterNot(foldedDirs) :+ segName,
       if (hasPostings) s"derived$seq" else m.derived, seq,
       m.annTables, m.annBits, m.storeId.orElse(Some(newStoreId())))
   }
@@ -736,9 +739,10 @@ object SegmentedStore {
   }
 
   /** Per-segment chunk row counts, computed ONCE per overflow and
-    * shared by [[needsMajorCompaction]] and [[foldSet]] — the counts
-    * cannot change between the two checks (both run under the same
-    * mutation lease), and each count is a Spark job. */
+    * shared by [[needsMajorCompaction]], [[foldSet]] and the fold's
+    * HNSW donor choice — the counts cannot change between them (all
+    * run under the same mutation lease), and each count is a Spark
+    * job. */
   def segmentRows(spark: SparkSession, root: String,
                   m: Manifest): Map[String, Long] =
     m.segments.map(d => d -> footerRows(spark, s"$root/$d/chunks")).toMap
@@ -783,7 +787,8 @@ object SegmentedStore {
     * self-contained (one complete per-(tenant, shard) graph per row;
     * search is a flatMap over rows), so a fold does not have to
     * REBUILD the biggest folded tier's graphs: the largest folded
-    * segment becomes the DONOR — its graph rows copy over verbatim —
+    * segment (by the caller's row counts) becomes the DONOR — its
+    * graph rows copy over verbatim —
     * and only the remaining (tail) segments' + delta's embeddings
     * build fresh small graphs alongside. That bounds HNSW fold CPU by
     * the tail even on a tier ESCALATION that pulls a big tier into the
@@ -798,18 +803,16 @@ object SegmentedStore {
     * deterministic build; fresh rows are a deterministic build of the
     * tail content. */
   private def foldHnsw(spark: SparkSession, root: String, seg: String,
-                       folded: Seq[String], delta: IndexBundle): Unit = {
+                       folded: Seq[(String, Long)], delta: IndexBundle): Unit = {
     val mergedEmb = embeddings(spark.read.parquet(s"$seg/chunks"))
     val n = mergedEmb.count()
     if (n > 0) {
-      val donor = folded
-        .map(d => d -> footerRows(spark, s"$root/$d/chunks"))
-        .maxBy { case (d, r) => (r, d) }._1
+      val donor = folded.maxBy { case (d, r) => (r, d) }._1
       val donorHnsw = s"$root/$donor/hnsw"
       val donorRows = footerRows(spark, donorHnsw)
       val emb = embeddings(delta.chunks)
       val rest = readUnion(spark,
-          folded.filterNot(_ == donor).map(d => s"$root/$d/chunks"))
+          folded.collect { case (d, _) if d != donor => s"$root/$d/chunks" })
         .map(embeddings(_).unionByName(emb))
         .getOrElse(emb)
       val nRest = rest.count()

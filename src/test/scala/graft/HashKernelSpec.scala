@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{HashFunctions, TextFunctions}
 
-/** Parity for the [[graft.functions.Hash56Map]] codegen kernel against
+/** Parity for the [[graft.functions.Hash56MapKernel]] codegen kernel against
   * the interpreted `transform(arr, x -> hash56(x) [% m])` program it
   * replaced: byte-identical on real corpus tokens, non-ASCII input,
   * empty strings, null elements, empty arrays and null arrays, with

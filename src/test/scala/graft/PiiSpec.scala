@@ -58,7 +58,6 @@ class PiiSpec extends SparkSpec {
   }
 
   test("fused kernel ≡ composed regex program: counts, bytes, hit set") {
-    import org.apache.spark.sql.graftbridge.Bridge
     // adversarial shapes first: boundary shifts the redaction CREATES
     // (a@b.co1.2.3.4 → '<EMAIL>1.2.3.4' where raw 'co1.2.3.4' has no
     // \b), missing boundaries, near-miss shapes, empties, and corpus
@@ -86,10 +85,8 @@ class PiiSpec extends SparkSpec {
       Pii.redactColumns(col("text")).as("redacted"): _*)
       .orderBy("id").collect()
     val fused = df.select(col("id"),
-      Bridge.column(graft.functions.PiiScrub(
-        Bridge.expression(col("text")))).as("p"),
-      Bridge.column(graft.functions.PiiHas(
-        Bridge.expression(col("text")))).as("hit"))
+      Pii.scrub(col("text")).as("p"),
+      Pii.has(col("text")).as("hit"))
       .select($"id", $"p.n_email", $"p.n_ipv4", $"p.n_ssn", $"p.n_phone",
         $"p.redacted", $"hit")
       .orderBy("id").collect()

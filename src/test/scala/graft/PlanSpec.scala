@@ -53,7 +53,7 @@ class PlanSpec extends SparkSpec {
     val df = RetrievalPack.denseKnn(spark, sf0001)
     val p = plan(df)
     assert(p.contains("TakeOrderedAndProject"))
-    assert(p.contains("dot_product"))
+    assert(p.contains("VectorKernels.dot("))
     assert(!p.contains("Exchange hashpartitioning"),
       "exact kNN must not shuffle: " + p.take(1500))
   }
@@ -125,7 +125,7 @@ class PlanSpec extends SparkSpec {
     val p = plan(RetrievalPack.annKnn(spark, sf0001))
     // candidates come from a broadcast-hash equi-join on (tbl, bucket)
     assert(p.contains("BroadcastHashJoin"), p.take(1500))
-    assert(p.contains("hyperplane_buckets"))
+    assert(p.contains("VectorKernels.hyperplaneBuckets("))
     // the corpus side must never enter a nested-loop/cartesian scan
     assert(!p.contains("BroadcastNestedLoopJoin"))
     assert(!p.contains("CartesianProduct"))

@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
 
-/** Parity for the [[graft.functions.Shingles]], [[graft.functions.RunStats]]
-  * and [[graft.functions.SumLen]] codegen kernels against the HOF column
-  * programs they replaced (the lambda bodies ran interpreted per
-  * element): corpus data plus the edge classes each program had —
+/** Parity for the [[graft.functions.ShinglesKernel]],
+  * [[graft.functions.RunStatsKernel]] and [[graft.functions.SumLenKernel]]
+  * codegen kernels against the HOF column programs they replaced (the
+  * lambda bodies ran interpreted per element): corpus data plus the edge classes each program had —
   * short arrays, empty strings, null elements, null arrays, and the
   * run-stats fold's empty-string initial accumulator quirk.
   */
