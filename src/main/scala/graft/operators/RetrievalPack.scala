@@ -421,7 +421,7 @@ object RetrievalPack {
 
   /** CTE prefix computing feature-hash doc embeddings for `documents`:
     * yields `docemb(doc_id, emb)` — 64 signed bucket counts over token
-    * hashes, L2-normalized (the SQL twin of FeatureHashEmbed). */
+    * hashes, L2-normalized (the SQL twin of the `feature_hash_embed` kernel). */
   private def docEmbedCtes(table: String = "documents"): String = {
     val counts = "list_transform(range(64), i -> CAST(" +
       "len(list_filter(hs, h -> h % 64 = i AND ((h >> 7) & 1) = 1)) - " +
