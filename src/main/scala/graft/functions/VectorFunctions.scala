@@ -397,6 +397,13 @@ object VectorFunctions {
     java.math.BigDecimal.valueOf(x)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
+  /** JVM twin of Spark's `round(x, scale)` on a double, NaN and ±Inf
+    * included: those pass through unchanged, as Spark passes them. */
+  def roundJvm(x: Double, scale: Int): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
+
   /** How far above a raw minimum (below a raw maximum) a candidate can
     * lie and still round-6 ([[round6Jvm]]) to the same value: 2e-6 plus
     * eight ulps of `x`. Beyond it the candidate rounds strictly past

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
@@ -107,17 +107,26 @@ object AnnKnn {
     * so filtering never starves the k. */
   def storeCandidates(idx: DataFrame, queryVec: Array[Double],
                       tables: Int = DefaultTables, bits: Int = DefaultBits,
-                      extraProbes: Int = 0): DataFrame = {
-    val pairs: Seq[(Int, Long)] =
-      if (extraProbes > 0) multiProbeBuckets(queryVec, tables, bits, extraProbes)
-      else VectorFunctions.hyperplaneBucketsJvm(queryVec, tables, bits)
-        .zipWithIndex.map { case (b, t) => (t, b) }.toSeq
-    val probe = pairs.map { case (t, b) =>
+                      extraProbes: Int = 0): DataFrame =
+    idx.filter(probeFilter(probePairs(queryVec, tables, bits, extraProbes)))
+      .groupBy(col("id")).agg(first(col("vec")).as("vec"))
+
+  /** The (tbl, bucket) pairs a query probes: each table's bucket, plus
+    * the multi-probe neighbours ([[multiProbeBuckets]]) when
+    * `extraProbes > 0`. */
+  def probePairs(queryVec: Array[Double], tables: Int, bits: Int,
+                 extraProbes: Int): Seq[(Int, Long)] =
+    if (extraProbes > 0) multiProbeBuckets(queryVec, tables, bits, extraProbes)
+    else VectorFunctions.hyperplaneBucketsJvm(queryVec, tables, bits)
+      .zipWithIndex.map { case (b, t) => (t, b) }.toSeq
+
+  /** The static filter on an index's rows in `pairs`: code-stable
+    * `InSet`s ([[graft.sources.TableStore.isInLongs]]), pushed to the
+    * scan as partition or page filters. */
+  def probeFilter(pairs: Seq[(Int, Long)]): Column =
+    pairs.map { case (t, b) =>
       graft.sources.TableStore.isInLongs("tbl", Seq(t.toLong)) &&
         graft.sources.TableStore.isInLongs("bucket", Seq(b)) }.reduce(_ || _)
-    idx.filter(probe)
-      .groupBy(col("id")).agg(first(col("vec")).as("vec"))
-  }
 
   /** Exact-dot rescore + deterministic top-k over a candidate set. */
   def rescoreTopK(cand: DataFrame, queryVec: Array[Double], k: Int): DataFrame =
@@ -265,12 +274,21 @@ object AnnKnn {
     * (tbl, bucket) path of [[storeCandidates]]. */
   def ivfProbesJvm(centroids: DataFrame, queryVec: Array[Double],
                    nProbe: Int): Seq[Long] =
+    ivfProbes(centroidRows(centroids), queryVec, nProbe)
+
+  /** A coarse quantizer's (cid, cvec) rows, collected. */
+  def centroidRows(centroids: DataFrame): Seq[(Long, Array[Double])] =
     centroids.select(col("cid").cast("long"), col("cvec").cast("array<double>"))
-      .collect()
-      .map(r => (r.getLong(0), VectorFunctions.round6Jvm(
-        VectorFunctions.dotJvm(r.getSeq[Double](1).toArray, queryVec))))
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+
+  /** [[ivfProbesJvm]] over centroid rows already on the driver. */
+  def ivfProbes(centroids: Seq[(Long, Array[Double])], queryVec: Array[Double],
+                nProbe: Int): Seq[Long] =
+    centroids
+      .map { case (cid, cv) =>
+        (cid, VectorFunctions.round6Jvm(VectorFunctions.dotJvm(cv, queryVec))) }
       .sortBy { case (cid, d) => (-d, cid) }
-      .take(nProbe).map(_._1).toSeq
+      .take(nProbe).map(_._1)
 
   /** (id, vec) members of the probed IVF lists — a static cid filter,
     * so a cid-partitioned store opens only the probed directories.

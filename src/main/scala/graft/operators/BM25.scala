@@ -106,7 +106,7 @@ object BM25 {
 
   /** The read path: score a tokenized query against a prebuilt (e.g.
     * parquet-loaded) index. Touches only the query terms' posting
-    * lists — the `isin` filter pushes into the postings scan, and when
+    * lists — the term `InSet` filter ([[termRows]]) pushes into the postings scan, and when
     * the index carries a `term_blk` column (written by
     * [[graft.sources.TableStore.writeTerms]], files sorted by
     * (term_blk, term)) an additional block filter pushes down with it:
@@ -126,25 +126,43 @@ object BM25 {
     val q = queryTokens.groupBy(identity).view.mapValues(_.size.toLong).toSeq
       .toDF("term", "qcount")
 
-    def pruned(df: DataFrame): DataFrame =
-      if (df.columns.contains("term_blk")) {
-        val blks = terms.map(graft.sources.TableStore.termBlockJvm).distinct
-        df.filter(graft.sources.TableStore.isInLongs("term_blk", blks))
-      } else df
-
-    pruned(index.postings).filter($"term".isin(terms: _*))
+    termRows(index.postings, terms)
       .join(broadcast(q), "term")
-      .join(broadcast(pruned(index.idf).filter($"term".isin(terms: _*))
-        .select($"term", $"idf")), "term")
+      .join(broadcast(termRows(index.idf, terms).select($"term", $"idf")), "term")
       .crossJoin(broadcast(index.stats.select($"avgdl")))
-      .withColumn("term_score",
-        $"idf" * ($"tf" * lit(p.k1 + 1.0)) /
-          ($"tf" + lit(p.k1) * (lit(1.0) - lit(p.b) + lit(p.b) * $"dl" / $"avgdl")) *
-          $"qcount")
+      .withColumn("term_score", termScore(p))
       .groupBy($"id")
       .agg(sum($"term_score").as("score"))
       .filter(if (positiveOnly) $"score" > 0 else lit(true))
   }
+
+  /** The rows of a term table (postings, idf, docfreq) for `terms`:
+    * the term filter, plus the `term_blk` block filter when the table
+    * carries that column. Both are `InSet`s, so the generated code is
+    * the same for every term list. */
+  def termRows(df: DataFrame, terms: Seq[String]): DataFrame = {
+    val blocked =
+      if (df.columns.contains("term_blk"))
+        df.filter(graft.sources.TableStore.isInLongs("term_blk",
+          terms.map(graft.sources.TableStore.termBlockJvm).distinct))
+      else df
+    blocked.filter(graft.sources.TableStore.isInStrings("term", terms))
+  }
+
+  /** A posting's BM25 term score over its (idf, tf, dl, avgdl, qcount)
+    * columns — [[scoreFromIndex]]'s `term_score`. */
+  def termScore(p: Params = Params()): Column =
+    col("idf") * (col("tf") * lit(p.k1 + 1.0)) /
+      (col("tf") + lit(p.k1) * (lit(1.0) - lit(p.b) + lit(p.b) * col("dl") / col("avgdl"))) *
+      col("qcount")
+
+  /** Driver twin of [[scoreFromIndex]]'s per-posting `term_score`: the
+    * same double operations in the same order (the long `tf` and
+    * `qcount` and the int `dl` widen as Spark casts them), so it is
+    * equal to the column form bit for bit. */
+  def termScoreJvm(idf: Double, tf: Long, dl: Int, avgdl: Double, qcount: Long,
+                   p: Params = Params()): Double =
+    idf * (tf * (p.k1 + 1.0)) / (tf + p.k1 * ((1.0 - p.b) + p.b * dl / avgdl)) * qcount
 
   /** Partition-scoped index maintenance (S8): replace or add documents
     * without rebuilding the index from the raw corpus — the reference

@@ -305,11 +305,16 @@ object Hnsw {
     val spark = index.sparkSession
     import spark.implicits._
     val q = queryVec
-    index.flatMap { s =>
-      val sh = HnswShard(s.pid, s.dim,
-        Array.tabulate(s.sids.length)(_.toLong), s.vecs, s.levels, s.adj,
-        s.entry)
-      searchShard(sh, q, ef).map { case (j, sc) => (s.sids(j.toInt), sc) }
-    }.toDF("id", "score")
+    index.flatMap(servingSearch(_, q, ef)).toDF("id", "score")
+  }
+
+  /** One serving graph's beam candidates as (string id, round6 dot):
+    * [[searchShard]] over the dictionary indexes, translated back
+    * through the row's own id dictionary. */
+  def servingSearch(s: HnswServing, queryVec: Array[Double],
+                    ef: Int): Seq[(String, Double)] = {
+    val sh = HnswShard(s.pid, s.dim,
+      Array.tabulate(s.sids.length)(_.toLong), s.vecs, s.levels, s.adj, s.entry)
+    searchShard(sh, queryVec, ef).map { case (j, sc) => (s.sids(j.toInt), sc) }
   }
 }

@@ -53,6 +53,13 @@ object Quantize {
     graft.functions.VectorFunctions.dot(codesA, codesB) *
       scaleA * scaleB / lit(16129.0)
 
+  /** Driver twin of [[dotI8]]: the kernel's dot, then the two scales
+    * and the 127² divide in the column form's order, so it is equal to
+    * it bit for bit. */
+  def dotI8Jvm(codesA: Array[Double], scaleA: Double,
+               codesB: Array[Double], scaleB: Double): Double =
+    graft.functions.VectorFunctions.dotJvm(codesA, codesB) * scaleA * scaleB / 16129.0
+
   /** JVM twin of [[quantized]] for a driver-side query vector —
     * identical rule (max-abs scale, floor(x/scale·127 + 0.5)), so a
     * query quantized here scores against store codes with exactly the

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructTy
 import graft.functions.{EmbedFunctions, Embedder, FeatureHashEmbedder, TextFunctions, VectorFunctions}
 import graft.model.{Filters, TenantContext}
 import graft.operators.{AnnKnn, BM25, DenseKnn, Fusion, Hnsw, HnswServing, PqKnn, Quantize}
-import graft.sources.SegmentedStore
+import graft.sources.{SegmentedStore, TableStore}
 
 /** Hybrid retrieval façade (V5, reference
   * `src/retrieval/hybrid_search.py:219-430`): tenant scope → per-method
@@ -104,80 +104,138 @@ object HybridSearch {
       // off) and the request path skips its text read
       detail: Boolean = true)
 
-  /** One retrieval leg of a request: a method's top-`fetch` (id,
-    * score) frame over the request scope, ordered by score descending
-    * then id, and its RRF weight. */
-  private final case class Leg(name: String, weight: Double, topK: DataFrame)
+  /** The rows of the tenant scope a leg reads: the request filters
+    * (`filtered`) and the configured chunk level (`level`) apply or
+    * not. The base search reads [[Searched]], the enhanced path's BM25
+    * lookups [[Keyword]] and its filterless retry [[Expanded]]. */
+  private[retrieval] final case class Scope(level: Boolean, filtered: Boolean)
+  private[retrieval] val Searched = Scope(level = true, filtered = true)
+  private[retrieval] val Keyword = Scope(level = false, filtered = true)
+  private[retrieval] val Expanded = Scope(level = true, filtered = false)
 
-  /** A request's legs and the tenant/filter/level scope they read. */
-  private final case class Legs(scoped: DataFrame, methods: Seq[Leg])
+  /** A retrieval leg before it is evaluated: its top `k` (id, score)
+    * rows over `scope`, ordered by score descending then id. */
+  private[retrieval] sealed trait LegQuery { def scope: Scope }
+  private[retrieval] final case class Bm25Query(tokens: Seq[String], k: Int, scope: Scope)
+      extends LegQuery
+  private[retrieval] final case class DenseQuery(qvec: Array[Double], k: Int, scope: Scope)
+      extends LegQuery
+  private[retrieval] final case class ColpaliQuery(pages: DataFrame, tokens: Seq[String],
+                                                   k: Int, scope: Scope) extends LegQuery
 
-  /** The retrieval legs both forms of hybrid search fuse: tenant,
-    * filter and level scope, weight resolution, the BM25 leg, the dense
-    * leg under `cfg.dense`, and the ColPali leg when `pages` are given.
-    * A method with weight 0 (or BM25 without query tokens) has no leg. */
-  private def legs(chunks: DataFrame, query: String, ctx: TenantContext,
-           filters: Map[String, Filters.Pred] = Map.empty,
-           cfg: Config = Config(),
-           pages: Option[DataFrame] = None,
-           index: Option[BM25.Index] = None): Legs = {
-    val scoped0 = Filters.tenantScope(chunks, ctx)
-      .filter(Filters.compile(filters))
-    val scoped = cfg.levelFilter match {
-      case Some(lv) if chunks.columns.contains("level") =>
-        scoped0.filter(col("level") === lv)
-      case _ => scoped0
-    }
+  /** One retrieval leg of a request and its RRF weight. */
+  private final case class Leg(name: String, weight: Double, query: LegQuery)
 
+  /** The legs both forms of hybrid search fuse: weight resolution, the
+    * BM25 leg, the dense leg under `cfg.dense`, and the ColPali leg
+    * when `pages` are given, each over `scope`. A method with weight 0
+    * (or BM25 without query tokens) has no leg. */
+  private def plan(query: String, cfg: Config, scope: Scope,
+                   pages: Option[DataFrame]): Seq[Leg] = {
     val analysis = QueryAnalyzer.analyze(query)
     val weights = cfg.weights.getOrElse {
       // dynamic weights only when the analyzer suggests non-text
       if (analysis.modality == QueryAnalyzer.Text) DefaultWeights
       else analysis.weights
     }
-
+    def w(method: String): Double = weights.getOrElse(method, 0.0)
     val fetch = cfg.limit * cfg.fetchMultiplier
     val qTokens = TextFunctions.tokenizeJvm(query)
-
-    val methods = Seq.newBuilder[Leg]
-
-    // BM25 branch (positive-scores semantics, `bm25_store.py:235`).
-    // With a prebuilt index: score from the persisted postings/idf
-    // (global corpus stats + post-scoring filter, the reference's F1
-    // semantics, `bm25_store.py:190-244`) — the query touches only its
-    // own terms' posting lists instead of re-deriving the index from
-    // the raw corpus.
-    if (qTokens.nonEmpty && weights.getOrElse("bm25", 0.0) > 0)
-      methods += Leg("bm25", weights("bm25"), scopedBm25(scoped, qTokens, fetch, index))
-
-    // dense branch: deterministic feature-hash query embedding (I9),
-    // candidate generation per cfg.dense (exact scan / pruned ANN
-    // probes / int8 store)
-    if (weights.getOrElse("dense", 0.0) > 0) {
-      val qvec = cfg.embedder.embedQuery(qTokens)
-      methods += Leg("dense", weights("dense"), denseTopK(scoped, qvec, fetch, cfg))
-    }
-
-    // ColPali branch (J3/J4): page-level MaxSim propagated to chunks
-    pages.filter(_ => weights.getOrElse("colpali", 0.0) > 0).foreach { pg =>
-      methods += Leg("colpali", weights("colpali"),
-        colpaliPropagate(scoped, pg, qTokens, cfg, fetch))
-    }
-    Legs(scoped, methods.result())
+    Seq(
+      // BM25 branch (positive-scores semantics, `bm25_store.py:235`)
+      Option.when(qTokens.nonEmpty && w("bm25") > 0)(
+        Leg("bm25", w("bm25"), Bm25Query(qTokens, fetch, scope))),
+      // dense branch: deterministic feature-hash query embedding (I9),
+      // candidate generation per cfg.dense
+      Option.when(w("dense") > 0)(
+        Leg("dense", w("dense"), DenseQuery(cfg.embedder.embedQuery(qTokens), fetch, scope))),
+      // ColPali branch (J3/J4): page-level MaxSim propagated to chunks
+      pages.filter(_ => w("colpali") > 0).map(pg =>
+        Leg("colpali", w("colpali"), ColpaliQuery(pg, qTokens, fetch, scope)))
+    ).flatten
   }
+
+  /** A leg's evaluated row: its score (None where Spark has NULL) and
+    * its 1-based rank by score descending, then id. */
+  private[retrieval] final case class LegRow(id: Any, score: Option[Double], rank: Int)
+
+  /** (id, score) rows ranked as [[search]]'s window ranks them. */
+  private[retrieval] def ranked(rows: Seq[(Any, Option[Double])]): Seq[LegRow] =
+    rows.sortWith(Fusion.compareScoreDescId(_, _) < 0)
+      .zipWithIndex.map { case ((id, sc), i) => LegRow(id, sc, i + 1) }
+
+  /** How a request's legs are evaluated: as Spark frames collected
+    * concurrently ([[SparkLegs]]), or on the driver from one wave of
+    * tenant-slice reads ([[SliceSearch]]). */
+  private[retrieval] trait Legs {
+    /** Each query's rows, ranked. */
+    def rows(queries: Seq[LegQuery]): Seq[Seq[LegRow]]
+    /** The text of `ids` within the [[Searched]] scope. */
+    def text(ids: Seq[Any]): Map[Any, Option[String]]
+  }
+
+  /** The Spark evaluation of legs over `chunks`: each leg a frame —
+    * the BM25 leg scored from `index` when given — collected
+    * concurrently, settle-all ([[SegmentedStore.awaitAllValues]]): no
+    * leg job outlives the call, and a leg's failure reaches the caller
+    * unchanged. */
+  private final class SparkLegs(chunks: DataFrame, ctx: TenantContext,
+                                filters: Map[String, Filters.Pred], cfg: Config,
+                                index: Option[BM25.Index]) extends Legs {
+    def scoped(s: Scope): DataFrame = {
+      val sc = Filters.tenantScope(chunks, ctx)
+        .filter(Filters.compile(if (s.filtered) filters else Map.empty))
+      cfg.levelFilter match {
+        case Some(lv) if s.level && chunks.columns.contains("level") =>
+          sc.filter(col("level") === lv)
+        case _ => sc
+      }
+    }
+
+    def frame(q: LegQuery): DataFrame = q match {
+      case Bm25Query(tokens, k, s) => scopedBm25(scoped(s), tokens, k, index)
+      case DenseQuery(qvec, k, s) => denseTopK(scoped(s), qvec, k, cfg)
+      case ColpaliQuery(pages, tokens, k, s) => colpaliPropagate(scoped(s), pages, tokens, cfg, k)
+    }
+
+    def rows(queries: Seq[LegQuery]): Seq[Seq[LegRow]] =
+      SegmentedStore.awaitAllValues(queries.map(q => () => frame(q).collect()))
+        .map(rs => ranked(rs.toSeq.map(r => (r.get(0),
+          if (r.isNullAt(1)) None else Some(r.getAs[Number](1).doubleValue())))))
+
+    def text(ids: Seq[Any]): Map[Any, Option[String]] =
+      scoped(Searched).filter(TableStore.isInStrings("id", ids.map(_.toString)))
+        .select(col("id"), col("text")).collect()
+        .map(r => r.get(0) -> Option(r.getString(1))).toMap
+  }
+
+  /** The legs of a request: from one wave of tenant-slice reads when
+    * `slice` is given and the slice fits its bounds, else Spark's. */
+  private def evaluator(chunks: DataFrame, ctx: TenantContext,
+                        filters: Map[String, Filters.Pred], cfg: Config,
+                        index: Option[BM25.Index], slice: Option[SliceSearch.Local],
+                        queries: Seq[LegQuery], withText: Boolean): Legs =
+    (for (l <- slice; idx <- index;
+          legs <- SliceSearch.read(chunks, ctx, filters, cfg, idx, l, queries, withText))
+      yield legs).getOrElse(new SparkLegs(chunks, ctx, filters, cfg, index))
 
   /** Chunk-table hybrid search as one lazy plan. `chunks` needs
     * columns: id, text, organization_id (+ tenant columns), embedding.
     * Returns the fused top-k with per-method detail (J2): (id,
     * rrf_score, text, bm25_score, bm25_rank, dense_score, dense_rank).
     * [[searchHits]] answers the same request from the same legs on the
-    * driver. */
+    * driver. With a prebuilt `index` the BM25 leg scores from the
+    * persisted postings/idf (global corpus stats + post-scoring filter,
+    * the reference's F1 semantics, `bm25_store.py:190-244`) — the query
+    * touches only its own terms' posting lists. */
   def search(chunks: DataFrame, query: String, ctx: TenantContext,
              filters: Map[String, Filters.Pred] = Map.empty,
              cfg: Config = Config(),
              pages: Option[DataFrame] = None,
              index: Option[BM25.Index] = None): DataFrame = {
-    val Legs(scoped, legList) = legs(chunks, query, ctx, filters, cfg, pages, index)
+    val legs = new SparkLegs(chunks, ctx, filters, cfg, index)
+    val scoped = legs.scoped(Searched)
+    val legList = plan(query, cfg, Searched, pages)
 
     // per-method ranked lists: rank assigned by ONE window over the
     // already-cut top-fetch rows (ids unique ⇒ identical to the
@@ -187,7 +245,7 @@ object HybridSearch {
       scoredTopK.withColumn("rank",
         row_number().over(Window.orderBy(col("score").desc, col("id"))))
 
-    val built = legList.map(l => (withRank(l.topK), l.weight, l.name))
+    val built = legList.map(l => (withRank(legs.frame(l.query)), l.weight, l.name))
     if (built.isEmpty)
       // keep the normal output schema so downstream selects (e.g.
       // enhancedSearch's id/rrf_score projection) still resolve
@@ -216,29 +274,11 @@ object HybridSearch {
       .orderBy(col("rrf_score").desc, col("id"))
   }
 
-  /** One leg's collected row: its score (None where Spark has NULL)
-    * and its 1-based rank by score descending, then id. */
-  private final case class LegRow(id: Any, score: Option[Double], rank: Int)
-
   /** One fused result of [[searchHits]]: `detail` maps each method
     * whose leg holds the id to (score, rank) — [[search]]'s
     * `<method>_score` / `<method>_rank` columns. */
   final case class Hit(id: Any, rrfScore: Double, text: Option[String],
                        detail: Map[String, (Option[Double], Int)])
-
-  /** Collect legs' top-`fetch` rows concurrently and rank each list on
-    * the driver, as [[search]]'s window ranks it. Settle-all
-    * ([[SegmentedStore.awaitAllValues]]): no leg job outlives the call,
-    * and a leg's failure reaches the caller unchanged. */
-  private def collectLegs(frames: Seq[DataFrame]): Seq[Seq[LegRow]] =
-    SegmentedStore.awaitAllValues(frames.map(df => () => df.collect()))
-      .map { rows =>
-        rows.toSeq
-          .map(r => (r.get(0), if (r.isNullAt(1)) None
-            else Some(r.getAs[Number](1).doubleValue())))
-          .sortWith(Fusion.compareScoreDescId(_, _) < 0)
-          .zipWithIndex.map { case ((id, sc), i) => LegRow(id, sc, i + 1) }
-      }
 
   private def fuseLegs(legList: Seq[Leg], rows: Seq[Seq[LegRow]],
                        limit: Int, rrfK: Int): Seq[(Any, Double)] =
@@ -246,29 +286,34 @@ object HybridSearch {
       legList.zip(rows).map { case (l, rs) => (rs.map(r => (r.id, r.rank)), l.weight) },
       limit, rrfK)
 
-  /** The request path of [[search]]: the same legs, each collected
-    * (≤ limit × fetchMultiplier rows) concurrently, fused on the driver
-    * ([[Fusion.fuseTopKLocal]]), and the text of the fused ids read
-    * with one `id IN (…)` filter over the scope; each method's score
-    * and rank come from its collected leg. Equal to
-    * `search(...).collect()` row for row — a few small jobs in one
-    * concurrent wave plus the text read, where the lazy plan runs a
-    * chain of dependent AQE stages and, across dense modes, more
-    * generated code than Spark's codegen cache holds. */
+  /** The request path of [[search]]: the same legs, fused on the
+    * driver ([[Fusion.fuseTopKLocal]]), each method's score and rank
+    * taken from its leg. Equal to `search(...).collect()` row for row.
+    *
+    * With `slice` (and an `index`), a tenant slice within
+    * [[SliceSearch]]'s bounds is answered from one concurrent wave of
+    * narrow reads, every leg, the fusion and the text computed on the
+    * driver. Otherwise — or when the slice overflows a bound — each
+    * leg is collected (≤ limit × fetchMultiplier rows) concurrently
+    * and the text of the fused ids read with one `id IN (…)` filter
+    * over the scope: a few small jobs in one wave plus the text read,
+    * where the lazy plan runs a chain of dependent AQE stages and,
+    * across dense modes, more generated code than Spark's codegen
+    * cache holds. */
   def searchHits(chunks: DataFrame, query: String, ctx: TenantContext,
                  filters: Map[String, Filters.Pred] = Map.empty,
                  cfg: Config = Config(),
                  pages: Option[DataFrame] = None,
-                 index: Option[BM25.Index] = None): Seq[Hit] = {
-    val Legs(scoped, legList) = legs(chunks, query, ctx, filters, cfg, pages, index)
+                 index: Option[BM25.Index] = None,
+                 slice: Option[SliceSearch.Local] = None): Seq[Hit] = {
+    val legList = plan(query, cfg, Searched, pages)
     if (legList.isEmpty) return Nil
-    val rows = collectLegs(legList.map(_.topK))
+    val legs = evaluator(chunks, ctx, filters, cfg, index, slice,
+      legList.map(_.query), withText = cfg.detail)
+    val rows = legs.rows(legList.map(_.query))
     val fused = fuseLegs(legList, rows, cfg.limit, cfg.rrfK)
     val text: Map[Any, Option[String]] =
-      if (!cfg.detail || fused.isEmpty) Map.empty
-      else scoped.filter(col("id").isin(fused.map(_._1): _*))
-        .select(col("id"), col("text")).collect()
-        .map(r => r.get(0) -> Option(r.getString(1))).toMap
+      if (!cfg.detail || fused.isEmpty) Map.empty else legs.text(fused.map(_._1))
     val byId = legList.zip(rows).map { case (l, rs) =>
       l.name -> rs.map(r => r.id -> (r.score, r.rank)).toMap }
     fused.map { case (id, sc) =>
@@ -407,12 +452,15 @@ object HybridSearch {
     *    empty base.
     *
     * Runs on the request path of [[searchHits]]: the base search's
-    * legs (limit×2, detail off) and the precision lookup are collected
-    * in one concurrent wave, and the fusion, the precision merge, the
-    * failure signals and the retry merge are driver code over at most
-    * 2·limit rows; a retry (empty base only) is one more wave. The
-    * result is a local DataFrame (id, rrf_score, query_type) — no
-    * cached base, no stats job, no window merge. */
+    * legs (limit×2, detail off) and the precision lookup are evaluated
+    * together, and the fusion, the precision merge, the failure
+    * signals and the retry merge are driver code over at most 2·limit
+    * rows. With Spark's legs, each evaluation is one concurrent wave,
+    * so a retry (empty base only) is one more; a tenant slice
+    * ([[searchHits]]' `slice`) is read once for the base, the lookups
+    * and the retries alike. The result is a local DataFrame (id,
+    * rrf_score, query_type) — no cached base, no stats job, no window
+    * merge. */
   def enhancedSearch(chunks: DataFrame, query: String, ctx: TenantContext,
                      filters: Map[String, Filters.Pred] = Map.empty,
                      cfg: Config = Config(),
@@ -426,32 +474,33 @@ object HybridSearch {
   }
 
   /** [[enhancedSearch]]'s ranked (id, rrf_score) rows, without the
-    * constant query_type column. */
+    * constant query_type column. `slice` as in [[searchHits]]. */
   def enhancedHits(chunks: DataFrame, query: String, ctx: TenantContext,
                    filters: Map[String, Filters.Pred] = Map.empty,
                    cfg: Config = Config(),
-                   index: Option[BM25.Index] = None): Seq[(Any, Double)] = {
+                   index: Option[BM25.Index] = None,
+                   slice: Option[SliceSearch.Local] = None): Seq[(Any, Double)] = {
     val (expanded, _) = Acronyms.expandQuery(query)
     // base search at limit×2 (`enhanced_hybrid_search.py:277`), its
     // (id, rrf_score) only
     val baseLimit = cfg.limit * 2
-    val base = legs(chunks, expanded, ctx, filters, cfg.copy(limit = baseLimit), index = index)
-
-    val scoped = Filters.tenantScope(chunks, ctx).filter(Filters.compile(filters))
-    // BM25-only lookup reused by the precision and fallback branches
-    def bm25Only(tokens: Seq[String], k: Int): DataFrame =
-      scopedBm25(scoped, tokens, k, index)
-
+    val base = plan(expanded, cfg.copy(limit = baseLimit), Searched, None)
     // V9: BM25-only lookups for the reference terms, +0.5 boost
-    val precision = QueryAnalyzer.detectPrecision(query) match {
+    val precision = (QueryAnalyzer.detectPrecision(query) match {
       case (true, Some(ptype), Some(ref)) =>
         Some(QueryAnalyzer.precisionSearchTerms(ptype, ref)
           .flatMap(TextFunctions.tokenizeJvm).distinct).filter(_.nonEmpty)
       case _ => None
-    }
-    val collected = collectLegs(
-      base.methods.map(_.topK) ++ precision.map(bm25Only(_, 5)))
-    val baseRows = fuseLegs(base.methods, collected, baseLimit, cfg.rrfK)
+    }).map(Bm25Query(_, 5, Keyword))
+    // the V10 retries, planned up front so a slice read covers them:
+    // a pure BM25 retry and a filterless re-search, both at k=5
+    val keyword = Bm25Query(TextFunctions.tokenizeJvm(query), 5, Keyword)
+    val expand = plan(query, cfg.copy(limit = 5), Expanded, None)
+    val legs = evaluator(chunks, ctx, filters, cfg, index, slice,
+      base.map(_.query) ++ precision ++ (keyword +: expand.map(_.query)), withText = false)
+
+    val collected = legs.rows(base.map(_.query) ++ precision)
+    val baseRows = fuseLegs(base, collected, baseLimit, cfg.rrfK)
     val merged = precision match {
       case Some(_) =>
         val prec = collected.last.map(r => (r.id, r.score.get + 0.5))
@@ -469,19 +518,11 @@ object HybridSearch {
       else {
         val recs = signals.recommendations.toSet
         val noResults = recs.contains("no_results_fallback")
-        val keyword =
-          if (recs.contains("try_keyword_search") || noResults)
-            Some(bm25Only(TextFunctions.tokenizeJvm(query), 5))
-          else None
-        val expand =
-          if (recs.contains("expand_search") || noResults)
-            Some(legs(chunks, query, ctx, Map.empty, cfg.copy(limit = 5), index = index))
-          else None
-        val retryRows = collectLegs(
-          keyword.toSeq ++ expand.toSeq.flatMap(_.methods.map(_.topK)))
-        val kw = keyword.map(_ => retryRows.head.map(r => (r.id, r.score.get)))
-        val ex = expand.map(e =>
-          fuseLegs(e.methods, retryRows.drop(kw.size), 5, cfg.rrfK))
+        val kwQuery = Option.when(recs.contains("try_keyword_search") || noResults)(keyword)
+        val exLegs = Option.when(recs.contains("expand_search") || noResults)(expand)
+        val retryRows = legs.rows(kwQuery.toSeq ++ exLegs.toSeq.flatMap(_.map(_.query)))
+        val kw = kwQuery.map(_ => retryRows.head.map(r => (r.id, r.score.get)))
+        val ex = exLegs.map(e => fuseLegs(e, retryRows.drop(kw.size), 5, cfg.rrfK))
         // retry order, then the base
         mergeFirstWriterWinsLocal(kw.toSeq ++ ex.toSeq :+ merged)
       }

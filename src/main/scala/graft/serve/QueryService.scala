@@ -12,7 +12,7 @@ import graft.ingest.Pipeline.IndexBundle
 import graft.functions.{Embedder, FeatureHashEmbedder}
 import graft.model.{Filters, TenantContext}
 import graft.operators.{AnnKnn, BM25}
-import graft.retrieval.HybridSearch
+import graft.retrieval.{HybridSearch, SliceSearch}
 import graft.sources.{SegmentedStore, TableStore}
 import graft.sources.SegmentedStore.Manifest
 
@@ -33,11 +33,12 @@ import graft.sources.SegmentedStore.Manifest
   * sidecar files, and the pushed probe and term-block filters skip
   * the row groups and pages outside the probed buckets and the query
   * terms' blocks. Files grow with data, not with tenants × hash keys:
-  * a small tenant is one file per table. A search collects each index's
-  * top-k leg concurrently and fuses them on the driver
-  * ([[HybridSearch.searchHits]]) instead of running one lazy fused
-  * plan: a few small jobs in one wave, not a chain of dependent
-  * stages. The in-memory cache is cleared after every request (same
+  * a small tenant is one file per table. A small tenant's search reads
+  * its slice of those tables in one wave of narrow jobs and computes
+  * every leg and the fusion on the driver ([[SliceSearch]]); a larger
+  * one collects each index's top-k leg concurrently and fuses them on
+  * the driver ([[HybridSearch.searchHits]]). Neither runs the lazy
+  * fused plan's chain of dependent stages. The in-memory cache is cleared after every request (same
   * hygiene as Bench) so nothing depends on cached state surviving
   * between requests.
   */
@@ -680,12 +681,15 @@ class QueryService(
     // 100 TB) and the exact scan only as the fallback for preloaded
     // stores without sidecars; explicit requests for a missing
     // sidecar → 400.
-    val annViewOpt = SegmentedStore.annView(spark, storeRoot, requireManifest)
-    val dense = (req \ "dense_mode").extractOpt[String]
-      .getOrElse(if (annViewOpt.isDefined) "ann" else "exact") match {
+    // the LSH view is resolved only where it is read: for the default
+    // mode's choice and for ann itself
+    val m = requireManifest
+    lazy val annViewOpt = SegmentedStore.annView(spark, storeRoot, m)
+    val mode = (req \ "dense_mode").extractOpt[String]
+      .getOrElse(if (annViewOpt.isDefined) "ann" else "exact")
+    val dense = mode match {
       case "exact" => HybridSearch.DenseMode.Exact
       case "ann" =>
-        val m = requireManifest
         val store = sidecar("ann", annViewOpt)
         // tenant partition filter composed INTO the probe read: the
         // scan opens only THIS tenant's files and, within them, the
@@ -699,10 +703,10 @@ class QueryService(
           tables = m.lshTables, bits = m.lshBits)
       case "quantized" =>
         HybridSearch.DenseMode.Quantized(sidecar("quantized",
-          SegmentedStore.quantizedView(spark, storeRoot, requireManifest)))
+          SegmentedStore.quantizedView(spark, storeRoot, m)))
       case "ivfpq" =>
         val (codes, cents, cb) = sidecar("pq",
-          SegmentedStore.pqView(spark, storeRoot, requireManifest))
+          SegmentedStore.pqView(spark, storeRoot, m))
         HybridSearch.DenseMode.IvfPq(codes, cents, cb,
           b.chunks.filter(col("embedding").isNotNull)
             .select(col("id"), col("embedding").cast("array<double>").as("vec")))
@@ -712,7 +716,7 @@ class QueryService(
         // — only the tenant's (complete, self-contained) graph rows
         // are read and searched
         val idx = sidecar("hnsw",
-          SegmentedStore.hnswView(spark, storeRoot, requireManifest))
+          SegmentedStore.hnswView(spark, storeRoot, m))
         HybridSearch.DenseMode.Hnsw(
           idx.filter(col("organization_id") === ctx.organizationId))
       case other =>
@@ -721,16 +725,21 @@ class QueryService(
     }
     val cfg = HybridSearch.Config(limit = limit, embedder = embedder,
       weights = weights, dense = dense)
+    // the driver copy of the ivfpq quantizer, for the tenant-slice path
+    val slice = SliceSearch.Local(
+      if (mode == "ivfpq") SegmentedStore.pqCentroidRows(spark, storeRoot, m) else None)
     QueryService.SearchRequest(b, ctx, query, filters, cfg,
-      enhanced = (req \ "enhanced").extractOpt[Boolean].getOrElse(false))
+      enhanced = (req \ "enhanced").extractOpt[Boolean].getOrElse(false), slice)
   }
 
   /** `/search` (`api/main.py:376-453`): hybrid search with tenant
     * isolation; optional weights / filters / limit / enhanced flag.
     * Answered on the request path ([[HybridSearch.searchHits]],
-    * [[HybridSearch.enhancedHits]]): the per-index top-k legs are
-    * collected concurrently under this request's read lock and fused
-    * on the driver, and the response renders from those rows. */
+    * [[HybridSearch.enhancedHits]]) under this request's read lock: a
+    * tenant within [[SliceSearch]]'s bounds from one wave of narrow
+    * slice reads, every leg and the fusion on the driver; a larger one
+    * from the per-index top-k legs, collected concurrently and fused on
+    * the driver. The response renders from those rows. */
   private def search(req: JValue): JValue = {
     val r = searchRequest(req)
     def num(v: Option[Double]): JValue = v.map(JDouble(_)).getOrElse(JNull)
@@ -754,11 +763,11 @@ class QueryService(
     val rows =
       if (r.enhanced)
         HybridSearch.enhancedHits(r.bundle.chunks, r.query, r.ctx, r.filters, r.cfg,
-          index = Some(r.bundle.bm25Index))
+          index = Some(r.bundle.bm25Index), slice = Some(r.slice))
           .map { case (id, sc) => row(id, sc, None, Map.empty) }
       else
         HybridSearch.searchHits(r.bundle.chunks, r.query, r.ctx, r.filters, r.cfg,
-          index = Some(r.bundle.bm25Index))
+          index = Some(r.bundle.bm25Index), slice = Some(r.slice))
           .map(h => row(h.id, h.rrfScore, h.text, h.detail))
     JObject(
       "query" -> JString(r.query),
@@ -907,7 +916,7 @@ object QueryService {
   private final case class SearchRequest(
       bundle: IndexBundle, ctx: TenantContext, query: String,
       filters: Map[String, Filters.Pred], cfg: HybridSearch.Config,
-      enhanced: Boolean)
+      enhanced: Boolean, slice: SliceSearch.Local)
 
   /** Upper bound on how long a mutation request waits for the
     * cross-process store lease before failing with a retryable 503.

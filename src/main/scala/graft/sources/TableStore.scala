@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.TextFunctions
 import graft.ingest.Pipeline.IndexBundle
@@ -186,6 +187,14 @@ object TableStore {
     * set. */
   def isInLongs(c: String, values: Iterable[Long]): Column =
     Bridge.column(InSet(Bridge.expression(col(c).cast("long")), values.toSet[Any]))
+
+  /** `c IN values` compared as strings, the [[isInLongs]] form for
+    * string keys (terms, chunk ids): one generated source for every
+    * value list, where `isin` emits one comparison per value and so
+    * one source per list length. */
+  def isInStrings(c: String, values: Iterable[String]): Column =
+    Bridge.column(InSet(Bridge.expression(col(c).cast("string")),
+      values.map(UTF8String.fromString).toSet[Any]))
 
   /** ANN index layout: the [[graft.operators.AnnKnn.index]] posting
     * table. A query's L probe buckets become a static

@@ -141,32 +141,57 @@ class QueryServiceSpec extends SparkSpec {
       \ "status").extract[Int] == 400)
   }
 
-  test("request path equals the lazy search plan exactly: every dense mode, plain and filtered") {
+  /** The parity fixture: two small tenants — org_p holds two
+    * byte-identical documents that tie on every leg score, named so
+    * that they order one way by UTF-8 bytes (Spark) and the other by
+    * UTF-16 units (String.compareTo) — and org_big, whose chunk rows
+    * exceed [[graft.retrieval.SliceSearch.MaxSliceRows]], so its requests take Spark's
+    * legs. */
+  private object Parity {
     val p = new QueryService(spark, TmpDirs.create("graft_svc_parity"))
     def pCall(json: String): JValue = parse(p.handle(json))
-    // two byte-identical documents tie on every leg score; their names
-    // differ only in U+FF21 vs U+1D538, which order one way by UTF-8
-    // bytes (Spark) and the other by UTF-16 units (String.compareTo)
-    val ledger = "# Ledger Policy\\n\\nThe ledger reconciles invoices against payments every month. Auditors review the ledger and the invoice archive each quarter."
+    private val ledger = "# Ledger Policy\\n\\nThe ledger reconciles invoices against payments every month. Auditors review the ledger and the invoice archive each quarter."
     val tieNames = Seq("ledger\uFF21.md", "ledger\uD835\uDD38.md")
-    assert(tieNames(0).compareTo(tieNames(1)) > 0)
-    def doc(fn: String, text: String) =
+    private def doc(fn: String, text: String) =
       s"""{"filename":"$fn","text":"$text"}"""
-    val orgP = Seq(doc(tieNames(0), ledger), doc(tieNames(1), ledger),
+    private val orgP = Seq(doc(tieNames(0), ledger), doc(tieNames(1), ledger),
       doc("lease.md", "# Lease Agreement\\n\\nThe tenant shall pay monthly rent to the landlord. The deposit and the invoices for repairs are reconciled at termination."),
       doc("payments.md", "# Payment Terms\\n\\nInvoices are payable within thirty days. Late payments accrue interest, and the ledger records every payment."),
       doc("notes.md", "# Meeting Notes\\n\\nQuarterly revenue grew nine percent. Auditors asked for the invoice archive and the payment ledger."))
-    val orgQ = Seq(doc(tieNames(0), ledger),
+    private val orgQ = Seq(doc(tieNames(0), ledger),
       doc("recipe.md", "# Bread Recipe\\n\\nMix flour, water, salt and yeast. Let the dough rise, then bake until golden."))
-    for ((org, ds) <- Seq("org_p" -> orgP, "org_q" -> orgQ)) {
+    // forty two-sentence paragraphs a volume: about 240 chunk rows each
+    private val orgBig = (0 until 12).map { v =>
+      doc(s"volume$v.md", (0 until 40).map(j =>
+        s"Entry $j of ledger volume $v records invoices and payments for the quarter. " +
+          s"The auditors check entry $j against the archive shelf ${(v * 40 + j) % 17}.")
+        .mkString("\\n\\n"))
+    }
+    for ((org, ds) <- Seq("org_p" -> orgP, "org_q" -> orgQ, "org_big" -> orgBig)) {
       val r = pCall(s"""{"op":"ingest","organization_id":"$org","docs":[${ds.mkString(",")}]}""")
       assert((r \ "status").extract[String] == "completed", r)
     }
     // the filter keeps the tie documents' type
-    val types = pCall("""{"op":"documents","organization_id":"org_p"}""").extract[List[JValue]]
+    private val types = pCall("""{"op":"documents","organization_id":"org_p"}""").extract[List[JValue]]
       .map(d => ((d \ "filename").extract[String], (d \ "document_type").extract[String])).toMap
     val filter = s"""{"document_type":"${types(tieNames(0))}"}"""
 
+    val modes = Seq("exact", "ann", "quantized", "ivfpq", "hnsw")
+    val small = Seq("org_p" -> "ledger invoices payments", "org_p" -> "auditors quarterly archive",
+      "org_p" -> "monthly rent deposit", "org_q" -> "ledger invoices")
+    val big = Seq("org_big" -> "ledger invoices payments", "org_big" -> "auditors archive shelf")
+    def request(org: String, q: String, mode: String, filtered: Boolean): String = {
+      val f = if (filtered) s""","filters":$filter""" else ""
+      s"""{"op":"search","organization_id":"$org","query":"$q","limit":5,"dense_mode":"$mode"$f}"""
+    }
+    def requests(probes: Seq[(String, String)]): Seq[String] =
+      for (mode <- modes; (org, q) <- probes; filtered <- Seq(false, true))
+        yield request(org, q, mode, filtered)
+  }
+
+  test("request path equals the lazy search plan exactly: every dense mode, plain and filtered") {
+    import Parity._
+    assert(tieNames(0).compareTo(tieNames(1)) > 0)
     def opt(j: JValue): Option[Double] = j match {
       case JDouble(d) => Some(d)
       case JNull | JNothing => None
@@ -189,12 +214,8 @@ class QueryServiceSpec extends SparkSpec {
       }
     }
 
-    val probes = Seq("org_p" -> "ledger invoices payments", "org_p" -> "auditors quarterly archive",
-      "org_p" -> "monthly rent deposit", "org_q" -> "ledger invoices")
     var tiesSeen = 0
-    for (mode <- Seq("exact", "ann", "quantized", "ivfpq", "hnsw");
-         (org, q) <- probes; filters <- Seq("", s""","filters":$filter""")) {
-      val json = s"""{"op":"search","organization_id":"$org","query":"$q","limit":5,"dense_mode":"$mode"$filters}"""
+    for (json <- requests(small ++ big)) {
       val got = served(json)
       assert(got == planned(json), json)
       val ids = got.map(_._1)
@@ -203,8 +224,55 @@ class QueryServiceSpec extends SparkSpec {
         // the tie resolves in UTF-8 order: U+FF21 first
         assert(ids.indexWhere(_.contains(tieNames(0))) < ids.indexWhere(_.contains(tieNames(1))), json)
       }
+      if (json.contains("org_big") && !json.contains("filters")) assert(ids.nonEmpty, json)
     }
     assert(tiesSeen > 0, "no probe returned both tie documents")
+  }
+
+  /** Job starts and ends of `f`, in the order the scheduler posted
+    * them: 's' and 'e'. */
+  private def jobEvents(f: => Unit): String = {
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[Char]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        events.add('s')
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        events.add('e')
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { f; org.apache.spark.TestBus.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    events.toArray.mkString
+  }
+
+  test("a small tenant's request runs its jobs in one wave; an over-bound tenant's takes Spark's legs") {
+    import Parity._
+    // warm: the first request of a mode loads its sidecar views
+    requests(small).foreach(p.handle)
+    for (json <- requests(small)) {
+      val ev = jobEvents(p.handle(json))
+      assert(ev.nonEmpty && !ev.dropWhile(_ == 's').contains('s'), s"$json: $ev")
+      assert(ev.count(_ == 's') <= 4, s"$json: $ev")
+    }
+    // over the bound: the slice wave overflows, then Spark's legs run
+    for (json <- requests(big)) {
+      val ev = jobEvents(p.handle(json))
+      assert(ev.dropWhile(_ == 's').contains('s'), s"$json: $ev")
+    }
+  }
+
+  test("the small-tenant parity probes compile no code on their second pass") {
+    import Parity._
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val reqs = requests(small)
+    reqs.foreach(p.handle)
+    val compiles = reqs.map { json =>
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      p.handle(json)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    assert(compiles.sorted.apply(compiles.size / 2) == 0, compiles)
   }
 
   test("malformed weights are a 400, not a 500") {
