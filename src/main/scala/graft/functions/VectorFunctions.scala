@@ -391,17 +391,20 @@ object VectorFunctions {
     s
   }
 
-  /** JVM twin of Spark's `round(x, 6)` (BigDecimal HALF_UP — NOT
-    * banker's rounding, which `math.rint` would give). */
-  def round6Jvm(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  /** JVM twin of Spark's `round(x, scale)` on a double, NaN and ±Inf
-    * included: those pass through unchanged, as Spark passes them. */
+  /** JVM twin of Spark's `round(x, scale)` on a double: BigDecimal
+    * HALF_UP — NOT banker's rounding, which `math.rint` would give —
+    * and NaN and ±Inf passed through unchanged, as Spark passes them. */
   def roundJvm(x: Double, scale: Int): Double =
-    if (x.isNaN || x.isInfinite) x
-    else java.math.BigDecimal.valueOf(x)
+    if (x.isNaN || x.isInfinite) x else halfUp(x, scale)
+
+  /** [[roundJvm]] to 6 dp on a finite double; a NaN or ±Inf throws
+    * `BigDecimal.valueOf`'s `NumberFormatException`, which the PQ
+    * encode and IVF assign kernels raise where a non-finite distance
+    * occurs. */
+  def round6Jvm(x: Double): Double = halfUp(x, 6)
+
+  private def halfUp(x: Double, scale: Int): Double =
+    java.math.BigDecimal.valueOf(x)
       .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** How far above a raw minimum (below a raw maximum) a candidate can

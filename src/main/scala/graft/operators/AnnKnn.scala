@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
 
 import graft.functions.VectorFunctions
 
@@ -276,10 +278,21 @@ object AnnKnn {
                    nProbe: Int): Seq[Long] =
     ivfProbes(centroidRows(centroids), queryVec, nProbe)
 
-  /** A coarse quantizer's (cid, cvec) rows, collected. */
+  /** A coarse quantizer's (cid, cvec) rows. A driver-local frame of
+    * exactly (cid bigint, cvec array<double>) — the store's pinned
+    * quantizer is one — is read from the rows its plan holds, which
+    * plans and runs nothing; any other frame is collected. */
   def centroidRows(centroids: DataFrame): Seq[(Long, Array[Double])] =
-    centroids.select(col("cid").cast("long"), col("cvec").cast("array<double>"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+    centroids.queryExecution.logical match {
+      case l: LocalRelation if (l.output.map(a => (a.name, a.dataType)) match {
+            case Seq(("cid", LongType), ("cvec", ArrayType(DoubleType, _))) => true
+            case _ => false
+          }) =>
+        l.data.map(r => (r.getLong(0), r.getArray(1).toDoubleArray()))
+      case _ =>
+        centroids.select(col("cid").cast("long"), col("cvec").cast("array<double>"))
+          .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+    }
 
   /** [[ivfProbesJvm]] over centroid rows already on the driver. */
   def ivfProbes(centroids: Seq[(Long, Array[Double])], queryVec: Array[Double],

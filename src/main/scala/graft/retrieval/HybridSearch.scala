@@ -209,15 +209,15 @@ object HybridSearch {
         .map(r => r.get(0) -> Option(r.getString(1))).toMap
   }
 
-  /** The legs of a request: from one wave of tenant-slice reads when
-    * `slice` is given and the slice fits its bounds, else Spark's. */
+  /** The legs of a request: with an `index`, from one wave of
+    * tenant-slice reads when the slice fits [[SliceSearch]]'s bounds;
+    * else Spark's. */
   private def evaluator(chunks: DataFrame, ctx: TenantContext,
                         filters: Map[String, Filters.Pred], cfg: Config,
-                        index: Option[BM25.Index], slice: Option[SliceSearch.Local],
+                        index: Option[BM25.Index],
                         queries: Seq[LegQuery], withText: Boolean): Legs =
-    (for (l <- slice; idx <- index;
-          legs <- SliceSearch.read(chunks, ctx, filters, cfg, idx, l, queries, withText))
-      yield legs).getOrElse(new SparkLegs(chunks, ctx, filters, cfg, index))
+    index.flatMap(SliceSearch.read(chunks, ctx, filters, cfg, _, queries, withText))
+      .getOrElse(new SparkLegs(chunks, ctx, filters, cfg, index))
 
   /** Chunk-table hybrid search as one lazy plan. `chunks` needs
     * columns: id, text, organization_id (+ tenant columns), embedding.
@@ -290,7 +290,7 @@ object HybridSearch {
     * driver ([[Fusion.fuseTopKLocal]]), each method's score and rank
     * taken from its leg. Equal to `search(...).collect()` row for row.
     *
-    * With `slice` (and an `index`), a tenant slice within
+    * With an `index`, a tenant slice within
     * [[SliceSearch]]'s bounds is answered from one concurrent wave of
     * narrow reads, every leg, the fusion and the text computed on the
     * driver. Otherwise — or when the slice overflows a bound — each
@@ -304,11 +304,10 @@ object HybridSearch {
                  filters: Map[String, Filters.Pred] = Map.empty,
                  cfg: Config = Config(),
                  pages: Option[DataFrame] = None,
-                 index: Option[BM25.Index] = None,
-                 slice: Option[SliceSearch.Local] = None): Seq[Hit] = {
+                 index: Option[BM25.Index] = None): Seq[Hit] = {
     val legList = plan(query, cfg, Searched, pages)
     if (legList.isEmpty) return Nil
-    val legs = evaluator(chunks, ctx, filters, cfg, index, slice,
+    val legs = evaluator(chunks, ctx, filters, cfg, index,
       legList.map(_.query), withText = cfg.detail)
     val rows = legs.rows(legList.map(_.query))
     val fused = fuseLegs(legList, rows, cfg.limit, cfg.rrfK)
@@ -456,9 +455,9 @@ object HybridSearch {
     * together, and the fusion, the precision merge, the failure
     * signals and the retry merge are driver code over at most 2·limit
     * rows. With Spark's legs, each evaluation is one concurrent wave,
-    * so a retry (empty base only) is one more; a tenant slice
-    * ([[searchHits]]' `slice`) is read once for the base, the lookups
-    * and the retries alike. The result is a local DataFrame (id,
+    * so a retry (empty base only) is one more; a tenant slice (with an
+    * `index`, as in [[searchHits]]) is read once for the base, the
+    * lookups and the retries alike. The result is a local DataFrame (id,
     * rrf_score, query_type) — no cached base, no stats job, no window
     * merge. */
   def enhancedSearch(chunks: DataFrame, query: String, ctx: TenantContext,
@@ -474,12 +473,11 @@ object HybridSearch {
   }
 
   /** [[enhancedSearch]]'s ranked (id, rrf_score) rows, without the
-    * constant query_type column. `slice` as in [[searchHits]]. */
+    * constant query_type column. */
   def enhancedHits(chunks: DataFrame, query: String, ctx: TenantContext,
                    filters: Map[String, Filters.Pred] = Map.empty,
                    cfg: Config = Config(),
-                   index: Option[BM25.Index] = None,
-                   slice: Option[SliceSearch.Local] = None): Seq[(Any, Double)] = {
+                   index: Option[BM25.Index] = None): Seq[(Any, Double)] = {
     val (expanded, _) = Acronyms.expandQuery(query)
     // base search at limit×2 (`enhanced_hybrid_search.py:277`), its
     // (id, rrf_score) only
@@ -496,7 +494,7 @@ object HybridSearch {
     // a pure BM25 retry and a filterless re-search, both at k=5
     val keyword = Bm25Query(TextFunctions.tokenizeJvm(query), 5, Keyword)
     val expand = plan(query, cfg.copy(limit = 5), Expanded, None)
-    val legs = evaluator(chunks, ctx, filters, cfg, index, slice,
+    val legs = evaluator(chunks, ctx, filters, cfg, index,
       base.map(_.query) ++ precision ++ (keyword +: expand.map(_.query)), withText = false)
 
     val collected = legs.rows(base.map(_.query) ++ precision)

@@ -40,15 +40,21 @@ import graft.sources.TableStore
   * chunk id only prunes the tables not split by tenant; each leg is
   * still intersected with the slice's scoped ids. Bounds are decided
   * from observed input size: every read carries a limit derived from
-  * [[MaxSliceRows]], and a read that exceeds its bound, a slice id
-  * without the prefix, or a request shape the driver legs do not cover
-  * (ColPali pages, the in-memory IVF mode, more than [[MaxTerms]]
-  * terms) sends the request to Spark's legs, the path that serves a
-  * tenant of any size. */
+  * [[MaxSliceRows]] on its total rows, and a read that exceeds its
+  * bound, a slice id without the prefix, or a request shape the driver
+  * legs do not cover (ColPali pages, the in-memory IVF mode, more than
+  * [[MaxTerms]] terms) sends the request to Spark's legs, the path that
+  * serves a tenant of any size. A tenant scope once seen over
+  * [[MaxSliceRows]] goes straight to Spark's legs while its chunk frame
+  * lives.
+  *
+  * The bounds are set by judgement, not from a measured crossover
+  * between the two paths: the benchmark's tenants all lie far below
+  * them (its largest holds about 320 chunk rows). */
 object SliceSearch {
 
   /** A tenant scope of more chunk rows (all levels) than this is read
-    * by Spark's legs. The benchmark's largest tenant holds about 320. */
+    * by Spark's legs. */
   val MaxSliceRows = 2048
 
   /** Most distinct terms a request's BM25 legs may score on the driver. */
@@ -58,10 +64,23 @@ object SliceSearch {
     * a few terms per chunk of a full slice. */
   private val MaxPostingsRows = MaxSliceRows * 8
 
-  /** What the store already holds on the driver: the IVF coarse
-    * centroids' rows. Without them the ivfpq read collects the dense
-    * mode's centroid frame first. */
-  final case class Local(centroids: Option[Seq[(Long, Array[Double])]] = None)
+  /** Tenant scopes seen over [[MaxSliceRows]], per chunk frame. A
+    * serving store's chunk frame reads one generation's immutable
+    * files, so a scope once over the bound stays over it while the
+    * frame lives, and its later requests skip the wave. Keyed weakly
+    * by the frame itself (a Dataset compares by identity), so a
+    * replaced store view takes its entries with it. An entry only
+    * sends a request to Spark's legs, which answer any scope, so it can
+    * cost time but never change an answer. */
+  private val overBound = new java.util.WeakHashMap[DataFrame, Set[TenantContext]]()
+
+  private def knownOver(chunks: DataFrame, ctx: TenantContext): Boolean =
+    overBound.synchronized { Option(overBound.get(chunks)).exists(_(ctx)) }
+
+  private def markOver(chunks: DataFrame, ctx: TenantContext): Unit =
+    overBound.synchronized {
+      overBound.put(chunks, Option(overBound.get(chunks)).getOrElse(Set.empty[TenantContext]) + ctx)
+    }
 
   /** One chunk row of the tenant scope: at the searched level, passing
     * the request filters, its text (read only for searched rows) and
@@ -77,15 +96,16 @@ object SliceSearch {
     * driver legs. `withText` reads the text of the searched rows. */
   private[retrieval] def read(chunks: DataFrame, ctx: TenantContext,
                               filters: Map[String, Filters.Pred], cfg: Config,
-                              index: BM25.Index, local: Local, queries: Seq[LegQuery],
+                              index: BM25.Index, queries: Seq[LegQuery],
                               withText: Boolean): Option[Legs] = {
     val terms = queries.collect { case q: Bm25Query => q.tokens }.flatten.distinct
     val qvecs = queries.collect { case q: DenseQuery => q.qvec }
       .foldLeft(Seq.empty[Array[Double]])((vs, v) =>
         if (vs.exists(_.sameElements(v))) vs else vs :+ v)
-    val dense = if (qvecs.isEmpty) Some(NoDense) else denseSide(cfg.dense, local)
+    val dense = if (qvecs.isEmpty) Some(NoDense) else denseSide(cfg.dense)
     if (chunks.schema("id").dataType != StringType || terms.size > MaxTerms ||
-        queries.exists(_.isInstanceOf[ColpaliQuery]) || dense.isEmpty) return None
+        queries.exists(_.isInstanceOf[ColpaliQuery]) || dense.isEmpty ||
+        knownOver(chunks, ctx)) return None
 
     val prefix = s"${ctx.organizationId}::"
     val own = col("id").startsWith(prefix)
@@ -106,6 +126,7 @@ object SliceSearch {
     val denseRead = dense.get.read(qvecs, own)
 
     val got = wave(sliceRead +: (termReads ++ denseRead))
+    if (got.head.isEmpty) markOver(chunks, ctx)
     val (posts, idfs, stats) =
       if (terms.isEmpty) (Some(Nil), Some(Nil), Some(Nil)) else (got(1), got(2), got(3))
     for {
@@ -128,18 +149,21 @@ object SliceSearch {
       avgdl, dense.get, cands)
   }
 
-  /** Every read's rows in ONE job: the reads' row RDDs unioned, a task
-    * per input partition, each keeping at most `bound + 1` rows — so
-    * the reads run as one wave with no dependence on each other, and
-    * no read brings more than `bound + 1` rows per partition to the
-    * driver. None for a read holding more than its bound. (A per-read
+  /** Every read's rows in ONE job: each read's input partitions
+    * coalesced into one task that scans them in order and stops after
+    * `bound + 1` rows, the reads' tasks unioned — so the reads run as
+    * one wave with no dependence on each other, and no read brings more
+    * than `bound + 1` rows to the driver, however many partitions it
+    * spans. None for a read holding more than its bound. (A per-read
     * `limit(n).collect()` scans a multi-partition read in growing
     * batches, one job per batch, and a `LocalLimit` inside generated
-    * code names its counter uniquely, so it compiles for every plan.) */
-  private def wave(reads: Seq[(DataFrame, Int)]): Seq[Option[Seq[Row]]] = {
+    * code names its counter uniquely, so it compiles for every plan.)
+    * A coalesced scan keeps each input partition's index, so
+    * `spark_partition_id()` reads as in an uncoalesced scan. */
+  private[retrieval] def wave(reads: Seq[(DataFrame, Int)]): Seq[Option[Seq[Row]]] = {
     val sc = reads.head._1.sparkSession.sparkContext
     val rdds = reads.map { case (df, n) =>
-      df.queryExecution.toRdd.mapPartitions(_.take(n + 1).map(_.copy())) }
+      df.queryExecution.toRdd.coalesce(1).mapPartitions(_.take(n + 1).map(_.copy())) }
     val parts = sc.runJob(sc.union(rdds), (it: Iterator[InternalRow]) => it.toArray)
     // a union's partitions are its inputs' partitions, in input order
     val ends = rdds.map(_.getNumPartitions).scanLeft(0)(_ + _)
@@ -201,8 +225,10 @@ object SliceSearch {
   /** The first `k` of `rows` in `ORDER BY score DESC, id` order, ranked. */
   private def top(rows: Seq[(Any, Option[Double])], k: Int): Seq[LegRow] = ranked(rows).take(k)
 
+  private def round6(x: Double): Double = VectorFunctions.roundJvm(x, 6)
+
   private def score6(v: Array[Double], q: Array[Double]): Option[Double] =
-    Some(VectorFunctions.round6Jvm(VectorFunctions.dotJvm(v, q)))
+    Some(round6(VectorFunctions.dotJvm(v, q)))
 
   /** A dense mode on the driver: the candidate read it adds to the
     * wave with its bound (none for exact), and the scoring of the rows
@@ -219,11 +245,11 @@ object SliceSearch {
               embs: Map[String, Array[Double]], rows: Seq[Row]): Seq[(Any, Option[Double])] = Nil
   }
 
-  private def denseSide(mode: DenseMode, local: Local): Option[DenseSide] = mode match {
+  private def denseSide(mode: DenseMode): Option[DenseSide] = mode match {
     case DenseMode.Exact => Some(ExactSide)
     case m: DenseMode.AnnLsh => Some(new AnnSide(m))
     case m: DenseMode.Quantized => Some(new QuantizedSide(m))
-    case m: DenseMode.IvfPq => Some(new PqSide(m, local.centroids))
+    case m: DenseMode.IvfPq => Some(new PqSide(m))
     case m: DenseMode.Hnsw => Some(new HnswSide(m))
     case _: DenseMode.AnnIvf => None
   }
@@ -272,17 +298,17 @@ object SliceSearch {
       val (qcodes, qscale) = Quantize.quantizeJvm(qvec)
       val scope = chunks.map(_.id).toSet
       rows.filter(r => scope(r.getString(0))).map(r => r.getString(0) ->
-        Option.when(!r.isNullAt(1) && !r.isNullAt(2))(VectorFunctions.round6Jvm(
+        Option.when(!r.isNullAt(1) && !r.isNullAt(2))(round6(
           Quantize.dotI8Jvm(r.getSeq[Double](1).toArray, r.getDouble(2), qcodes, qscale))))
     }
   }
 
   /** `PqKnn.adcTopK` over the probed lists, then `refineTopK`: the ADC
     * top `k·refine` rescored exactly against the slice's embeddings
-    * (the refine's `raw` side is the chunk embedding column). */
-  private final class PqSide(m: DenseMode.IvfPq,
-                             centroids: Option[Seq[(Long, Array[Double])]]) extends DenseSide {
-    private lazy val cents = centroids.getOrElse(AnnKnn.centroidRows(m.centroids))
+    * (the refine's `raw` side is the chunk embedding column). The
+    * probes rank the mode's centroid rows on the driver. */
+  private final class PqSide(m: DenseMode.IvfPq) extends DenseSide {
+    private lazy val cents = AnnKnn.centroidRows(m.centroids)
     private def probes(q: Array[Double]) = AnnKnn.ivfProbes(cents, q, m.nProbe)
 
     override def read(qvecs: Seq[Array[Double]], own: Column): Option[(DataFrame, Int)] =
@@ -296,7 +322,7 @@ object SliceSearch {
       val lut = Pq.lutJvm(qvec, m.cb.flat, m.cb.m, m.cb.sub, m.cb.k)
       val adc = rows
         .filter(r => probed(r.getAs[Number](0).longValue()) && scope(r.getString(1)))
-        .map(r => (r.getString(1): Any) -> Some(VectorFunctions.round6Jvm(Pq.adc(
+        .map(r => (r.getString(1): Any) -> Some(round6(Pq.adc(
           ArrayData.toArrayData(r.getSeq[Int](2).toArray), lut, m.cb.k))))
       top(adc, k * m.refine).flatMap(r =>
         embs.get(r.id.toString).map(e => r.id -> score6(e, qvec)))

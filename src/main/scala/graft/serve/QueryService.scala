@@ -12,7 +12,7 @@ import graft.ingest.Pipeline.IndexBundle
 import graft.functions.{Embedder, FeatureHashEmbedder}
 import graft.model.{Filters, TenantContext}
 import graft.operators.{AnnKnn, BM25}
-import graft.retrieval.{HybridSearch, SliceSearch}
+import graft.retrieval.HybridSearch
 import graft.sources.{SegmentedStore, TableStore}
 import graft.sources.SegmentedStore.Manifest
 
@@ -35,12 +35,13 @@ import graft.sources.SegmentedStore.Manifest
   * terms' blocks. Files grow with data, not with tenants × hash keys:
   * a small tenant is one file per table. A small tenant's search reads
   * its slice of those tables in one wave of narrow jobs and computes
-  * every leg and the fusion on the driver ([[SliceSearch]]); a larger
-  * one collects each index's top-k leg concurrently and fuses them on
-  * the driver ([[HybridSearch.searchHits]]). Neither runs the lazy
-  * fused plan's chain of dependent stages. The in-memory cache is cleared after every request (same
-  * hygiene as Bench) so nothing depends on cached state surviving
-  * between requests.
+  * every leg and the fusion on the driver
+  * ([[graft.retrieval.SliceSearch]]); a larger one collects each
+  * index's top-k leg concurrently and fuses them on the driver
+  * ([[HybridSearch.searchHits]]). Neither runs the lazy fused plan's
+  * chain of dependent stages. The in-memory cache is cleared after
+  * every request (same hygiene as Bench) so nothing depends on cached
+  * state surviving between requests.
   */
 class QueryService(
     val spark: SparkSession,
@@ -725,21 +726,19 @@ class QueryService(
     }
     val cfg = HybridSearch.Config(limit = limit, embedder = embedder,
       weights = weights, dense = dense)
-    // the driver copy of the ivfpq quantizer, for the tenant-slice path
-    val slice = SliceSearch.Local(
-      if (mode == "ivfpq") SegmentedStore.pqCentroidRows(spark, storeRoot, m) else None)
     QueryService.SearchRequest(b, ctx, query, filters, cfg,
-      enhanced = (req \ "enhanced").extractOpt[Boolean].getOrElse(false), slice)
+      enhanced = (req \ "enhanced").extractOpt[Boolean].getOrElse(false))
   }
 
   /** `/search` (`api/main.py:376-453`): hybrid search with tenant
     * isolation; optional weights / filters / limit / enhanced flag.
     * Answered on the request path ([[HybridSearch.searchHits]],
     * [[HybridSearch.enhancedHits]]) under this request's read lock: a
-    * tenant within [[SliceSearch]]'s bounds from one wave of narrow
-    * slice reads, every leg and the fusion on the driver; a larger one
-    * from the per-index top-k legs, collected concurrently and fused on
-    * the driver. The response renders from those rows. */
+    * tenant within [[graft.retrieval.SliceSearch]]'s bounds from one
+    * wave of narrow slice reads, every leg and the fusion on the
+    * driver; a larger one from the per-index top-k legs, collected
+    * concurrently and fused on the driver. The response renders from
+    * those rows. */
   private def search(req: JValue): JValue = {
     val r = searchRequest(req)
     def num(v: Option[Double]): JValue = v.map(JDouble(_)).getOrElse(JNull)
@@ -763,11 +762,11 @@ class QueryService(
     val rows =
       if (r.enhanced)
         HybridSearch.enhancedHits(r.bundle.chunks, r.query, r.ctx, r.filters, r.cfg,
-          index = Some(r.bundle.bm25Index), slice = Some(r.slice))
+          index = Some(r.bundle.bm25Index))
           .map { case (id, sc) => row(id, sc, None, Map.empty) }
       else
         HybridSearch.searchHits(r.bundle.chunks, r.query, r.ctx, r.filters, r.cfg,
-          index = Some(r.bundle.bm25Index), slice = Some(r.slice))
+          index = Some(r.bundle.bm25Index))
           .map(h => row(h.id, h.rrfScore, h.text, h.detail))
     JObject(
       "query" -> JString(r.query),
@@ -916,7 +915,7 @@ object QueryService {
   private final case class SearchRequest(
       bundle: IndexBundle, ctx: TenantContext, query: String,
       filters: Map[String, Filters.Pred], cfg: HybridSearch.Config,
-      enhanced: Boolean, slice: SliceSearch.Local)
+      enhanced: Boolean)
 
   /** Upper bound on how long a mutation request waits for the
     * cross-process store lease before failing with a retryable 503.

@@ -457,15 +457,10 @@ object SegmentedStore {
   private final case class QuantizerKey(session: SparkSession, base: String,
                                         generation: Long)
 
-  /** A base generation's pinned quantizer: the coarse centroids as a
-    * driver-local frame and as the collected rows behind it, and the
-    * PQ codebook. */
-  private final case class PinnedPq(cents: DataFrame, centRows: Seq[(Long, Array[Double])],
-                                    cb: PqKnn.Codebook)
-
   private val quantizerMemo =
-    new java.util.LinkedHashMap[QuantizerKey, PinnedPq](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[QuantizerKey, PinnedPq]): Boolean =
+    new java.util.LinkedHashMap[QuantizerKey, (DataFrame, PqKnn.Codebook)](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[QuantizerKey, (DataFrame, PqKnn.Codebook)]): Boolean =
         size() > 8
     }
 
@@ -479,33 +474,17 @@ object SegmentedStore {
   }
 
   private def pinnedQuantizer(spark: SparkSession,
-                              base: String): (DataFrame, PqKnn.Codebook) = {
-    val q = pinnedPq(spark, base)
-    (q.cents, q.cb)
-  }
-
-  private def pinnedPq(spark: SparkSession, base: String): PinnedPq =
+                              base: String): (DataFrame, PqKnn.Codebook) =
     quantizerMemo.synchronized {
       val key = QuantizerKey(spark, base, baseGeneration(spark, base))
       Option(quantizerMemo.get(key)).getOrElse {
         val disk = spark.read.parquet(s"$base/pq_centroids")
         val cents = spark.createDataFrame(disk.collect().toSeq.asJava, disk.schema)
-        val v = PinnedPq(cents, AnnKnn.centroidRows(cents),
-          TableStore.loadPqCodebook(spark, base))
+        val v = (cents, TableStore.loadPqCodebook(spark, base))
         quantizerMemo.put(key, v)
         v
       }
     }
-
-  /** The IVF coarse centroids [[pqView]] serves, as driver rows — the
-    * same memo entry, so ranking them for a query runs no job and
-    * plans no frame. None without a PQ sidecar. */
-  def pqCentroidRows(spark: SparkSession, root: String,
-                     m: Manifest): Option[Seq[(Long, Array[Double])]] = {
-    val base = s"$root/${m.base}"
-    if (!exists(spark, s"$base/pq_centroids")) None
-    else Some(pinnedPq(spark, base).centRows)
-  }
 
   /** Remove crash litter at a mutation's TARGET dirs before it writes.
     * Every mutation path (a segment append, a fold, the full-snapshot

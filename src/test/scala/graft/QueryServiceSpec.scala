@@ -230,12 +230,15 @@ class QueryServiceSpec extends SparkSpec {
   }
 
   /** Job starts and ends of `f`, in the order the scheduler posted
-    * them: 's' and 'e'. */
-  private def jobEvents(f: => Unit): String = {
+    * them: 's' and 'e'; and how many of the jobs were slice waves. */
+  private def jobEvents(f: => Unit): (String, Int) = {
     val events = new java.util.concurrent.ConcurrentLinkedQueue[Char]()
+    val waves = new java.util.concurrent.atomic.AtomicInteger()
     val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         events.add('s')
+        if (e.stageInfos.maxBy(_.stageId).name.contains("SliceSearch")) waves.incrementAndGet()
+      }
       override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
         events.add('e')
     }
@@ -243,7 +246,7 @@ class QueryServiceSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(l)
     try { f; org.apache.spark.TestBus.drain(spark.sparkContext) }
     finally spark.sparkContext.removeSparkListener(l)
-    events.toArray.mkString
+    (events.toArray.mkString, waves.get)
   }
 
   test("a small tenant's request runs its jobs in one wave; an over-bound tenant's takes Spark's legs") {
@@ -251,15 +254,18 @@ class QueryServiceSpec extends SparkSpec {
     // warm: the first request of a mode loads its sidecar views
     requests(small).foreach(p.handle)
     for (json <- requests(small)) {
-      val ev = jobEvents(p.handle(json))
+      val (ev, waves) = jobEvents(p.handle(json))
       assert(ev.nonEmpty && !ev.dropWhile(_ == 's').contains('s'), s"$json: $ev")
-      assert(ev.count(_ == 's') <= 4, s"$json: $ev")
+      assert(ev.count(_ == 's') <= 4 && waves == 1, s"$json: $ev, $waves waves")
     }
-    // over the bound: the slice wave overflows, then Spark's legs run
-    for (json <- requests(big)) {
-      val ev = jobEvents(p.handle(json))
+    // over the bound: Spark's legs run; the first request's slice wave
+    // overflows, and the scope, now known over the bound, runs none again
+    val bigWaves = for (json <- requests(big)) yield {
+      val (ev, waves) = jobEvents(p.handle(json))
       assert(ev.dropWhile(_ == 's').contains('s'), s"$json: $ev")
+      waves
     }
+    assert(bigWaves.sum <= 1, bigWaves)
   }
 
   test("the small-tenant parity probes compile no code on their second pass") {
