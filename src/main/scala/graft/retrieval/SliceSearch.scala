@@ -225,6 +225,7 @@ object SliceSearch {
   /** The first `k` of `rows` in `ORDER BY score DESC, id` order, ranked. */
   private def top(rows: Seq[(Any, Option[Double])], k: Int): Seq[LegRow] = ranked(rows).take(k)
 
+  /** Spark's `round(x, 6)`, NaN and ±Inf passed through as Spark does. */
   private def round6(x: Double): Double = VectorFunctions.roundJvm(x, 6)
 
   private def score6(v: Array[Double], q: Array[Double]): Option[Double] =
